@@ -47,7 +47,7 @@ def _cmd_ingest(args: argparse.Namespace) -> int:
         ensure_demo_tiles(args.tif_dir, coords)
     metrics: dict = {}
     t0 = time.perf_counter()
-    ingest_tiles(
+    tiles = ingest_tiles(
         spark,
         tif_dir,
         args.parquet_dir,
@@ -56,10 +56,10 @@ def _cmd_ingest(args: argparse.Namespace) -> int:
         on_corrupt=args.on_corrupt,
     )
     elapsed = time.perf_counter() - t0
-    rows = metrics.get("rows_written", "?")
     print(
         f"ingested set={args.set} from {tif_dir} -> {args.parquet_dir} "
-        f"rows={rows} in {elapsed:.1f}s",
+        f"rows={metrics['rows_written']} tiles={len(tiles)} "
+        f"skipped={metrics['skipped_tiles']} in {elapsed:.1f}s",
         file=sys.stderr,
     )
     return 0

@@ -8,15 +8,16 @@ per tile (R6, ``:193-225``).
 
 Spark mapping (SURVEY §1.3/§3.4): the *work list* is metadata (≤ 64 800
 one-degree tiles for the whole world — kilobytes, never data-plane), so
-region → key enumeration happens in plain Python, implementing the
-reference's own ``todo(mb)`` (``src/main.rs:299``: generate keys from the
-set instead of list-then-filter). The data plane is a ``binaryFile`` scan
-(one Spark task per tile, no shuffle anywhere in the pipeline) fused with
-a ``mapInPandas`` decode that yields bounded Arrow batches, then a
-partitioned Parquet sink. At 100 TB (~31 000 real tiles × 13M rows) this
-is a single embarrassingly-parallel stage: scan → decode → write, with
-partition pruning on ``tile_lat``/``tile_lon`` replacing the reference's
-filename-encoded partitioning.
+it is built on the driver by :func:`tile_paths`: one listing of the tile
+directory, key parse, region predicate and skip set applied in plain
+Python, like the reference filtering keys while it lists the bucket
+(``src/main.rs:298,316-321``). The data plane is a ``binaryFile`` scan of
+exactly those paths (one Spark task per tile, no shuffle anywhere in the
+pipeline) fused with a ``mapInPandas`` decode that yields bounded Arrow
+batches, then a partitioned Parquet sink. At 100 TB (~31 000 real tiles
+× 13M rows) this is a single embarrassingly-parallel stage: scan →
+decode → write, with partition pruning on ``tile_lat``/``tile_lon``
+replacing the reference's filename-encoded partitioning.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from __future__ import annotations
 import os
 import re
 from typing import Iterable, Iterator
+from urllib.parse import unquote
 
 import numpy as np
 
@@ -45,6 +47,9 @@ from aw3d30_parquet_spark.sources.tiff import decode_geotiff, flatten_raster
 #: (``src/main.rs:131``).
 TILE_KEY_RE = re.compile(r"ALPSMLC30_(?P<y>[NS])(?P<lat>\d{3})(?P<x>[EW])(?P<lon>\d{3})_DSM")
 _TILE_STEM_RE = re.compile(r"^ALPSMLC30_(?P<y>[NS])(?P<lat>\d{3})(?P<x>[EW])(?P<lon>\d{3})_DSM$")
+
+#: File-name glob every tile scan applies, so non-tile files never load.
+TILE_GLOB = "ALPSMLC30_*_DSM.tif"
 
 #: Output schema of the flatten — the reference's fixed REQUIRED Parquet
 #: group schema (``src/main.rs:273-293``), plus the two tile partition
@@ -109,21 +114,15 @@ def in_region(set_name: str, lat: int, lon: int) -> bool:
 
 
 def tiles_for_set(set_name: str) -> list[tuple[int, int]]:
-    """Region → enumerated tile coordinates (implements the reference's
-    ``todo(mb)`` at ``src/main.rs:299``: generate the work list from the
-    set definition instead of list-then-filter).
+    """Region → every tile coordinate of its 1°×1° grid.
 
-    ``world`` enumerates the full 1°×1° grid (64 800 keys) — the actual
-    AW3D30 catalog is land-only (~24 000 objects); fetch-time skip handles
-    the gaps, like the reference's per-object error path.
+    ``world`` enumerates the full grid (64 800 keys), while the actual
+    AW3D30 catalog is land-only (~24 000 objects) — which is why the
+    ingest's work list is the listed tiles (:func:`tile_paths`), not
+    this enumeration.
     """
     (lat0, lat1), (lon0, lon1) = REGION_SETS[set_name]
     return [(lat, lon) for lat in range(lat0, lat1 + 1) for lon in range(lon0, lon1 + 1)]
-
-
-def keys_for_set(set_name: str, prefix: str = "AW3D30/AW3D30_global/") -> list[str]:
-    """Region → full object keys (``{prefix}{stem}.tif``)."""
-    return [f"{prefix}{tile_key(la, lo)}.tif" for la, lo in tiles_for_set(set_name)]
 
 
 def _decode_partition(batches: Iterable, chunk_rows: int, on_corrupt: str) -> Iterator:
@@ -239,9 +238,9 @@ def _key_coord_cols() -> tuple:
     from the file path — Java-regex variant of _TILE_STEM_RE (positional
     groups; Java lacks ``(?P<name>)``), ANCHORED to the path's basename:
     matching anywhere in the full path would let a tile-key-shaped
-    directory component hijack the coordinates the region pruning and
-    exclude filters key on (and disagree with the Python kernel, which
-    parses the basename)."""
+    directory component hijack the coordinates the streaming region
+    filter and the halo join key on (and disagree with the Python
+    kernel, which parses the basename)."""
     jpat = r"^ALPSMLC30_([NS])(\d{3})([EW])(\d{3})_DSM\.tif$"
     fname = F.element_at(F.split(F.col("path"), "/"), -1)
     sign_lat = F.when(F.regexp_extract(fname, jpat, 1) == "S", -1).otherwise(1)
@@ -252,13 +251,86 @@ def _key_coord_cols() -> tuple:
 
 
 def _region_pruned_files(files: DataFrame, set_name: str) -> DataFrame:
-    """Apply key-parse + region predicate on file METADATA (before any
-    tile byte is decoded) — the Spark analogue of the reference
-    filtering during the S3 listing (``src/main.rs:316-321``)."""
+    """Key-parse + region predicate as a plan ``Filter`` over a
+    ``binaryFile`` source — for the streaming source only, which has no
+    up-front listing to prune (batch readers prune at the listing, see
+    :func:`tile_paths`). The filter runs after the scan has read each
+    file's ``content``, so every out-of-region file in a micro-batch is
+    still fetched."""
     key_lat, key_lon, valid = _key_coord_cols()
     (lat0, lat1), (lon0, lon1) = REGION_SETS[set_name]
     return files.filter(
         valid & key_lat.between(lat0, lat1) & key_lon.between(lon0, lon1)
+    )
+
+
+def _binary_files(spark: SparkSession):
+    """The one ``binaryFile`` reader every batch tile scan and listing
+    goes through."""
+    return spark.read.format("binaryFile").option("pathGlobFilter", TILE_GLOB)
+
+
+def tile_paths(
+    spark: SparkSession,
+    tif_dir: str,
+    set_name: str = "world",
+    exclude: Iterable[tuple[int, int]] = (),
+) -> list[str]:
+    """The batch work list: paths under ``tif_dir`` whose key parses, lies
+    in ``set_name`` and is not in ``exclude`` — built from metadata alone.
+
+    ``tif_dir`` is listed once through the same file index the scan uses
+    (``DataFrame.inputFiles()``, which runs no Spark job); the key parse,
+    region predicate and skip set then run on the driver, so no byte of
+    an out-of-region or already-ingested tile is ever fetched — the
+    reference's filter-while-listing (``src/main.rs:298,316-321``) and
+    skip-if-exists (``:144-146,171``). ``inputFiles()`` returns
+    percent-encoded URIs; they are decoded here so that ``load()``
+    accepts them back. Sorted, so the scan's task order is stable.
+    """
+    skip = set(exclude)
+    paths = []
+    for uri in _binary_files(spark).load(tif_dir).inputFiles():
+        path = unquote(uri)
+        coord = parse_tile_key(path)
+        if coord is not None and in_region(set_name, *coord) and coord not in skip:
+            paths.append(path)
+    return sorted(paths)
+
+
+def _tile_files(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """``binaryFile`` scan of explicit tile paths → ``(path, content)``.
+
+    Loading more than ``spark.sql.sources.parallelPartitionDiscovery.
+    threshold`` (32) paths makes Spark resolve them with a parallel
+    listing job before the scan; below it the resolution is driver-side.
+    """
+    from aw3d30_parquet_spark.session import ship_package
+
+    ship_package(spark)
+    return _binary_files(spark).load(paths).select("path", "content")
+
+
+def check_on_corrupt(on_corrupt: str) -> None:
+    """Reject an ``on_corrupt`` policy other than 'fail' or 'skip'."""
+    if on_corrupt not in ("fail", "skip"):
+        raise ValueError(f"on_corrupt must be 'fail' or 'skip', got {on_corrupt!r}")
+
+
+def decode_tiles(
+    spark: SparkSession,
+    paths: list[str],
+    chunk_rows: int = 512_000,
+    on_corrupt: str = "fail",
+) -> DataFrame:
+    """Explicit tile paths (from :func:`tile_paths`) → point DataFrame:
+    ``binaryFile`` scan fused with the ``mapInPandas`` decode. No
+    shuffle; the scan packs whole tiles into tasks by file size and
+    never splits one."""
+    check_on_corrupt(on_corrupt)
+    return _tile_files(spark, paths).mapInPandas(
+        lambda it: _decode_partition(it, chunk_rows, on_corrupt),
+        schema=POINT_SCHEMA,
     )
 
 
@@ -270,19 +342,11 @@ def read_tile_gradients(
 ) -> DataFrame:
     """Tile scan → per-cell elevation gradient DataFrame (slope layer).
 
-    Same plan shape as :func:`read_tiles` — binaryFile scan with
-    file-level region pruning fused with a mapInPandas kernel, one task
-    per tile, zero Exchanges."""
-    from aw3d30_parquet_spark.session import ship_package
-
-    ship_package(spark)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "ALPSMLC30_*_DSM.tif")
-        .load(tif_dir)
-        .select("path", "content")
-    )
-    return _region_pruned_files(files, set_name).mapInPandas(
+    Same plan shape as :func:`read_tiles` — a binaryFile scan of the
+    region's listed tiles fused with a mapInPandas kernel, one task per
+    tile, zero Exchanges."""
+    files = _tile_files(spark, tile_paths(spark, tif_dir, set_name))
+    return files.mapInPandas(
         lambda it: _gradient_partition(it, chunk_rows),
         schema=GRADIENT_SCHEMA,
     )
@@ -461,16 +525,7 @@ def read_tile_gradients_seamless(
     broadcast-sized — or bucket both sides by tile key). Decoding twice
     trades ~2× decode CPU for zero raster shuffle; at AW3D30 scale the
     decode is minutes, the shuffle would be the job."""
-    from aw3d30_parquet_spark.session import ship_package
-
-    ship_package(spark)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "ALPSMLC30_*_DSM.tif")
-        .load(tif_dir)
-        .select("path", "content")
-    )
-    files = _region_pruned_files(files, set_name)
+    files = _tile_files(spark, tile_paths(spark, tif_dir, set_name))
     halo_rel = files.mapInPandas(
         _halo_partition,
         schema="dla int, dlo int, side string, vals array<int>",
@@ -508,39 +563,15 @@ def read_tiles(
     tif_dir: str,
     set_name: str = "world",
     chunk_rows: int = 512_000,
-    exclude_tiles: Iterable[tuple[int, int]] = (),
     on_corrupt: str = "fail",
 ) -> DataFrame:
     """Scan a directory of ``ALPSMLC30_*.tif`` tiles → point DataFrame.
 
-    Plan shape: ``binaryFile`` scan (with ``pathGlobFilter`` so non-tile
-    files never load) → *file-level* region pruning on the parsed key —
-    the Spark analogue of the reference applying R2+R3 during the S3
-    listing (``src/main.rs:316-321``), before any byte of raster data is
-    read — → fused ``mapInPandas`` decode. No shuffle; one task per tile.
+    Region pruning happens at the listing (:func:`tile_paths`: R2+R3
+    applied while listing, like the reference, ``src/main.rs:316-321``),
+    so the ``binaryFile`` scan reads only in-region tiles; it is fused
+    with the ``mapInPandas`` decode (:func:`decode_tiles`).
     """
-    from aw3d30_parquet_spark.session import ship_package
-
-    ship_package(spark)
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "ALPSMLC30_*_DSM.tif")
-        .load(tif_dir)
-        .select("path", "content")
-    )
-    files = _region_pruned_files(files, set_name)
-    # Skip-if-exists subtraction, still at the file level (before any
-    # raster byte is decoded) — the reference's idempotency check
-    # (src/main.rs:144-146,171) lifted into the scan's metadata filter.
-    exclude = {la * 1000 + lo for la, lo in exclude_tiles}
-    if exclude:
-        key_lat, key_lon, _valid = _key_coord_cols()
-        files = files.filter(
-            ~(key_lat.cast("long") * 1000 + key_lon).isin(sorted(exclude))
-        )
-    if on_corrupt not in ("fail", "skip"):
-        raise ValueError(f"on_corrupt must be 'fail' or 'skip', got {on_corrupt!r}")
-    return files.mapInPandas(
-        lambda it: _decode_partition(it, chunk_rows, on_corrupt),
-        schema=POINT_SCHEMA,
+    return decode_tiles(
+        spark, tile_paths(spark, tif_dir, set_name), chunk_rows, on_corrupt
     )

@@ -3,12 +3,15 @@
 The reference lists and fetches tiles straight from an S3 bucket
 (listing ``src/main.rs:265-331``, GetObject ``src/main.rs:136-161``).
 The Spark-first equivalent needs no bespoke client at all: the
-``binaryFile`` scan in :func:`aw3d30_parquet_spark.sources.geotiff.read_tiles`
+``binaryFile`` source behind :func:`aw3d30_parquet_spark.sources.geotiff.read_tiles`
 speaks every Hadoop filesystem, so pointing it at
-``s3a://raster-bucket/AW3D30/AW3D30_global/`` performs the LIST and the
-ranged GETs inside the scan tasks — parallel across executors, with the
-same pathGlobFilter + key-regex region pruning applied to the object
-listing before any tile byte is fetched.
+``s3a://raster-bucket/AW3D30/AW3D30_global/`` works unchanged. Batch
+readers LIST the prefix once on the driver and prune that listing by
+pathGlobFilter, key regex and region (and, for ingest, by the tiles
+already written); the scan tasks then GET only the remaining objects,
+parallel across executors. The streaming ingest has no up-front
+listing: it filters by region in the plan, per micro-batch, so it still
+fetches out-of-region objects that land under the prefix.
 
 What this module adds is the configuration surface:
 

@@ -8,12 +8,17 @@ pipeline only does new work.
 Spark-first equivalent: Hive-style ``partitionBy(tile_lat, tile_lon)``
 layout (so every downstream query gets partition pruning on tile
 coordinates for free — strictly better than coordinates encoded in file
-names), and idempotency at the *work-list* level: already-ingested tile
-partitions are subtracted from the pending tile set before any raster
-byte is read. The subtraction runs on metadata (≤ 64 800 tile keys for
-the whole world — kilobytes), exactly like the reference's skip check
-runs on local paths, so doing it driver-side costs nothing at 100 TB;
-the data plane stays a pure scan→decode→write stage with no shuffle.
+names), and idempotency at the *work-list* level: the batch ingest lists
+the tile directory once, and the region predicate and the
+already-ingested tile partitions prune that listing on the driver
+(:func:`~aw3d30_parquet_spark.sources.geotiff.tile_paths`), so only the
+pending tiles are ever fetched and a resume over a complete output runs
+no Spark job. The pruning runs on metadata (≤ 64 800 tile keys for the
+whole world — kilobytes), like the reference's skip check on local
+paths; the data plane stays a pure scan→decode→write stage with no
+shuffle. The streaming sinks have no up-front listing: they prune by
+region in the plan, per micro-batch, after the scan has fetched each
+arriving file.
 """
 
 from __future__ import annotations
@@ -24,7 +29,12 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from aw3d30_parquet_spark.sources.geotiff import read_tiles, tiles_for_set
+from aw3d30_parquet_spark.sources.geotiff import (
+    check_on_corrupt,
+    decode_tiles,
+    parse_tile_key,
+    tile_paths,
+)
 
 _PART_RE = re.compile(r"^tile_lat=(-?\d+)$")
 
@@ -118,6 +128,8 @@ def ingest_tiles(
 
     Returns the tile coordinates ingested this run (empty on a re-run —
     the G2 idempotency contract, mirroring ``src/main.rs:144-146,171``).
+    The work list is the listed in-region tiles minus those already in
+    ``out_dir``; when it is empty the call runs no Spark job at all.
 
     Observability (the reference's R8: ``tracing`` spans with per-
     operator instrumentation, ``src/main.rs:135,163,229-231``): pass a
@@ -125,16 +137,15 @@ def ingest_tiles(
     tile counts, collected via ``df.observe`` — measured on the running
     plan itself, no second pass over the data.
     """
+    check_on_corrupt(on_corrupt)
     done = existing_tiles(out_dir, spark)
-    pending = sorted(set(tiles_for_set(set_name)) - done)
-    if not pending:
+    paths = tile_paths(spark, tif_dir, set_name, exclude=done)
+    if not paths:
         if metrics is not None:
             metrics.update(rows_written=0, tiles_written=0, skipped_tiles=len(done))
         return []
-    df = read_tiles(
-        spark, tif_dir, set_name, chunk_rows, exclude_tiles=done,
-        on_corrupt=on_corrupt,
-    )
+    pending = sorted({parse_tile_key(p) for p in paths})
+    df = decode_tiles(spark, paths, chunk_rows, on_corrupt)
     if metrics is not None:
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
@@ -167,12 +178,15 @@ def _stream_points(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Shared streaming source for both streaming sinks: binaryFile
-    arrivals → region prune on metadata → mapInPandas decode. ONE
+    arrivals → region filter in the plan → mapInPandas decode. ONE
     definition so the glob, schema, and corrupt-handling cannot
-    silently diverge between ingest and rollup."""
+    silently diverge between ingest and rollup. A streaming file source
+    has no up-front listing to prune, so the region filter runs after
+    the scan has read each arriving file's bytes."""
     from aw3d30_parquet_spark.session import ship_package
     from aw3d30_parquet_spark.sources.geotiff import (
         POINT_SCHEMA,
+        TILE_GLOB,
         _decode_partition,
         _region_pruned_files,
     )
@@ -186,7 +200,7 @@ def _stream_points(
     reader = (
         spark.readStream.format("binaryFile")
         .schema(binary_file_schema)
-        .option("pathGlobFilter", "ALPSMLC30_*_DSM.tif")
+        .option("pathGlobFilter", TILE_GLOB)
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -216,8 +230,9 @@ def stream_ingest_tiles(
     idempotency mechanism (the reference's skip-if-exists,
     ``src/main.rs:144-146``, upgraded to transactional exactly-once: a
     tile is decoded and committed exactly once even across restarts
-    and mid-batch crashes). Region pruning still runs on file metadata
-    before any tile byte is read; the data plane stays the same
+    and mid-batch crashes). Region pruning runs in the plan per
+    micro-batch, so out-of-region arrivals are still fetched (only the
+    batch ingest prunes at the listing); the data plane stays the same
     shuffle-free scan → mapInPandas decode → partitioned write.
 
     ``on_corrupt`` matters MORE here than in batch: the file source's

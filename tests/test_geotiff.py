@@ -65,6 +65,32 @@ def tif_dir(tmp_path_factory):
     return str(d)
 
 
+def _run_in_group(spark, group, fn):
+    """Run ``fn`` under Spark job group ``group`` → (its result, job ids
+    of the group, input bytes summed over those jobs' stages)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    jvm_sc = sc._jsc.sc()
+    jvm_sc.listenerBus().waitUntilEmpty()
+    store = jvm_sc.statusStore()
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    stages = {
+        sid for jid in jobs for sid in sc.statusTracker().getJobInfo(jid).stageIds
+    }
+    return out, jobs, sum(store.lastStageAttempt(sid).inputBytes() for sid in stages)
+
+
+def _tile_bytes(tif_dir, coords):
+    return sum(
+        os.path.getsize(os.path.join(tif_dir, f"{tile_key(la, lo)}.tif"))
+        for la, lo in coords
+    )
+
+
 # ---------------------------------------------------------------- G1: decode golden
 
 
@@ -116,8 +142,11 @@ def test_g2_idempotent_ingest(spark, tif_dir, tmp_path):
         for f in fs
         if f.endswith(".parquet")
     }
-    second = ingest_tiles(spark, tif_dir, out, "netherlands")
+    second, jobs, _ = _run_in_group(
+        spark, "g2-resume", lambda: ingest_tiles(spark, tif_dir, out, "netherlands")
+    )
     assert second == []  # zero new work, mirrors src/main.rs:144-146,171
+    assert jobs == []  # the work list is empty before any scan is planned
     after = {
         os.path.join(r, f): os.path.getmtime(os.path.join(r, f))
         for r, _, fs in os.walk(out)
@@ -125,6 +154,8 @@ def test_g2_idempotent_ingest(spark, tif_dir, tmp_path):
         if f.endswith(".parquet")
     }
     assert after == snapshot  # no file rewritten
+    with pytest.raises(ValueError):  # checked even with no work left
+        ingest_tiles(spark, tif_dir, out, "netherlands", on_corrupt="bogus")
 
     # partition pruning works on the produced layout
     got = spark.read.parquet(out).filter("tile_lat = 51 AND tile_lon = 4")
@@ -137,23 +168,50 @@ def test_g2_partial_resume(spark, tif_dir, tmp_path):
     df = read_tiles(spark, tif_dir, "netherlands").filter("tile_lat = 51")
     write_tiles(df, out)
     assert existing_tiles(out) == {(51, 4)}
-    ingested = ingest_tiles(spark, tif_dir, out, "netherlands")
+    ingested, _, read = _run_in_group(
+        spark, "g2-partial", lambda: ingest_tiles(spark, tif_dir, out, "netherlands")
+    )
     assert sorted(ingested) == [(52, 5)]
+    # only the missing tile's bytes are fetched: neither the done tile nor
+    # the out-of-region ones
+    assert read == _tile_bytes(tif_dir, [(52, 5)])
     assert spark.read.parquet(out).count() == 2 * SIZE * SIZE
+
+
+def test_g2_escaped_dir_name(spark, tif_dir, tmp_path):
+    """A tile dir whose name needs percent-encoding in a URI (a space, a
+    literal ``%41``) ingests, resumes and reads like a plain one."""
+    import shutil
+
+    odd = tmp_path / "tiles a%41b"
+    shutil.copytree(tif_dir, odd)
+    out_plain, out_odd = str(tmp_path / "plain"), str(tmp_path / "odd")
+    assert sorted(ingest_tiles(spark, tif_dir, out_plain, "netherlands")) == [
+        (51, 4), (52, 5)
+    ]
+    assert sorted(ingest_tiles(spark, str(odd), out_odd, "netherlands")) == [
+        (51, 4), (52, 5)
+    ]
+    assert ingest_tiles(spark, str(odd), out_odd, "netherlands") == []
+    written = spark.read.parquet(out_odd)
+    assert written.exceptAll(spark.read.parquet(out_plain)).count() == 0
+    assert written.count() == 2 * SIZE * SIZE
+    got = read_tiles(spark, str(odd), "netherlands")
+    assert got.exceptAll(read_tiles(spark, tif_dir, "netherlands")).count() == 0
+    assert got.count() == 2 * SIZE * SIZE
 
 
 # ---------------------------------------------------------------- G3: region filter
 
 
 def test_g3_region_filter(spark, tif_dir):
-    """Netherlands predicate keeps exactly the 2 in-region fixture tiles."""
-    tiles = (
-        read_tiles(spark, tif_dir, "netherlands")
-        .select("tile_lat", "tile_lon")
-        .distinct()
-        .collect()
-    )
+    """Netherlands predicate keeps exactly the 2 in-region fixture tiles,
+    and prunes at the listing: the out-of-region tiles and the
+    malformed-key decoy are never fetched."""
+    df = read_tiles(spark, tif_dir, "netherlands").select("tile_lat", "tile_lon")
+    tiles, _, read = _run_in_group(spark, "g3-region", df.distinct().collect)
     assert sorted((r.tile_lat, r.tile_lon) for r in tiles) == [(51, 4), (52, 5)]
+    assert read == _tile_bytes(tif_dir, [(51, 4), (52, 5)])
 
 
 def test_g3_world_reads_all_valid(spark, tif_dir):
