@@ -13,11 +13,15 @@ directory, key parse, region predicate and skip set applied in plain
 Python, like the reference filtering keys while it lists the bucket
 (``src/main.rs:298,316-321``). The data plane is a ``binaryFile`` scan of
 exactly those paths (one Spark task per tile, no shuffle anywhere in the
-pipeline) fused with a ``mapInPandas`` decode that yields bounded Arrow
-batches, then a partitioned Parquet sink. At 100 TB (~31 000 real tiles
-× 13M rows) this is a single embarrassingly-parallel stage: scan →
-decode → write, with partition pruning on ``tile_lat``/``tile_lon``
-replacing the reference's filename-encoded partitioning.
+pipeline). The ingest fuses it with a ``mapInArrow`` kernel that decodes
+each tile and writes that tile's Parquet file in the task
+(:mod:`~aw3d30_parquet_spark.sources.sink`); :func:`read_tiles` fuses it
+with a ``mapInPandas`` decode that yields bounded Arrow batches of
+points. Both kernels share one per-tile loop (:func:`_decoded_tiles`).
+At 100 TB (~31 000 real tiles × 13M rows) the ingest is a single
+embarrassingly-parallel stage: scan → decode → write, with partition
+pruning on ``tile_lat``/``tile_lon`` replacing the reference's
+filename-encoded partitioning.
 """
 
 from __future__ import annotations
@@ -125,34 +129,45 @@ def tiles_for_set(set_name: str) -> list[tuple[int, int]]:
     return [(lat, lon) for lat in range(lat0, lat1 + 1) for lon in range(lon0, lon1 + 1)]
 
 
+def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
+    """The per-tile loop every ingest kernel shares: ``(path, content)``
+    pairs → ``(coord, band, geotransform)`` for each decodable tile.
+
+    A malformed key is rejected like the reference's parse
+    (``src/main.rs:131``). ``on_corrupt``: 'fail' raises on undecodable
+    bytes (the reference's behavior — errors propagate and abort the
+    pipeline, ``src/main.rs:337-345``); 'skip' drops the tile and keeps
+    going (preferable for a 31 000-tile backfill where one bad object
+    must not kill hours of work — re-runs pick up skipped tiles for free
+    via the idempotent sink).
+    """
+    for path, content in rows:
+        coord = parse_tile_key(os.path.basename(str(path)))
+        if coord is None:
+            continue
+        try:
+            band, gt = decode_geotiff(bytes(content))
+        except Exception:
+            if on_corrupt == "fail":
+                raise
+            continue
+        yield coord, band, gt
+
+
 def _decode_partition(batches: Iterable, chunk_rows: int, on_corrupt: str) -> Iterator:
     """mapInPandas kernel: (path, content) rows → point-table Arrow batches.
 
-    One input row per tile file; output yielded in ≤ chunk_rows batches so
-    a 3600² tile (13M rows ≈ 260 MB) never materializes at once
-    (SURVEY §7.3 item 2). All math is vectorized numpy — the JVM↔Python
-    boundary carries only columnar Arrow buffers.
-
-    ``on_corrupt``: 'fail' aborts the job on undecodable bytes (the
-    reference's behavior — errors propagate and abort the pipeline,
-    ``src/main.rs:337-345``); 'skip' drops the tile and keeps going
-    (preferable for a 31 000-tile backfill where one bad object must
-    not kill hours of work — re-runs pick up skipped tiles for free via
-    the idempotent sink).
+    One input row per tile file (decoded by :func:`_decoded_tiles`);
+    output yielded in ≤ chunk_rows batches so a 3600² tile (13M rows ≈
+    260 MB) never materializes at once (SURVEY §7.3 item 2). All math is
+    vectorized numpy — the JVM↔Python boundary carries only columnar
+    Arrow buffers.
     """
     import pandas as pd
 
     for pdf in batches:
-        for path, content in zip(pdf["path"], pdf["content"]):
-            coord = parse_tile_key(os.path.basename(str(path)))
-            if coord is None:  # malformed key: reject like src/main.rs:131
-                continue
-            try:
-                band, gt = decode_geotiff(bytes(content))
-            except Exception:
-                if on_corrupt == "fail":
-                    raise
-                continue
+        tiles = _decoded_tiles(zip(pdf["path"], pdf["content"]), on_corrupt)
+        for coord, band, gt in tiles:
             for lat, lon, elev in flatten_raster(band, gt, chunk_rows):
                 yield pd.DataFrame(
                     {
@@ -163,7 +178,6 @@ def _decode_partition(batches: Iterable, chunk_rows: int, on_corrupt: str) -> It
                         "elevation": elev.astype("int32"),
                     }
                 )
-
 
 
 #: Schema of the per-cell terrain-gradient table (g03): elevation

@@ -5,36 +5,52 @@ tile key, and skips tiles whose output already exists (``src/main.rs:
 144-146`` for downloads, ``:171`` for conversions) — re-running the
 pipeline only does new work.
 
-Spark-first equivalent: Hive-style ``partitionBy(tile_lat, tile_lon)``
-layout (so every downstream query gets partition pruning on tile
-coordinates for free — strictly better than coordinates encoded in file
-names), and idempotency at the *work-list* level: the batch ingest lists
-the tile directory once, and the region predicate and the
-already-ingested tile partitions prune that listing on the driver
+Spark-first equivalent: Hive-style ``tile_lat=/tile_lon=`` layout (so
+every downstream query gets partition pruning on tile coordinates for
+free — strictly better than coordinates encoded in file names), and
+idempotency at the *work-list* level: the batch ingest lists the tile
+directory once, and the region predicate and the already-ingested tile
+partitions prune that listing on the driver
 (:func:`~aw3d30_parquet_spark.sources.geotiff.tile_paths`), so only the
 pending tiles are ever fetched and a resume over a complete output runs
 no Spark job. The pruning runs on metadata (≤ 64 800 tile keys for the
 whole world — kilobytes), like the reference's skip check on local
-paths; the data plane stays a pure scan→decode→write stage with no
-shuffle. The streaming sinks have no up-front listing: they prune by
-region in the plan, per micro-batch, after the scan has fetched each
-arriving file.
+paths.
+
+The write is tile-native, like the reference's converter
+(``src/main.rs:172-220``): a ``binaryFile`` scan feeds a ``mapInArrow``
+kernel in which each task decodes its tiles and writes each tile's
+Snappy Parquet file with pyarrow, then yields one manifest row
+``(tile_lat, tile_lon, rows)``. No point row crosses back into the JVM,
+and there is no shuffle. Each tile commits on its own — a dot-prefixed
+temp file renamed onto a fixed per-tile name — so a failure late in a
+backfill keeps every tile already converted, and a retried task attempt
+replaces its file instead of adding a duplicate. Remote outputs
+(``s3a://``) keep Spark's partitioned writer, committed as one job. The
+streaming sinks keep Spark's file sink and have no up-front listing:
+they prune by region in the plan, per micro-batch, after the scan has
+fetched each arriving file.
 """
 
 from __future__ import annotations
 
 import os
 import re
-from typing import Sequence
+from typing import Iterable, Iterator, Sequence
+from urllib.parse import urlparse
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from aw3d30_parquet_spark.sources.geotiff import (
+    _decoded_tiles,
+    _tile_files,
     check_on_corrupt,
     decode_tiles,
-    parse_tile_key,
+    tile_key,
     tile_paths,
 )
+from aw3d30_parquet_spark.sources.tiff import flatten_raster
 
 _PART_RE = re.compile(r"^tile_lat=(-?\d+)$")
 
@@ -105,7 +121,9 @@ def existing_tiles(
 
 
 def write_tiles(df: DataFrame, out_dir: str, mode: str = "append") -> None:
-    """Point DataFrame → Hive-partitioned Snappy Parquet.
+    """Point DataFrame → Hive-partitioned Snappy Parquet through Spark's
+    writer — the path for remote outputs, and for point DataFrames that
+    do not come from a tile scan.
 
     Snappy is Spark's default codec, matching the reference's writer
     properties (``src/main.rs:294-296``). One output file per (tile,
@@ -113,6 +131,94 @@ def write_tiles(df: DataFrame, out_dir: str, mode: str = "append") -> None:
     the reference's layout (``src/main.rs:195``).
     """
     df.write.mode(mode).partitionBy("tile_lat", "tile_lon").parquet(out_dir)
+
+
+#: One manifest row per tile file committed by :func:`_write_tile_partition`.
+MANIFEST_SCHEMA = "tile_lat int, tile_lon int, rows long"
+
+
+def _local_dir(out_dir: str) -> str | None:
+    """``out_dir`` as an absolute local path, or None for a remote URI
+    (``s3a://`` and any other non-``file`` scheme)."""
+    uri = urlparse(out_dir)
+    if uri.scheme == "file":
+        return uri.path
+    if "://" in out_dir:
+        return None
+    return os.path.abspath(out_dir)
+
+
+def _write_tile_partition(
+    batches: Iterable, out_dir: str, chunk_rows: int, on_corrupt: str
+) -> Iterator:
+    """mapInArrow kernel: (path, content) record batches → one Snappy
+    Parquet file per tile under the local ``out_dir``, and one manifest
+    row ``(tile_lat, tile_lon, rows)`` per file committed.
+
+    Each tile commits on its own: the decoded raster streams in
+    ``flatten_raster`` chunks into a dot-prefixed temp file (a name that
+    Spark, DuckDB and :func:`existing_tiles` all skip), which is then
+    ``os.replace``-d onto ``part-<tile key>.snappy.parquet``. That name
+    is fixed per tile, so a retried or speculative task attempt replaces
+    the file instead of adding a duplicate. The tile directory is created
+    only after the decode succeeded, so a failing task leaves every tile
+    it finished before the failure in place, and nothing for the failing
+    one.
+    """
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # the reference's REQUIRED group (src/main.rs:273-293), which is also
+    # what Spark's writer stores for POINT_SCHEMA minus the partition columns
+    schema = pa.schema([
+        pa.field("lat", pa.float64(), nullable=False),
+        pa.field("lon", pa.float64(), nullable=False),
+        pa.field("elevation", pa.int32(), nullable=False),
+    ])
+    manifest = pa.schema(
+        [("tile_lat", pa.int32()), ("tile_lon", pa.int32()), ("rows", pa.int64())]
+    )
+    for batch in batches:
+        paths, contents = batch.column("path"), batch.column("content")
+        rows = ((paths[i].as_py(), contents[i].as_py()) for i in range(len(batch)))
+        for (lat, lon), band, gt in _decoded_tiles(rows, on_corrupt):
+            tile_dir = os.path.join(out_dir, f"tile_lat={lat}", f"tile_lon={lon}")
+            os.makedirs(tile_dir, exist_ok=True)
+            name = f"part-{tile_key(lat, lon)}.snappy.parquet"
+            tmp = os.path.join(tile_dir, f".{name}.{uuid.uuid4().hex}.tmp")
+            try:
+                with pq.ParquetWriter(tmp, schema, compression="snappy") as writer:
+                    for la, lo, elev in flatten_raster(band, gt, chunk_rows):
+                        writer.write_batch(pa.record_batch(
+                            [la, lo, elev.astype(np.int32, copy=False)], schema=schema
+                        ))
+                os.replace(tmp, os.path.join(tile_dir, name))
+            except BaseException:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+                raise
+            yield pa.record_batch([[lat], [lon], [band.size]], schema=manifest)
+
+
+def _write_via_spark(df: DataFrame, out_dir: str) -> tuple[list[tuple[int, int]], int]:
+    """Remote ``out_dir``: Spark's partitioned writer, with the written
+    tiles and row count observed exactly on the executing plan."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    obs = Observation("ingest")
+    write_tiles(
+        df.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.collect_set(F.struct("tile_lat", "tile_lon")).alias("tiles"),
+        ),
+        out_dir,
+    )
+    got = obs.get
+    return sorted(tuple(t) for t in got["tiles"]), got["rows"]
 
 
 def ingest_tiles(
@@ -131,11 +237,23 @@ def ingest_tiles(
     The work list is the listed in-region tiles minus those already in
     ``out_dir``; when it is empty the call runs no Spark job at all.
 
+    Tile-native write, like the reference's one-file-per-tile converter
+    (``src/main.rs:172-220``): the ``binaryFile`` scan of the work list
+    feeds a ``mapInArrow`` kernel (:func:`_write_tile_partition`) in
+    which each task decodes its tiles and writes each one's Parquet file
+    with pyarrow, committing it on its own by rename; only a one-row
+    manifest per tile crosses back to the JVM, and the driver collects
+    it. A failure therefore loses only the tiles not yet committed, and
+    the next run resumes from the rest. A remote ``out_dir`` (``s3a://``
+    and other non-``file`` schemes, which pyarrow cannot open with the
+    Hadoop s3a settings) goes through Spark's partitioned writer
+    instead, committed as one job.
+
     Observability (the reference's R8: ``tracing`` spans with per-
     operator instrumentation, ``src/main.rs:135,163,229-231``): pass a
-    dict as ``metrics`` and it is filled with the executed job's row/
-    tile counts, collected via ``df.observe`` — measured on the running
-    plan itself, no second pass over the data.
+    dict as ``metrics`` and it is filled with exact ``rows_written`` /
+    ``tiles_written`` counts — from the manifest, or for a remote
+    ``out_dir`` observed on the executing plan — and ``skipped_tiles``.
     """
     check_on_corrupt(on_corrupt)
     done = existing_tiles(out_dir, spark)
@@ -144,29 +262,27 @@ def ingest_tiles(
         if metrics is not None:
             metrics.update(rows_written=0, tiles_written=0, skipped_tiles=len(done))
         return []
-    pending = sorted({parse_tile_key(p) for p in paths})
-    df = decode_tiles(spark, paths, chunk_rows, on_corrupt)
-    if metrics is not None:
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        obs = Observation("ingest")
-        # observe() disallows distinct aggregates (CollectMetrics must
-        # merge in one pass) — the HLL++ sketch is the observable form
-        df = df.observe(
-            obs,
-            F.count(F.lit(1)).alias("rows_written"),
-            F.approx_count_distinct(
-                F.col("tile_lat") * 1000 + F.col("tile_lon")
-            ).alias("tiles_written"),
+    local = _local_dir(out_dir)
+    if local is None:
+        tiles, rows = _write_via_spark(
+            decode_tiles(spark, paths, chunk_rows, on_corrupt), out_dir
         )
-        write_tiles(df, out_dir, mode="append")
-        metrics.update(obs.get)
-        metrics["skipped_tiles"] = len(done)
     else:
-        write_tiles(df, out_dir, mode="append")
-    done_after = existing_tiles(out_dir, spark)  # ONE post-write walk
-    return [t for t in pending if t in done_after]
+        manifest = (
+            _tile_files(spark, paths)
+            .mapInArrow(
+                lambda it: _write_tile_partition(it, local, chunk_rows, on_corrupt),
+                schema=MANIFEST_SCHEMA,
+            )
+            .collect()
+        )
+        tiles = sorted((r.tile_lat, r.tile_lon) for r in manifest)
+        rows = sum(r.rows for r in manifest)
+    if metrics is not None:
+        metrics.update(
+            rows_written=rows, tiles_written=len(tiles), skipped_tiles=len(done)
+        )
+    return tiles
 
 
 def _stream_points(

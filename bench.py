@@ -29,15 +29,17 @@ def _bench_ingest(spark, n_tiles: int = 32, size: int = 512) -> dict:
     """GeoTIFF→Parquet ingest throughput (BASELINE.md supplement).
 
     Fabricates n_tiles synthetic size×size tiles (network-free stand-in
-    for the reference's S3 downloads), then times the full pipeline:
-    binaryFile scan → mapInPandas decode → partitioned Parquet write.
+    for the reference's S3 downloads), then times ``ingest_tiles`` —
+    the shipped pipeline: listing → binaryFile scan → per-tile decode
+    and Parquet write in each task → manifest collect — into a fresh
+    output directory per run.
     """
     import shutil
     import tempfile
 
     from aw3d30_parquet_spark.sources.demo import ensure_demo_tiles
-    from aw3d30_parquet_spark.sources.geotiff import read_tiles, tiles_for_set
-    from aw3d30_parquet_spark.sources.sink import write_tiles
+    from aw3d30_parquet_spark.sources.geotiff import tiles_for_set
+    from aw3d30_parquet_spark.sources.sink import ingest_tiles
 
     coords = tiles_for_set("europe")[:n_tiles]  # one tile per core at 32
     scratch = tempfile.mkdtemp(prefix="aw3d30_bench_")
@@ -48,11 +50,11 @@ def _bench_ingest(spark, n_tiles: int = 32, size: int = 512) -> dict:
         # same protocol as the query loop: one warm-up run (codegen
         # compile + Python-worker spin-up), then time the steady state
         # — the number a long-running ingest job actually sustains
-        write_tiles(read_tiles(spark, tif_dir, "europe"), out_dir + "_warm")
+        ingest_tiles(spark, tif_dir, out_dir + "_warm", "europe")
         times = []
         for i in range(max(1, REPEATS)):
             t0 = time.perf_counter()
-            write_tiles(read_tiles(spark, tif_dir, "europe"), f"{out_dir}_{i}")
+            ingest_tiles(spark, tif_dir, f"{out_dir}_{i}", "europe")
             times.append(time.perf_counter() - t0)
         elapsed = statistics.median(times)
         rows = n_tiles * size * size

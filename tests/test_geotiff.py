@@ -16,10 +16,12 @@ from hypothesis import strategies as st
 
 from aw3d30_parquet_spark.sources.geotiff import (
     REGION_SETS,
+    _tile_files,
     in_region,
     parse_tile_key,
     read_tiles,
     tile_key,
+    tile_paths,
     tiles_for_set,
 )
 from aw3d30_parquet_spark.sources.sink import existing_tiles, ingest_tiles, write_tiles
@@ -277,18 +279,168 @@ def test_g2_duckdb_reads_partitioned_sink(spark, tif_dir, tmp_path):
     assert tiles == 2
 
 
-def test_g2_observe_metrics(spark, tif_dir, tmp_path):
-    """R8 parity: ingest reports row/tile counts via df.observe on the
-    executing plan (reference: tracing spans, src/main.rs:135,163)."""
+def test_g2_observe_metrics(spark, tif_dir, tmp_path, monkeypatch):
+    """R8 parity: ingest reports exact row/tile counts, taken from the
+    tile-native write's manifest (reference: tracing spans,
+    src/main.rs:135,163) or, for a remote output through Spark's writer,
+    observed on the executing plan."""
+    from aw3d30_parquet_spark.sources import sink
+
     out = str(tmp_path / "points")
     metrics: dict = {}
     ingest_tiles(spark, tif_dir, out, "netherlands", metrics=metrics)
     assert metrics["rows_written"] == 2 * SIZE * SIZE
-    assert metrics["tiles_written"] == 2  # HLL++ exact at this cardinality
+    assert metrics["tiles_written"] == 2  # one manifest row per committed file
     assert metrics["skipped_tiles"] == 0
     again: dict = {}
     ingest_tiles(spark, tif_dir, out, "netherlands", metrics=again)
     assert again == {"rows_written": 0, "tiles_written": 0, "skipped_tiles": 2}
+
+    # on_corrupt="skip": a corrupt in-region tile is neither returned nor
+    # counted, on the tile-native path and on the Spark-writer path
+    d = str(tmp_path / "mixed")
+    os.makedirs(d)
+    _write_fixture_tiles(d, [(51, 4), (52, 5)])
+    with open(os.path.join(d, f"{tile_key(53, 6)}.tif"), "wb") as f:
+        f.write(b"II*\0 not really a tiff")
+    for branch in ("tile-native", "spark-writer"):
+        if branch == "spark-writer":
+            monkeypatch.setattr(sink, "_local_dir", lambda _out: None)
+        skipped: dict = {}
+        got = ingest_tiles(
+            spark, d, str(tmp_path / branch), "netherlands",
+            metrics=skipped, on_corrupt="skip",
+        )
+        assert sorted(got) == [(51, 4), (52, 5)], branch
+        assert skipped == {
+            "rows_written": 2 * SIZE * SIZE, "tiles_written": 2, "skipped_tiles": 0
+        }, branch
+        assert spark.read.parquet(str(tmp_path / branch)).count() == 2 * SIZE * SIZE
+
+
+def test_g2_per_tile_commit_survives_failure(spark, tmp_path):
+    """A tile that fails late in an ingest keeps every tile committed
+    before it, and the resume writes exactly the one missing tile."""
+    d = str(tmp_path / "tif")
+    os.makedirs(d)
+    good = [(50, 3), (51, 4), (52, 5)]
+    _write_fixture_tiles(d, good)
+    with open(os.path.join(d, f"{tile_key(53, 6)}.tif"), "wb") as f:
+        f.write(b"II*\0 not really a tiff")
+    out = str(tmp_path / "points")
+    # one task for all four tiles: Spark packs files largest first, so the
+    # tiny corrupt file is decoded last
+    confs = {
+        "spark.sql.files.openCostInBytes": "0",
+        "spark.sql.files.maxPartitionBytes": str(1 << 30),
+        "spark.sql.files.minPartitionNum": "1",
+    }
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        paths = tile_paths(spark, d, "netherlands")
+        assert _tile_files(spark, paths).rdd.getNumPartitions() == 1
+        with pytest.raises(Exception):
+            ingest_tiles(spark, d, out, "netherlands", on_corrupt="fail")
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert existing_tiles(out) == set(good)
+    counts = spark.read.parquet(out).groupBy("tile_lat", "tile_lon").count().collect()
+    assert {(r.tile_lat, r.tile_lon): r["count"] for r in counts} == {
+        t: SIZE * SIZE for t in good
+    }
+
+    _write_fixture_tiles(d, [(53, 6)])  # fix the bytes in place
+    assert ingest_tiles(spark, d, out, "netherlands") == [(53, 6)]
+    clean = str(tmp_path / "clean")
+    ingest_tiles(spark, d, clean, "netherlands")
+    got, want = spark.read.parquet(out), spark.read.parquet(clean)
+    assert got.count() == want.count() == 4 * SIZE * SIZE
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_g2_tile_write_retry_safe(spark, tif_dir, tmp_path, monkeypatch):
+    """Two attempts of the write kernel on the same tile leave one file;
+    a crashed attempt's dot-temp file is invisible to every reader."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aw3d30_parquet_spark.sources.sink import _write_tile_partition, compact_tiles
+
+    path = os.path.join(tif_dir, f"{tile_key(51, 4)}.tif")
+    with open(path, "rb") as f:
+        batch = pa.record_batch(
+            [pa.array([path]), pa.array([f.read()], pa.binary())],
+            names=["path", "content"],
+        )
+    out = str(tmp_path / "points")
+    staged = []  # the kernel's temp names, as it renames them
+    real_replace = os.replace
+
+    def recording_replace(src, dst):
+        staged.append(src)
+        real_replace(src, dst)
+
+    with monkeypatch.context() as patch:
+        patch.setattr(os, "replace", recording_replace)
+        for _attempt in range(2):
+            manifest = list(_write_tile_partition([batch], out, 1000, "fail"))
+            assert [m.to_pylist() for m in manifest] == [
+                [{"tile_lat": 51, "tile_lon": 4, "rows": SIZE * SIZE}]
+            ]
+    tile_dir = os.path.join(out, "tile_lat=51", "tile_lon=4")
+    files = os.listdir(tile_dir)
+    assert len(files) == 1 and files[0].endswith(".parquet")
+    assert pq.read_metadata(os.path.join(tile_dir, files[0])).num_rows == SIZE * SIZE
+
+    # a crashed attempt's torn temp file, beside the committed one and
+    # alone in a tile dir
+    leftover = os.path.basename(staged[0])
+    for d in (tile_dir, os.path.join(out, "tile_lat=52", "tile_lon=5")):
+        os.makedirs(d, exist_ok=True)
+        with open(os.path.join(d, leftover), "wb") as f:
+            f.write(b"PAR1 torn write")
+    assert existing_tiles(out) == {(51, 4)}
+    assert compact_tiles(spark, out) == {
+        "compacted_tiles": 0, "files_before": 1, "files_after": 1
+    }
+    assert spark.read.parquet(out).count() == SIZE * SIZE
+
+
+@pytest.mark.parametrize("set_name", ["europe", "world"])
+def test_g2_tile_native_rows_match_decode(spark, tmp_path, set_name):
+    """The tile-native write stores exactly the decoded point rows, with
+    the reference's REQUIRED Parquet schema (src/main.rs:273-293)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    coords = FIXTURE_COORDS + [(45, -6), (60, 20)]
+    d = str(tmp_path / "tif")
+    os.makedirs(d)
+    _write_fixture_tiles(d, coords)
+    out = str(tmp_path / "points")
+    expected = sorted(c for c in coords if in_region(set_name, *c))
+    assert sorted(ingest_tiles(spark, d, out, set_name)) == expected
+
+    cols = ["tile_lat", "tile_lon", "lat", "lon", "elevation"]
+    written = spark.read.parquet(out).select(*cols)
+    decoded = read_tiles(spark, d, set_name).select(*cols)
+    assert written.exceptAll(decoded).count() == 0
+    assert decoded.exceptAll(written).count() == 0
+    files = glob.glob(os.path.join(out, "*", "*", "*.parquet"))
+    assert len(files) == len(expected)
+    for f in files:
+        assert [(x.name, str(x.type), x.nullable) for x in pq.read_schema(f)] == [
+            ("lat", "double", False),
+            ("lon", "double", False),
+            ("elevation", "int32", False),
+        ]
 
 
 # ---------------------------------------------------------------- g01 contract
