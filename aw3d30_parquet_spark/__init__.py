@@ -17,10 +17,16 @@ Layout:
 - ``streaming``  — Structured Streaming operators over the events table
 - ``plans``      — plan inspection / optimization helpers
 
+Importing the package in a reused PySpark worker on CPython < 3.13 also
+installs the worker import-cache hook (:func:`_install_worker_import_hook`).
+
 The full registered surface (the q/a/d/v/t/p/m/g/s/u query families —
 see SURVEY.md §2 for the authoritative inventory and counts) is
 assembled by ``__spark_entry__.py`` at the repo root.
 """
+
+import os
+import sys
 
 # Lazy re-exports (PEP 562): the package itself must import without a
 # Spark installation so DuckDB-only tooling can load the oracle-SQL
@@ -36,3 +42,61 @@ def __getattr__(name: str):
 
         return getattr(session, name)
     raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+
+
+def _install_worker_import_hook() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    it changed on disk.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before every
+    task. Up to CPython 3.12 each ``zipimporter`` answers by re-reading its
+    whole archive directory, and a worker that imports pyspark from
+    ``pyspark.zip`` holds one importer per sub-package: ~16 reads of a
+    1,328-entry directory per task, most of a reused worker's fixed CPU
+    cost. Here the directory zipimport caches for each archive carries the
+    ``stat`` stamp taken before the read that filled it; an importer whose
+    archive still has that stamp takes the cached directory, which is what
+    a re-read would return, and the original re-read runs only when the
+    stamp changed or the ``stat`` failed. A rewritten archive is therefore
+    still picked up on the next task. The archives already imported from
+    are read once at install, so no later task pays for a first read.
+
+    CPython 3.13 invalidates lazily by itself. The driver and workers that
+    serve one task only (no ``SPARK_REUSE_WORKER``) keep the stock
+    behaviour. Idempotent; stdlib only, so the package still imports
+    without Spark.
+    """
+    if sys.version_info >= (3, 13) or not os.environ.get("SPARK_REUSE_WORKER"):
+        return
+    import zipimport
+
+    zipimporter = zipimport.zipimporter
+    original = zipimporter.invalidate_caches
+    if getattr(original, "_stat_validated", False):
+        return
+    read_stamps: dict[str, tuple | None] = {}  # archive → stamp of its cached read
+
+    def invalidate_caches(self) -> None:
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+        except OSError:
+            stamp = None
+        cached = zipimport._zip_directory_cache.get(self.archive)
+        unchanged = stamp is not None and read_stamps.get(self.archive) == stamp
+        if unchanged and cached is not None:
+            self._files = cached
+            return
+        # stamped before the read: a write racing the read leaves a stamp
+        # that no longer matches, so the next call reads again
+        original(self)
+        read_stamps[self.archive] = stamp
+
+    invalidate_caches._stat_validated = True
+    zipimporter.invalidate_caches = invalidate_caches
+    for finder in list(sys.path_importer_cache.values()):
+        if isinstance(finder, zipimporter):
+            finder.invalidate_caches()
+
+
+_install_worker_import_hook()

@@ -121,36 +121,48 @@ def ship_package(spark: SparkSession) -> None:
     share the driver's filesystem at all), so we ship a zip of the
     package through ``addPyFile`` — the same file-server channel
     ``spark-submit --py-files`` uses on a 1000-executor cluster. One
-    zip per process, a few tens of KB, built once per session.
+    zip per process, a few tens of KB, built once (:func:`_package_zip`).
     """
     key = spark.sparkContext.applicationId
     if key in _SHIPPED:
         return
-    import tempfile
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zip_path = os.path.join(
-        tempfile.gettempdir(), f"aw3d30_parquet_spark_pyfiles_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zip_path):
-        tmp = zip_path + ".tmp"
-        with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if not fname.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fname)
-                    rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                    zf.write(full, rel)
-        os.replace(tmp, zip_path)
     try:
-        spark.sparkContext.addPyFile(zip_path)
+        spark.sparkContext.addPyFile(_package_zip())
     except Exception:
         # Spark Connect sessions have no sparkContext; UDFs are shipped
         # via the Connect artifact channel instead.
         pass
     _SHIPPED.add(key)
+
+
+#: Path of this process's package zip; None until first built.
+_PACKAGE_ZIP: str | None = None
+
+
+def _package_zip() -> str:
+    """Zip this package's ``.py`` files into a fresh ``mkdtemp`` directory,
+    once per process. A fixed name under the shared temp dir would ship
+    whatever an earlier process with the same pid left there."""
+    global _PACKAGE_ZIP
+    if _PACKAGE_ZIP is None:
+        import atexit
+        import shutil
+        import tempfile
+        import zipfile
+
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        out_dir = tempfile.mkdtemp(prefix="aw3d30_parquet_spark_pyfiles_")
+        atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
+        zip_path = os.path.join(out_dir, "aw3d30_parquet_spark.zip")
+        with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fname in files:
+                    if not fname.endswith(".py"):
+                        continue
+                    full = os.path.join(root, fname)
+                    zf.write(full, os.path.relpath(full, os.path.dirname(pkg_dir)))
+        _PACKAGE_ZIP = zip_path
+    return _PACKAGE_ZIP
 
 
 #: Floor on per-task input bytes for spread()'s fan-out. Fanning a

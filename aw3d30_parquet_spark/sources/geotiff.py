@@ -278,6 +278,12 @@ def _region_pruned_files(files: DataFrame, set_name: str) -> DataFrame:
     )
 
 
+def _glob_escape(path: str) -> str:
+    """Backslash-escape the Hadoop glob metacharacters ``[]{}*?\\`` in
+    ``path``: ``load()`` globs every path it is given."""
+    return re.sub(r"([\[\]{}*?\\])", r"\\\1", path)
+
+
 def _binary_files(spark: SparkSession):
     """The one ``binaryFile`` reader every batch tile scan and listing
     goes through."""
@@ -300,11 +306,13 @@ def tile_paths(
     reference's filter-while-listing (``src/main.rs:298,316-321``) and
     skip-if-exists (``:144-146,171``). ``inputFiles()`` returns
     percent-encoded URIs; they are decoded here so that ``load()``
-    accepts them back. Sorted, so the scan's task order is stable.
+    accepts them back. ``tif_dir`` and the listed paths are glob-escaped
+    before each ``load()``, so ``[]{}*?`` in a name match literally.
+    Sorted, so the scan's task order is stable.
     """
     skip = set(exclude)
     paths = []
-    for uri in _binary_files(spark).load(tif_dir).inputFiles():
+    for uri in _binary_files(spark).load(_glob_escape(tif_dir)).inputFiles():
         path = unquote(uri)
         coord = parse_tile_key(path)
         if coord is not None and in_region(set_name, *coord) and coord not in skip:
@@ -322,7 +330,11 @@ def _tile_files(spark: SparkSession, paths: list[str]) -> DataFrame:
     from aw3d30_parquet_spark.session import ship_package
 
     ship_package(spark)
-    return _binary_files(spark).load(paths).select("path", "content")
+    return (
+        _binary_files(spark)
+        .load([_glob_escape(p) for p in paths])
+        .select("path", "content")
+    )
 
 
 def check_on_corrupt(on_corrupt: str) -> None:

@@ -307,6 +307,7 @@ def _stream_points(
         _region_pruned_files,
     )
 
+    check_on_corrupt(on_corrupt)
     ship_package(spark)
     # binaryFile's fixed schema, stated explicitly (streaming file
     # sources cannot infer)

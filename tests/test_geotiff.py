@@ -180,12 +180,14 @@ def test_g2_partial_resume(spark, tif_dir, tmp_path):
     assert spark.read.parquet(out).count() == 2 * SIZE * SIZE
 
 
-def test_g2_escaped_dir_name(spark, tif_dir, tmp_path):
+@pytest.mark.parametrize("name", ["tiles a%41b", "tiles[1]{a}"])
+def test_g2_escaped_dir_name(spark, tif_dir, tmp_path, name):
     """A tile dir whose name needs percent-encoding in a URI (a space, a
-    literal ``%41``) ingests, resumes and reads like a plain one."""
+    literal ``%41``) or holds Hadoop glob characters ingests, resumes and
+    reads like a plain one."""
     import shutil
 
-    odd = tmp_path / "tiles a%41b"
+    odd = tmp_path / name
     shutil.copytree(tif_dir, odd)
     out_plain, out_odd = str(tmp_path / "plain"), str(tmp_path / "odd")
     assert sorted(ingest_tiles(spark, tif_dir, out_plain, "netherlands")) == [
@@ -680,6 +682,21 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     q = stream_ingest_tiles(spark, str(tif), out, ckpt, "netherlands")
     q.awaitTermination()
     assert spark.read.parquet(out).count() == 2 * SIZE * SIZE
+
+
+@pytest.mark.parametrize("which", ["ingest", "rollup"])
+def test_stream_rejects_bad_on_corrupt(spark, tif_dir, tmp_path, which):
+    """Both streaming tile sinks reject an unknown ``on_corrupt`` before
+    any query starts."""
+    from aw3d30_parquet_spark.sources.sink import stream_ingest_tiles, stream_tile_rollup
+
+    start = stream_ingest_tiles if which == "ingest" else stream_tile_rollup
+    with pytest.raises(ValueError, match="on_corrupt"):
+        start(
+            spark, tif_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            "netherlands", on_corrupt="bogus",
+        )
+    assert spark.streams.active == []
 
 
 # ------------------------------------------------------- sink compaction

@@ -1,0 +1,141 @@
+"""W-tests: what the package does to the Python workers that run its
+kernels — the zip it ships them and the import-cache hook it installs
+in reused workers (``aw3d30_parquet_spark._install_worker_import_hook``).
+"""
+
+from __future__ import annotations
+
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+from types import SimpleNamespace
+
+import pytest
+
+import aw3d30_parquet_spark
+from aw3d30_parquet_spark import session
+
+needs_eager_zip_invalidation = pytest.mark.skipif(
+    sys.version_info >= (3, 13),
+    reason="CPython 3.13+ invalidates zipimport caches lazily; no hook installed",
+)
+
+
+@needs_eager_zip_invalidation
+def test_reused_worker_skips_zip_rereads(spark):
+    """A reused worker re-reads no zip archive directory between tasks.
+
+    Job 1 makes every worker it runs in count ``zipimport._read_directory``
+    calls; job 2 reports, from each worker that ran job 1, the reads since
+    its last task ended. Without the hook every task re-reads pyspark.zip
+    once per importer (16 reads with Spark 4.1)."""
+
+    def kernel(batches):
+        import pandas as pd
+
+        # referencing the package makes unpickling this kernel import it,
+        # as every engine kernel does
+        assert aw3d30_parquet_spark.__name__
+        probe = getattr(sys, "_zip_read_probe", None)
+        reads = None
+        if probe is None:
+            probe = sys._zip_read_probe = {"reads": 0, "mark": 0}
+            read_directory = zipimport._read_directory
+
+            def counting(archive):
+                probe["reads"] += 1
+                return read_directory(archive)
+
+            zipimport._read_directory = counting
+        else:
+            reads = probe["reads"] - probe["mark"]
+        for _ in batches:
+            pass
+        probe["mark"] = probe["reads"]
+        yield pd.DataFrame(
+            {"pid": [os.getpid()], "reads": pd.array([reads], dtype="Int64")}
+        )
+
+    def run():
+        df = spark.range(0, 4, numPartitions=4)
+        return df.mapInPandas(kernel, "pid long, reads long").collect()
+
+    run()
+    reported = [r.reads for r in run() if r.reads is not None]
+    assert reported, "no worker was reused between the two jobs"
+    assert reported == [0] * len(reported)
+
+
+def _write_zip(path, modules):
+    tmp = str(path) + ".tmp"
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for name in modules:
+            zf.writestr(f"{name}.py", f"NAME = {name!r}\n")
+    os.replace(tmp, path)
+
+
+@needs_eager_zip_invalidation
+def test_import_hook_rereads_only_changed_zip(tmp_path, monkeypatch):
+    """With the hook installed, ``importlib.invalidate_caches()`` reads no
+    unchanged archive, and a rewritten archive is still picked up."""
+    archive = tmp_path / "mods.zip"
+    _write_zip(archive, ["zmod_a"])
+    monkeypatch.syspath_prepend(str(archive))
+    for name in ("zmod_a", "zmod_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        zipimport.zipimporter.invalidate_caches,
+    )
+    assert importlib.import_module("zmod_a").NAME == "zmod_a"
+
+    monkeypatch.setenv("SPARK_REUSE_WORKER", "1")
+    aw3d30_parquet_spark._install_worker_import_hook()
+    hooked = zipimport.zipimporter.invalidate_caches
+    aw3d30_parquet_spark._install_worker_import_hook()  # idempotent
+    assert zipimport.zipimporter.invalidate_caches is hooked
+
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda a: reads.append(a) or read_directory(a)
+    )
+    importlib.invalidate_caches()
+    assert reads == []
+
+    _write_zip(archive, ["zmod_a", "zmod_b"])
+    importlib.invalidate_caches()
+    assert str(archive) in reads
+    try:
+        assert importlib.import_module("zmod_b").NAME == "zmod_b"
+    finally:
+        sys.path_importer_cache.pop(str(archive), None)
+
+
+def test_ship_package_builds_a_fresh_zip(tmp_path, monkeypatch):
+    """A zip an earlier process left under this pid's old fixed name is
+    never shipped: the zip is built from the current sources."""
+    import tempfile
+
+    stale = tmp_path / f"aw3d30_parquet_spark_pyfiles_{os.getpid()}.zip"
+    with zipfile.ZipFile(stale, "w") as zf:
+        zf.writestr("aw3d30_parquet_spark/__init__.py", "STALE = True\n")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(session, "_PACKAGE_ZIP", None, raising=False)
+    monkeypatch.setattr(session, "_SHIPPED", set())
+    shipped = []
+    stub = SimpleNamespace(
+        sparkContext=SimpleNamespace(applicationId="stub-app", addPyFile=shipped.append)
+    )
+
+    session.ship_package(stub)
+    session.ship_package(stub)  # once per application
+
+    assert len(shipped) == 1
+    with open(aw3d30_parquet_spark.__file__, "rb") as f:
+        current = f.read()
+    with zipfile.ZipFile(shipped[0]) as zf:
+        assert zf.read("aw3d30_parquet_spark/__init__.py") == current
