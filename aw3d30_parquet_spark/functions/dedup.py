@@ -26,7 +26,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aw3d30_parquet_spark.numeric import round_half_up
-from aw3d30_parquet_spark.session import register_views, spread
+from aw3d30_parquet_spark.session import (
+    register_views,
+    session_token,
+    session_width,
+    spread,
+)
 
 SHINGLE_WIDTH = 3
 JACCARD_THRESHOLD = 0.6
@@ -128,12 +133,9 @@ def _pair_agg_width(spark: SparkSession, sf_dir: str) -> int:
     (0.6 MB) stays at the core count, the 10× probe corpora (≥ 6 MB)
     keep the measured 8× shape. At 1000 executors the same rule holds
     per-task aggregate state ~constant as data and cluster scale
-    together. Unreadable layout or Spark Connect (no sparkContext)
-    takes the scale posture, 8 × the last-known core count."""
-    try:
-        cores = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext
-        return 256
+    together. An unreadable layout takes the scale posture, 8 × the
+    session width."""
+    cores = session_width(spark)
     path = os.path.join(sf_dir, "documents.parquet")
     try:
         if os.path.isdir(path):
@@ -839,9 +841,9 @@ def qgram_editdist_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ed_verified(spark, sf_dir, "d11").orderBy("id_a", "id_b")
 
 
-#: (applicationId, sf_dir) → memoized edit-distance relations, persisted
+#: (session_token, sf_dir) → memoized edit-distance relations, persisted
 #: once per session and shared by d10/d11/d13/d14 (b01's ``_BUCKETED``
-#: pattern; applicationId is never recycled in-process). At 100 TB these
+#: pattern; a token is never reused in-process). At 100 TB these
 #: ARE the maintained tables of a dedup service — the corpus prefix
 #: relation, its positional gram index, the rare-gram prefix index, and
 #: the two candidate-pair relations — materialized by an indexing job
@@ -852,11 +854,7 @@ _ED_MEMO: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
 
 def _ed_memo(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:  # Spark Connect: no sparkContext — the Python
-        app = f"connect_{id(spark):x}"  # session object is the session
-    key = (app, sf_dir)
+    key = (session_token(spark), sf_dir)
     memo = _ED_MEMO.setdefault(key, {})
 
     def _release(k=key):

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aw3d30_parquet_spark.numeric import round_half_up
-from aw3d30_parquet_spark.session import register_views, spread
+from aw3d30_parquet_spark.session import register_views, session_width, spread
 
 #: Tiny per-language stopword profiles for the heuristic language-ID.
 #: Deterministic, dependency-free; tie order pinned (list order wins).
@@ -413,16 +413,7 @@ def bm25_search(
     # (200-partition default) every downstream agg/join over a
     # 200-micro-partition cache schedules 200 tasks per stage — pure
     # overhead at index sizes (l01's fix, same rationale)
-    try:
-        from aw3d30_parquet_spark.session import effective_parallelism
-
-        par = max(
-            8,
-            min(spark.sparkContext.defaultParallelism,
-                effective_parallelism()),
-        )
-    except Exception:  # Spark Connect: no sparkContext
-        par = 32
+    par = max(8, session_width(spark))
     # eager: the index cache is read by FOUR concurrent first-wave jobs
     # (the qterms/stats broadcast builds + the candidate and dl sides);
     # profiled r12, each raced reader re-executed the explode+agg

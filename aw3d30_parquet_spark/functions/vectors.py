@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from aw3d30_parquet_spark.numeric import round_half_up
-from aw3d30_parquet_spark.session import register_views, spread
+from aw3d30_parquet_spark.session import register_views, session_token, spread
 
 DEFAULT_K = 5
 DEFAULT_N_QUERIES = 20
@@ -817,8 +817,6 @@ _V07_GATE_MEMO: dict[tuple[str, str, int], tuple[int, int, int]] = {}
 def _v07_gate(
     spark: SparkSession, sf_dir: str, bits: int, v: DataFrame
 ) -> tuple[int, int, int]:
-    from aw3d30_parquet_spark.session import session_token
-
     key = (session_token(spark), sf_dir, bits)
     if key not in _V07_GATE_MEMO:
         occ = (
@@ -1243,7 +1241,7 @@ def _ivf_policy(spark: SparkSession, sf_dir: str) -> tuple[int, int, int]:
 
     from aw3d30_parquet_spark.scratch import memo_touch
 
-    key = (_session_tag(spark), sf_dir)
+    key = (session_token(spark), sf_dir)
 
     def _release(kk=key):
         # registry-evictable like the index memo: a corpus regenerated
@@ -1310,7 +1308,7 @@ def _ivf_parquet_index(
         k_clusters = _ivf_policy(spark, sf_dir)[0]
     if salt_target is None:
         salt_target = _ivf_policy(spark, sf_dir)[2]
-    key = (_session_tag(spark), sf_dir, k_clusters, salt_target)
+    key = (session_token(spark), sf_dir, k_clusters, salt_target)
 
     def _release(kk=key):
         _IVF_PARQUET.pop(kk, None)  # dir reaped by _export_dir atexit
@@ -1365,13 +1363,6 @@ def _ivf_parquet_index(
     _IVF_PARQUET[key] = (out, cents)
     memo_touch(("ivf_parquet", *key), _release)
     return out, cents
-
-
-def _session_tag(spark: SparkSession) -> str:
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:  # Spark Connect: no sparkContext
-        return f"connect_{id(spark):x}"
 
 
 def ann_topk_ivf_parquet(

@@ -16,6 +16,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aw3d30_parquet_spark.session import session_token, session_width
+
 
 def write_bucketed(
     df: DataFrame,
@@ -62,17 +64,6 @@ _ATEXIT_ARMED = False
 #: FOREIGN session tag younger than this may belong to a concurrently
 #: running session — never touch it
 _REAP_MIN_AGE_S = 6 * 3600
-
-
-def _session_tag(spark: SparkSession) -> str:
-    """Stable per-session tag: the applicationId classically; under
-    Spark Connect (no sparkContext) the Python session object's id,
-    which is unique for the life of the session — exactly the life of
-    its managed scratch tables."""
-    try:
-        return spark.sparkContext.applicationId
-    except Exception:
-        return f"connect_{id(spark):x}"
 
 
 def _reap_stale_b01(
@@ -128,7 +119,7 @@ def _bucketed_fact_tables(
 
     global _ATEXIT_ARMED
 
-    app = _session_tag(spark)
+    app = session_token(spark)
     key = (app, sf_dir)
     if key in _BUCKETED:
         return _BUCKETED[key]
@@ -208,10 +199,7 @@ def bucketed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql import functions as F
 
-    try:
-        buckets = max(8, spark.sparkContext.defaultParallelism)
-    except Exception:  # Spark Connect: no sparkContext — deploy default
-        buckets = 32
+    buckets = max(8, session_width(spark))
     ot, lt = _bucketed_fact_tables(spark, sf_dir, buckets=buckets)
     joined = bucketed_equi_join(spark, ot, lt, "o_orderkey", "l_orderkey")
     return (
@@ -253,10 +241,7 @@ def dpp_partitioned_fact(spark: SparkSession, sf_dir: str) -> str:
     from aw3d30_parquet_spark.session import register_views
     from aw3d30_parquet_spark.sources.files import _export_dir
 
-    # _session_tag, not bare applicationId: under Spark Connect there
-    # is no sparkContext and the sibling memo patterns (graph.py,
-    # text.py) already degrade instead of raising (ADVICE r5)
-    key = (_session_tag(spark), sf_dir)
+    key = (session_token(spark), sf_dir)
     if key in _DPP_WRITTEN:
         return _DPP_WRITTEN[key]
     register_views(spark, sf_dir)

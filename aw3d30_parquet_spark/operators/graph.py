@@ -28,7 +28,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aw3d30_parquet_spark.session import register_views
+from aw3d30_parquet_spark.session import (
+    register_views,
+    session_token,
+    session_width,
+)
 
 #: rank mass scale: 1.0 ≡ 10^12 (micro-micro units — 12 decimal
 #: digits of rank resolution, far below any ranking-relevant gap).
@@ -116,10 +120,7 @@ def pagerank_supplier_customer(
     # scheduled tasks — pure overhead that dominated the sf0.01 sim
     # (40 s → ~8 s with the coalesce). At real scale defaultParallelism
     # is the cluster width, so this stays right-sized.
-    try:
-        par = max(8, spark.sparkContext.defaultParallelism)
-    except Exception:  # Spark Connect: no sparkContext
-        par = 32
+    par = max(8, session_width(spark))
     # NOTE (r13, measured and left): the edges cache has THREE
     # concurrent first-wave readers — deg is compiled into consts,
     # ranks0 AND edge_deg, so AQE's leaf query stages each hit the
@@ -225,11 +226,10 @@ def _bucketed_edge_deg(spark: SparkSession, sf_dir: str) -> str:
     from aw3d30_parquet_spark.operators.bucketing import (
         _drop_quietly,
         _reap_stale_b01,
-        _session_tag,
         write_bucketed,
     )
 
-    app = _session_tag(spark)
+    app = session_token(spark)
     key = (app, sf_dir)
     if key in _EDGE_TABLES:
         return _EDGE_TABLES[key]

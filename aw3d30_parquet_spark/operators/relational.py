@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aw3d30_parquet_spark.numeric import round_half_up
-from aw3d30_parquet_spark.session import register_views, spread
+from aw3d30_parquet_spark.session import register_views, session_width, spread
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2221,10 +2221,7 @@ def q75_rolling_distinct_users(
     ev = _t(spark, sf_dir, "events")
     # two consumers (contribution explode, dau): persist the daily
     # activity relation or the events scan + distinct runs twice
-    try:
-        par = max(8, spark.sparkContext.defaultParallelism)
-    except Exception:  # Spark Connect: no sparkContext
-        par = 32
+    par = max(8, session_width(spark))
     daily = _scratch_persist(
         "q75",
         ev.select(

@@ -13,8 +13,8 @@ paths, shuffle partitions sized for local test scale but overridable.
 
 from __future__ import annotations
 
-import itertools
 import os
+import uuid
 import weakref
 
 from pyspark.sql import SparkSession
@@ -165,84 +165,25 @@ def _package_zip() -> str:
     return _PACKAGE_ZIP
 
 
-#: Floor on per-task input bytes for spread()'s fan-out. Fanning a
-#: small input out to defaultParallelism makes every task carry a few
-#: KB: at that size the per-task fixed costs (launch, codegen instance
-#: setup, Arrow stream + Python-worker handshake on kernel stages)
-#: exceed the work itself, and with more concurrent tasks than
-#: effective cores the fixed costs additionally inflate superlinearly
-#: (measured r13: an identical JVM text kernel burned 5.9 s of task
-#: CPU across 32 thin tasks vs 0.42 s across 8 fat ones; the probe
-#: plateau was flat from ~64 KB/task up). Same logic as AQE's
-#: coalescePartitions.minPartitionSize (1 MB), re-derived for these
-#: CPU-dense kernels (~16x denser per byte than a plain aggregate),
-#: and applied here because AQE never coalesces an explicit
-#: repartition(n). Overridable for cluster tuning.
-SPREAD_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_BYTES_PER_TASK", str(64 * 1024))
-)
-
-#: Measured effective core count (memoized per process). None = not
-#: yet probed; 0 = probe failed, fall back to the nominal count.
-_EFFECTIVE_CORES: int | None = None
+#: Floor on per-task input bytes for spread()'s fan-out. Below it the
+#: per-task fixed costs (launch, codegen setup, the Arrow/Python-worker
+#: handshake on kernel stages) exceed the work: an identical JVM text
+#: kernel burned 5.9 s of task CPU across 32 thin tasks against 0.42 s
+#: across 8 fat ones, flat from ~64 KiB per task up (32 vCPU host). AQE's
+#: coalescePartitions.minPartitionSize plays the same part for shuffles,
+#: but AQE never coalesces an explicit repartition(n).
+SPREAD_BYTES_PER_TASK = 64 * 1024
 
 
-def effective_parallelism() -> int:
-    """MEASURED effective parallelism of this host — not the vCPU
-    count. Virtualized hosts routinely deliver fewer effective cores
-    than they advertise (this sandbox: a 32-process integer-loop probe
-    measures ~15-20× on 32 vCPUs post-reboot, r12/r13), and running
-    more concurrent compute-bound tasks than effective cores does not
-    merely queue them — per-task CPU inflates superlinearly (cache
-    thrash + scheduler churn; r12's driver measured mapInPandas paths
-    5-7× slower at 32 slots than at 8 on ~15 effective cores). The
-    probe: one fixed CPU burn single-process, then the same burn in
-    nominal-count concurrent processes; the scaling ratio IS the
-    effective core count. ~0.3 s, once per process, memoized — query
-    warm-up absorbs it, timed runs never see it. Overridable with
-    SPARK_GRAFT_EFFECTIVE_CORES (a cluster operator pins it; CI keeps
-    determinism).
-    """
-    global _EFFECTIVE_CORES
-    if _EFFECTIVE_CORES is None:
-        env = os.environ.get("SPARK_GRAFT_EFFECTIVE_CORES")
-        if env:
-            _EFFECTIVE_CORES = max(1, int(env))
-            return _EFFECTIVE_CORES
-        nominal = os.cpu_count() or 1
-        try:
-            import multiprocessing as mp
-            import time as _time
-
-            n = 2_000_000
-            # min over two measurements of each phase: transient JVM/GC
-            # activity in the host process inflates a single sample
-            # (observed ±30%); the min of each phase is the quiet-host
-            # estimate, and the quiet/quiet ratio is the stable one
-            singles, pars = [], []
-            ctx = mp.get_context("fork")
-            for _ in range(2):
-                t0 = _time.perf_counter()
-                _burn(n)
-                singles.append(_time.perf_counter() - t0)
-                with ctx.Pool(nominal) as pool:
-                    t0 = _time.perf_counter()
-                    pool.map(_burn, [n] * nominal)
-                    pars.append(_time.perf_counter() - t0)
-            _EFFECTIVE_CORES = max(
-                1,
-                min(nominal, round(nominal * min(singles) / min(pars))),
-            )
-        except Exception:
-            _EFFECTIVE_CORES = 0
-    return _EFFECTIVE_CORES or (os.cpu_count() or 1)
-
-
-def _burn(n: int) -> int:
-    s = 0
-    for i in range(n):
-        s += i * i
-    return s
+def session_width(spark: SparkSession) -> int:
+    """The session's task width: ``defaultParallelism`` (``local[N]``,
+    or the executors' total cores on a cluster), or 32 under Spark
+    Connect, whose sessions raise AttributeError for ``sparkContext``.
+    Every fan-out and cache width derives from it."""
+    try:
+        return spark.sparkContext.defaultParallelism
+    except AttributeError:
+        return 32
 
 
 def spread(df, min_partitions: int | None = None, dense: bool = False):
@@ -251,59 +192,41 @@ def spread(df, min_partitions: int | None = None, dense: bool = False):
 
     A small Parquet file arrives as ONE input split, so an expensive
     per-row stage (shingling, minhash, media decode, cosine) would run
-    on a single core regardless of cluster size. Round-robin
+    on a single core regardless of cluster size. A round-robin
     repartition costs one tiny shuffle of the (small) input and buys
-    parallelism. The fan-out target is derived, not the vCPU count
-    (guide §2.2 "scale-adaptive, not a constant tuned for local or
-    cluster"):
+    parallelism. The target is a function of the plan and the session
+    alone:
 
-    - capped at MEASURED effective parallelism (``effective_
-      parallelism()``): more concurrent compute tasks than effective
-      cores inflates per-task CPU superlinearly — the r12 driver's
-      32-slots-on-~15-cores collapse;
-    - and, unless ``dense=True``, floored at ``SPREAD_BYTES_PER_TASK``
-      input bytes per task: a task under the byte floor pays more in
-      launch/codegen/Arrow-handshake overhead than its work is worth
-      (measured r13: suite-wide, 32 thin tasks lost 20-60% wall vs
-      size-derived counts at sf0.1 under local[32]). ``dense=True``
-      declares a per-ROW Python codec/generator kernel (PNG/BMFF/WAV
-      fabrication: ~ms of CPU per row off a few bytes of id) whose
-      work the input-byte proxy underestimates ~100×; those sites get
-      the full effective-parallelism fan.
+        target = min(defaultParallelism, ceil(size / SPREAD_BYTES_PER_TASK))
 
-    Inputs big enough to hit the caps get every effective core; a
-    100 TB table's thousands of splits never enter (n_parts >= target
-    → no-op), so the policy is safe to leave on at scale.
+    where ``size`` is Catalyst's size estimate of ``df`` (no job).
+    ``dense=True`` drops the byte term: it declares a per-ROW Python
+    codec kernel (PNG/BMFF/WAV fabrication, ~ms of CPU per row off a
+    few bytes of id) whose work the byte proxy underestimates ~100×.
+    ``min_partitions`` overrides both. An input already split at least
+    ``target`` ways is returned unchanged, so a large table's thousands
+    of splits never shuffle.
     """
-    # Under Spark Connect there is no sparkContext, no _jdf, and no
-    # df.rdd (all raise) — no partition probe exists there, so return
-    # the plan unchanged: Connect clusters set sane AQE/split configs
-    # server-side, and a blind repartition would add a shuffle to the
-    # 100 TB case this helper exists to avoid.
+    # Under Spark Connect there is no sparkContext, no _jdf and no
+    # df.rdd (all raise), so no partition count can be read: return
+    # the plan unchanged rather than add a blind shuffle.
     try:
         sc = df.sparkSession.sparkContext
     except Exception:
         return df
-    target = min_partitions or min(
-        sc.defaultParallelism, effective_parallelism()
-    )
+    target = min_partitions or sc.defaultParallelism
     if min_partitions is None and not dense:
-        # Catalyst's own size estimate (file bytes for the base-table
-        # scans spread() fronts) — no job, ~free. Unknown sizes
-        # default to Long.Max-ish and keep the parallelism cap.
+        # Unknown sizes come back Long.Max-ish and keep the width cap.
         try:
             size = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
-            target = min(
-                target, -(-size // max(1, SPREAD_BYTES_PER_TASK)) or 1
-            )
+            target = min(target, -(-size // SPREAD_BYTES_PER_TASK) or 1)
         except Exception:
             pass
     # JVM-side internal-row RDD: same partition count as df.rdd but
     # without building the Python-serializer conversion plan (~2 ms vs
-    # ~0.3 s per fresh DataFrame — this probe runs on every family
-    # entry, so the difference is a measurable slice of the suite).
+    # ~0.3 s per fresh DataFrame).
     try:
         n_parts = df._jdf.queryExecution().toRdd().getNumPartitions()
     except AttributeError:
@@ -322,28 +245,27 @@ _REGISTERED: dict[SparkSession, str] = {}
 
 #: live session object → assigned token (see session_token). A weak
 #: mapping: the entry dies WITH the session, so a recycled id() can
-#: never resurrect a dead session's token (ADVICE r11 — the old
-#: f"connect_{id(spark):x}" fallback could serve a stale memo entry to
-#: a brand-new session whose object landed on a freed address).
+#: never resurrect a dead session's token (an id()-keyed token could
+#: serve a stale memo entry to a new session whose object landed on a
+#: freed address).
 _SESSION_TOKENS: "weakref.WeakKeyDictionary[SparkSession, str]" = (
     weakref.WeakKeyDictionary()
 )
-_TOKEN_SEQ = itertools.count()
 
 
 def session_token(spark: SparkSession) -> str:
-    """Stable identifier for (session, input-dir) memo keys — the p05
-    broadcast gate and the m06 candidate-volume gate cache one measured
-    scalar per session over an immutable sf_dir. Classic Spark: the
-    applicationId. Spark Connect (no sparkContext): a monotonically
-    assigned token held weakly against the session object, unique for
-    the object's lifetime and never reused after collection."""
+    """Stable identifier for per-session memo keys and for the names of
+    the session's scratch tables (b01, b02, l02). Classic Spark: the
+    applicationId. Spark Connect (no sparkContext): a random token held
+    weakly against the session object, unique for the object's lifetime,
+    never reused after collection, and distinct across client processes
+    that share one server's warehouse."""
     try:
         return spark.sparkContext.applicationId
-    except Exception:
+    except AttributeError:
         tok = _SESSION_TOKENS.get(spark)
         if tok is None:
-            tok = f"connect_{next(_TOKEN_SEQ)}"
+            tok = f"connect_{uuid.uuid4().hex}"
             _SESSION_TOKENS[spark] = tok
         return tok
 

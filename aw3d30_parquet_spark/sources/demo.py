@@ -23,10 +23,14 @@ from aw3d30_parquet_spark.sources.geotiff import read_tiles, tile_key
 
 DEMO_SIZE = 64
 DEMO_COORDS = ((51, 4), (52, 5))  # netherlands tiles (src/main.rs:71-74)
-_DEMO_DIR = os.path.join(
+#: Root of every demo fixture dir. Hidden itself, but each fixture's
+#: LEAF name must not start with "." or "_": Spark ignores such root
+#: paths as hidden (WARN DataSource: All paths were ignored).
+_DEMO_ROOT = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".demo_tiles",
+    ".demo",
 )
+_DEMO_DIR = os.path.join(_DEMO_ROOT, "tiles")
 
 
 def demo_band():
@@ -310,7 +314,7 @@ def g07_warp_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (separate dir: adding tiles to _DEMO_DIR would shift g01–g07's
 #: closed-form oracles).
 MOSAIC_COORDS = ((51, 4), (51, 5), (52, 4), (52, 5))
-_MOSAIC_DIR = _DEMO_DIR + "_mosaic"
+_MOSAIC_DIR = os.path.join(_DEMO_ROOT, "mosaic")
 
 
 #: g12 fixture: the same ramp band stored in the TILED + LZW +
@@ -319,7 +323,7 @@ _MOSAIC_DIR = _DEMO_DIR + "_mosaic"
 #: and coords so g01–g07's closed-form oracles never shift; france
 #: coords keep the region filter exercised on a different REGION_SET.
 TILED_COORDS = ((45, 2), (43, 7))
-_TILED_DIR = _DEMO_DIR + "_tiled"
+_TILED_DIR = os.path.join(_DEMO_ROOT, "tiled")
 
 
 def g12_tiled_lzw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,7 +447,7 @@ GRID_COORDS = tuple(
     (la, lo) for la in range(40, 47) for lo in range(10, 17)
 )
 GRID_BOX = {"lat": (41, 46), "lon": (11, 16)}  # inclusive survivors
-_GRID_DIR = _DEMO_DIR + "_grid"
+_GRID_DIR = os.path.join(_DEMO_ROOT, "grid")
 
 
 def g10_datasource_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -494,7 +498,7 @@ _G10_ROWS = ",\n".join(
 #: resample branch (geotiff.py) under the driver contract, not just
 #: pytest.
 MIXED_COORDS = (((52, 4), 64), ((52, 5), 32))
-_MIXED_DIR = _DEMO_DIR + "_mixedres"
+_MIXED_DIR = os.path.join(_DEMO_ROOT, "mixedres")
 
 
 def _ensure_mixed_tiles(tif_dir: str = _MIXED_DIR) -> str:

@@ -17,7 +17,8 @@ pipeline). The ingest fuses it with a ``mapInArrow`` kernel that decodes
 each tile and writes that tile's Parquet file in the task
 (:mod:`~aw3d30_parquet_spark.sources.sink`); :func:`read_tiles` fuses it
 with a ``mapInPandas`` decode that yields bounded Arrow batches of
-points. Both kernels share one per-tile loop (:func:`_decoded_tiles`).
+points. Every tile kernel (ingest, decode, halo, gradient) shares one
+per-tile loop (:func:`_decoded_tiles`).
 At 100 TB (~31 000 real tiles × 13M rows) the ingest is a single
 embarrassingly-parallel stage: scan → decode → write, with partition
 pruning on ``tile_lat``/``tile_lon`` replacing the reference's
@@ -26,6 +27,7 @@ filename-encoded partitioning.
 
 from __future__ import annotations
 
+import itertools
 import os
 import re
 from typing import Iterable, Iterator
@@ -130,8 +132,9 @@ def tiles_for_set(set_name: str) -> list[tuple[int, int]]:
 
 
 def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
-    """The per-tile loop every ingest kernel shares: ``(path, content)``
-    pairs → ``(coord, band, geotransform)`` for each decodable tile.
+    """The per-tile loop every tile kernel shares: ``(path, content,
+    *extra)`` rows → ``(coord, band, geotransform, *extra)`` for each
+    decodable tile.
 
     A malformed key is rejected like the reference's parse
     (``src/main.rs:131``). ``on_corrupt``: 'fail' raises on undecodable
@@ -141,7 +144,7 @@ def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
     must not kill hours of work — re-runs pick up skipped tiles for free
     via the idempotent sink).
     """
-    for path, content in rows:
+    for path, content, *extra in rows:
         coord = parse_tile_key(os.path.basename(str(path)))
         if coord is None:
             continue
@@ -151,7 +154,7 @@ def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
             if on_corrupt == "fail":
                 raise
             continue
-        yield coord, band, gt
+        yield (coord, band, gt, *extra)
 
 
 def _decode_partition(batches: Iterable, chunk_rows: int, on_corrupt: str) -> Iterator:
@@ -195,56 +198,6 @@ GRADIENT_SCHEMA = StructType(
         StructField("dzdy", DoubleType(), False),
     ]
 )
-
-
-def _gradient_partition(batches: Iterable, chunk_rows: int) -> Iterator:
-    """mapInPandas kernel: (path, content) tile rows → per-cell gradient.
-
-    ``np.gradient`` central differences (one-sided at tile borders) over
-    the decoded band, in elevation units per pixel step — entirely
-    tile-local, so the whole slope layer is computed without any
-    shuffle: the neighborhood a derivative needs is exactly the
-    neighborhood a tile already holds. (Cross-tile seams use one-sided
-    differences, the standard single-tile treatment; stitching seams
-    would need a 1-px halo exchange — a different operator.)
-    """
-    import numpy as np
-    import pandas as pd
-
-    for pdf in batches:
-        for path, content in zip(pdf["path"], pdf["content"]):
-            coord = parse_tile_key(os.path.basename(str(path)))
-            if coord is None:
-                continue
-            band, gt = decode_geotiff(bytes(content))
-            b = band.astype(np.float64)
-            # np.gradient needs ≥2 samples per axis; a degenerate
-            # 1-wide/1-tall raster has zero slope along that axis
-            dzdy_grid = (
-                np.gradient(b, axis=0) if b.shape[0] > 1 else np.zeros_like(b)
-            )
-            dzdx_grid = (
-                np.gradient(b, axis=1) if b.shape[1] > 1 else np.zeros_like(b)
-            )
-            height, width = band.shape
-            x = np.arange(width, dtype=np.float64)
-            rows_per_chunk = max(1, chunk_rows // width)
-            for y0 in range(0, height, rows_per_chunk):
-                y1 = min(y0 + rows_per_chunk, height)
-                yy = np.arange(y0, y1, dtype=np.float64)
-                lon = (gt[0] + x * gt[1])[None, :] + (yy * gt[2])[:, None]
-                lat = (x * gt[4])[None, :] + (gt[3] + yy * gt[5])[:, None]
-                n = (y1 - y0) * width
-                yield pd.DataFrame(
-                    {
-                        "tile_lat": np.full(n, coord[0], dtype="int32"),
-                        "tile_lon": np.full(n, coord[1], dtype="int32"),
-                        "lat": np.broadcast_to(lat, (y1 - y0, width)).reshape(n),
-                        "lon": np.broadcast_to(lon, (y1 - y0, width)).reshape(n),
-                        "dzdx": dzdx_grid[y0:y1].reshape(n),
-                        "dzdy": dzdy_grid[y0:y1].reshape(n),
-                    }
-                )
 
 
 def _key_coord_cols() -> tuple:
@@ -370,7 +323,9 @@ def read_tile_gradients(
 
     Same plan shape as :func:`read_tiles` — a binaryFile scan of the
     region's listed tiles fused with a mapInPandas kernel, one task per
-    tile, zero Exchanges."""
+    tile, zero Exchanges. Tile-local: cells on a tile border take
+    one-sided differences (:func:`read_tile_gradients_seamless` stitches
+    the seams)."""
     files = _tile_files(spark, tile_paths(spark, tif_dir, set_name))
     return files.mapInPandas(
         lambda it: _gradient_partition(it, chunk_rows),
@@ -387,12 +342,8 @@ def _halo_partition(batches: Iterable) -> Iterator:
 
     for pdf in batches:
         rows = {"dla": [], "dlo": [], "side": [], "vals": []}
-        for path, content in zip(pdf["path"], pdf["content"]):
-            coord = parse_tile_key(os.path.basename(str(path)))
-            if coord is None:
-                continue
-            band, _gt = decode_geotiff(bytes(content))
-            la, lo = coord
+        tiles = _decoded_tiles(zip(pdf["path"], pdf["content"]), "fail")
+        for (la, lo), band, _gt in tiles:
             # row 0 is the tile's TOP (north) edge: it is the north
             # neighbor's bottom halo, and so on around the compass
             for dla, dlo, side, vals in (
@@ -408,106 +359,89 @@ def _halo_partition(batches: Iterable) -> Iterator:
         yield pd.DataFrame(rows)
 
 
-def _seamless_gradient_partition(batches: Iterable, chunk_rows: int) -> Iterator:
-    """mapInPandas kernel: (path, content, 4 nullable halo arrays) →
-    per-cell gradient with CENTRAL differences across tile seams.
+#: The four tile edges, in the order the halo columns are read.
+_HALO_SIDES = ("top", "bottom", "left", "right")
 
-    The decoded band is padded with whichever neighbor borders exist,
-    ``np.gradient`` runs over the padded array, and the core slice is
-    emitted — so interior-of-mosaic seams get true central differences
-    while mosaic-boundary edges keep the standard one-sided form
-    (exactly what a single global raster would produce)."""
-    import numpy as np
+
+def _padded_gradients(coord, band, halos: dict) -> tuple:
+    """``(dzdx, dzdy)`` of ``band`` in elevation units per pixel step,
+    padded with whichever neighbor borders ``halos`` holds (side → int
+    array or None) and cut back to the band's own cells."""
+    h, w = band.shape
+    pads = {
+        s: None if v is None else np.asarray(v, dtype=np.int32)
+        for s, v in halos.items()
+    }
+    # A neighbor's halo arrives at the NEIGHBOR's resolution: real
+    # AW3D30 narrows tiles at high latitude (a 60°N tile is 1800 px wide
+    # against its 3600 px south neighbor; ref src/main.rs:172-180 ingests
+    # whatever dims GDAL reports), so mismatched lengths can be a
+    # legitimate mosaic. Both edges span the same 1° of geography, so a
+    # plausible mismatch is resampled nearest-neighbor via the pixel-
+    # CENTER index map (receiver pixel i ↔ donor pixel
+    # floor((i+0.5)·got/need)); a [:need] truncation would misalign every
+    # sample. Plausible means an integer factor (2, 3, 6) or the
+    # 1800:1200 tier adjacency (3:2) between the AW3D30 tiers
+    # 3600/1800/1200/600 px per degree, with ≥2 samples. Anything else —
+    # above all the off-by-one 3599-vs-3600 shape of a truncated halo —
+    # is corruption that resampling would smear into the seam gradients,
+    # so it fails loudly.
+    for side, need in (("top", w), ("bottom", w), ("left", h), ("right", h)):
+        got = pads[side]
+        if got is not None and len(got) != need:
+            lo, hi = sorted((len(got), need))
+            plausible = lo >= 2 and (hi % lo == 0 or hi * 2 == lo * 3)
+            if not plausible:
+                raise ValueError(
+                    f"tile {coord}: {side} halo has "
+                    f"{len(got)} samples against a {need}-px "
+                    "edge — not a known AW3D30 resolution "
+                    "ratio; refusing to resample a likely "
+                    "corrupt halo"
+                )
+            centers = (np.arange(need, dtype=np.float64) + 0.5) * (len(got) / need)
+            idx = np.minimum(centers.astype(np.int64), len(got) - 1)
+            pads[side] = got[idx]
+    top = 1 if pads["top"] is not None else 0
+    bot = 1 if pads["bottom"] is not None else 0
+    left = 1 if pads["left"] is not None else 0
+    right = 1 if pads["right"] is not None else 0
+    padded = np.zeros((h + top + bot, w + left + right), np.float64)
+    padded[top : top + h, left : left + w] = band
+    if top:
+        padded[0, left : left + w] = pads["top"]
+    if bot:
+        padded[-1, left : left + w] = pads["bottom"]
+    if left:
+        padded[top : top + h, 0] = pads["left"]
+    if right:
+        padded[top : top + h, -1] = pads["right"]
+    # np.gradient needs ≥2 samples per axis; a degenerate 1-wide/1-tall
+    # raster has zero slope along that axis
+    dzdy = np.gradient(padded, axis=0) if padded.shape[0] > 1 else np.zeros_like(padded)
+    dzdx = np.gradient(padded, axis=1) if padded.shape[1] > 1 else np.zeros_like(padded)
+    core = (slice(top, top + h), slice(left, left + w))
+    return dzdx[core], dzdy[core]
+
+
+def _gradient_partition(batches: Iterable, chunk_rows: int) -> Iterator:
+    """mapInPandas kernel: ``(path, content[, halo_top, halo_bottom,
+    halo_left, halo_right])`` tile rows → per-cell gradient.
+
+    ``np.gradient`` runs over each decoded band padded with whichever
+    neighbor borders its row carries (:func:`_padded_gradients`), so
+    interior-of-mosaic seams get true CENTRAL differences while edges
+    without a halo keep the standard one-sided form — exactly what a
+    single global raster would produce. A batch with no halo columns
+    (:func:`read_tile_gradients`) is the tile-local slope layer."""
     import pandas as pd
 
     for pdf in batches:
-        for i in range(len(pdf)):
-            path = str(pdf["path"].iloc[i])
-            coord = parse_tile_key(os.path.basename(path))
-            if coord is None:
-                continue
-            band, gt = decode_geotiff(bytes(pdf["content"].iloc[i]))
+        halo_cols = [pdf.get(f"halo_{s}", itertools.repeat(None)) for s in _HALO_SIDES]
+        rows = zip(pdf["path"], pdf["content"], *halo_cols)
+        for coord, band, gt, *halos in _decoded_tiles(rows, "fail"):
+            dzdx, dzdy = _padded_gradients(coord, band, dict(zip(_HALO_SIDES, halos)))
             h, w = band.shape
-            halos = {
-                side: pdf[f"halo_{side}"].iloc[i]
-                for side in ("top", "bottom", "left", "right")
-            }
-            pads = {
-                s: None if v is None else np.asarray(v, dtype=np.int32)
-                for s, v in halos.items()
-            }
-            # a neighbor's halo arrives at the NEIGHBOR's resolution;
-            # real AW3D30 narrows tiles at high latitude (a 60°N tile
-            # is 1800 px wide against its 3600 px south neighbor —
-            # ref src/main.rs:172-180 ingests whatever dims GDAL
-            # reports), so mismatched lengths are a legitimate mosaic,
-            # not corruption. Both edges span the same 1° of geography:
-            # nearest-neighbor resample via the pixel-CENTER index map
-            # (receiver pixel i's center ↔ donor pixel
-            # floor((i+0.5)·got/need)) — a silent [:need] truncation
-            # would instead misalign every sample positionally. A halo
-            # with <2 samples has no defined grid — that layout is
-            # genuinely unknown, keep failing loudly.
-            # Resample only PLAUSIBLE resolution mismatches. Real
-            # AW3D30 tiers are 3600/1800/1200/600 px per degree, so a
-            # legitimate neighbor edge differs by an integer factor
-            # (2, 3, 6) or the 1800:1200 tier adjacency (3:2). Any
-            # other mismatch — above all the off-by-one 3599-vs-3600
-            # shape of a truncated or mis-exchanged halo — is
-            # corruption that nearest-neighbor stretching would
-            # silently smear into the seam gradients: keep failing
-            # loudly for those.
-            for side, need in (
-                ("top", w), ("bottom", w), ("left", h), ("right", h)
-            ):
-                got = pads[side]
-                if got is not None and len(got) != need:
-                    lo, hi = sorted((len(got), need))
-                    plausible = lo >= 2 and (
-                        hi % lo == 0 or hi * 2 == lo * 3
-                    )
-                    if not plausible:
-                        raise ValueError(
-                            f"tile {coord}: {side} halo has "
-                            f"{len(got)} samples against a {need}-px "
-                            "edge — not a known AW3D30 resolution "
-                            "ratio; refusing to resample a likely "
-                            "corrupt halo"
-                        )
-                    idx = np.minimum(
-                        (
-                            (np.arange(need, dtype=np.float64) + 0.5)
-                            * (len(got) / need)
-                        ).astype(np.int64),
-                        len(got) - 1,
-                    )
-                    pads[side] = got[idx]
-            top = 1 if pads["top"] is not None else 0
-            bot = 1 if pads["bottom"] is not None else 0
-            left = 1 if pads["left"] is not None else 0
-            right = 1 if pads["right"] is not None else 0
-            padded = np.zeros((h + top + bot, w + left + right), np.float64)
-            padded[top : top + h, left : left + w] = band
-            if top:
-                padded[0, left : left + w] = pads["top"]
-            if bot:
-                padded[-1, left : left + w] = pads["bottom"]
-            if left:
-                padded[top : top + h, 0] = pads["left"]
-            if right:
-                padded[top : top + h, -1] = pads["right"]
-            dzdy_p = (
-                np.gradient(padded, axis=0)
-                if padded.shape[0] > 1
-                else np.zeros_like(padded)
-            )
-            dzdx_p = (
-                np.gradient(padded, axis=1)
-                if padded.shape[1] > 1
-                else np.zeros_like(padded)
-            )
-            dzdy_grid = dzdy_p[top : top + h, left : left + w]
-            dzdx_grid = dzdx_p[top : top + h, left : left + w]
             x = np.arange(w, dtype=np.float64)
             rows_per_chunk = max(1, chunk_rows // w)
             for y0 in range(0, h, rows_per_chunk):
@@ -522,8 +456,8 @@ def _seamless_gradient_partition(batches: Iterable, chunk_rows: int) -> Iterator
                         "tile_lon": np.full(n, coord[1], dtype="int32"),
                         "lat": np.broadcast_to(lat, (y1 - y0, w)).reshape(n),
                         "lon": np.broadcast_to(lon, (y1 - y0, w)).reshape(n),
-                        "dzdx": dzdx_grid[y0:y1].reshape(n),
-                        "dzdy": dzdy_grid[y0:y1].reshape(n),
+                        "dzdx": dzdx[y0:y1].reshape(n),
+                        "dzdy": dzdy[y0:y1].reshape(n),
                     }
                 )
 
@@ -536,7 +470,7 @@ def read_tile_gradients_seamless(
 ) -> DataFrame:
     """Cross-tile SEAMLESS gradient via halo exchange — the distributed
     raster pattern the per-tile form (:func:`read_tile_gradients`)
-    documents as out of scope: every tile receives its 4 edge-neighbors'
+    leaves out: every tile receives its 4 edge-neighbors'
     border rows/cols, so seam cells get true central differences and
     the mosaic differentiates as ONE raster.
 
@@ -561,7 +495,7 @@ def read_tile_gradients_seamless(
             F.first(
                 F.when(F.col("side") == s, F.col("vals")), ignorenulls=True
             ).alias(f"halo_{s}")
-            for s in ("top", "bottom", "left", "right")
+            for s in _HALO_SIDES
         ]
     )
     key_lat, key_lon, _valid = _key_coord_cols()
@@ -579,7 +513,7 @@ def read_tile_gradients_seamless(
         "halo_right",
     )
     return joined.mapInPandas(
-        lambda it: _seamless_gradient_partition(it, chunk_rows),
+        lambda it: _gradient_partition(it, chunk_rows),
         schema=GRADIENT_SCHEMA,
     )
 

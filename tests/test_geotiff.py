@@ -458,6 +458,18 @@ def test_g01_ingest_oracle(spark, duck_t2):
     assert ok, (h1, h2)
 
 
+def test_demo_dirs_are_not_hidden():
+    """Spark treats a root path whose leaf name starts with "." or "_"
+    as hidden and logs "All paths were ignored" on every listing of it;
+    no demo fixture dir may have such a leaf."""
+    from aw3d30_parquet_spark.sources import demo
+
+    dirs = [demo._DEMO_DIR, demo._MOSAIC_DIR, demo._TILED_DIR, demo._GRID_DIR, demo._MIXED_DIR]
+    assert len(set(dirs)) == 5
+    for d in dirs:
+        assert not os.path.basename(d).startswith((".", "_")), d
+
+
 def test_g12_tiled_lzw_ingest_oracle(spark, duck_t2):
     """The tiled+LZW+predictor-2 ingest query (g12) hash-matches the
     same closed-form ramp aggregates as g01 — the driver-contract

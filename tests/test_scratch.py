@@ -197,16 +197,21 @@ def test_memo_age_expiry(spark):
     scratch.release_all()
 
 
-def test_session_token_stable_and_gc_safe(spark):
+def test_session_token_stable_and_gc_safe(spark, monkeypatch):
     """session_token: applicationId on classic Spark; on sessions with
     no sparkContext (the Connect shape) a weakly-held token that (a) is
     stable across calls for the same live object and (b) can never be
     served to a DIFFERENT object that lands on a recycled id() after
-    the first is garbage-collected (ADVICE r11 — the old id()-keyed
-    fallback could)."""
+    the first is garbage-collected (an id()-keyed fallback could). The
+    edit-distance memo (dedup._ed_memo) is keyed on it, so a new
+    session never gets a dead session's memo either."""
     import gc
 
-    from aw3d30_parquet_spark.session import session_token
+    from aw3d30_parquet_spark.functions import dedup
+    from aw3d30_parquet_spark.session import session_token, session_width
+
+    monkeypatch.setattr(dedup, "_ED_MEMO", {})
+    monkeypatch.setattr(scratch, "memo_touch", lambda group, release: None)
 
     assert session_token(spark) == spark.sparkContext.applicationId
 
@@ -219,6 +224,9 @@ def test_session_token_stable_and_gc_safe(spark):
     tok_a = session_token(a)
     assert tok_a == session_token(a)  # stable for the live object
     assert tok_a.startswith("connect_")
+    assert session_width(a) == 32
+    dedup._ed_memo(a, "sf")["docs"] = "a's relation"
+    assert dedup._ed_memo(a, "sf") == {"docs": "a's relation"}
     seen = {tok_a}
     # churn allocations so a fresh session object reuses a's address
     del a
@@ -227,54 +235,132 @@ def test_session_token_stable_and_gc_safe(spark):
         b = FakeConnectSession()
         tok_b = session_token(b)
         assert tok_b not in seen  # never a dead session's token
+        assert dedup._ed_memo(b, "sf") == {}  # nor its memo
+        dedup._ed_memo(b, "sf")["docs"] = "b's relation"
         seen.add(tok_b)
         del b
 
 
-def test_spread_is_size_derived_and_parallelism_capped(spark, monkeypatch):
-    """r13: spread()'s fan-out is derived, not the vCPU count — a
-    small input gets ceil(bytes / SPREAD_BYTES_PER_TASK) tasks, capped
-    at min(defaultParallelism, measured effective parallelism), and
-    dense=True (per-row codec kernels whose work the input-byte proxy
-    underestimates ~100x) skips the byte floor but keeps the caps. An
-    input already split wider than the target is untouched (the 100 TB
-    no-op guarantee)."""
-    import aw3d30_parquet_spark.session as sess
-    from aw3d30_parquet_spark.session import register_views, spread
+def test_spread_is_size_derived_and_parallelism_capped(spark):
+    """spread()'s fan-out is min(defaultParallelism, ceil(plan bytes /
+    64 KiB)); dense=True (per-row codec kernels whose work the byte
+    proxy underestimates ~100x) takes defaultParallelism; an explicit
+    min_partitions overrides both."""
+    import math
+
+    from aw3d30_parquet_spark.session import (
+        SPREAD_BYTES_PER_TASK,
+        register_views,
+        session_width,
+        spread,
+    )
 
     register_views(spark, "/root/testdata/sf0.1")
-    monkeypatch.setattr(sess, "_EFFECTIVE_CORES", 6)
     dp = spark.sparkContext.defaultParallelism
+    assert session_width(spark) == dp
+    assert SPREAD_BYTES_PER_TASK == 64 * 1024
 
     def n_parts(df):
         return df._jdf.queryExecution().toRdd().getNumPartitions()
 
-    docs = spark.table("documents")  # ~580 KB => byte floor ~10 tasks
-    assert n_parts(spread(docs)) == min(dp, 6, 10)
-    assert n_parts(spread(docs, dense=True)) == min(dp, 6)
-    # explicit min_partitions bypasses both derivations
+    def plan_bytes(df):
+        return int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+
+    docs = spark.table("documents")  # ~580 KB in one split
+    ids = docs.select("doc_id")  # a few KB: the byte term binds
+    assert n_parts(docs) == n_parts(ids) == 1
+    for df in (docs, ids):
+        want = min(dp, math.ceil(plan_bytes(df) / SPREAD_BYTES_PER_TASK))
+        assert n_parts(spread(df)) == max(1, want)
+    assert n_parts(spread(docs, dense=True)) == dp
+    assert n_parts(spread(ids, dense=True)) == dp
     assert n_parts(spread(docs, min_partitions=3)) == 3
-    # a tiny projected input still gets >= 1 task and never errors
-    ids = docs.select("doc_id")
-    assert 1 <= n_parts(spread(ids)) <= min(dp, 6)
-    # effective-cores cap: with a wide-open measurement the byte floor
-    # is what binds for the small input
-    monkeypatch.setattr(sess, "_EFFECTIVE_CORES", 1024)
-    assert n_parts(spread(docs)) == min(dp, 10)
 
 
-def test_effective_parallelism_probe_bounds(monkeypatch):
-    """The probe returns a sane bound: 1 <= eff <= nominal, honors the
-    SPARK_GRAFT_EFFECTIVE_CORES override, and memoizes."""
+#: Runs spread() in a fresh interpreter on a stub of the DataFrame
+#: surface it reads, with every fork path of multiprocessing raising,
+#: and prints each case's partition count twice.
+_SPREAD_NO_PROBE = r"""
+import json, multiprocessing, sys
+
+
+def _no_fork(*args, **kwargs):
+    raise RuntimeError("spread() must not start processes")
+
+
+multiprocessing.get_context = _no_fork
+multiprocessing.Pool = _no_fork
+
+from aw3d30_parquet_spark.session import spread
+
+
+class Plan:
+    # the slice of a DataFrame spread() reads: session width, plan
+    # size estimate, partition count, repartition
+    def __init__(self, size, parts, width):
+        self.size, self.parts, self.defaultParallelism = size, parts, width
+        self.sparkSession = self.sparkContext = self._jdf = self
+
+    def queryExecution(self):
+        return self
+
+    optimizedPlan = stats = toRdd = queryExecution
+
+    def sizeInBytes(self):
+        return self.size
+
+    def getNumPartitions(self):
+        return self.parts
+
+    def repartition(self, n):
+        return Plan(self.size, n, self.defaultParallelism)
+
+
+out = []
+for size, width, dense in json.loads(sys.argv[1]):
+    out.append([
+        spread(Plan(size, 1, width), dense=dense).getNumPartitions()
+        for _ in range(2)
+    ])
+print(json.dumps(out))
+"""
+
+
+def test_spread_count_is_a_function_of_plan_and_width():
+    """spread() runs no host probe: with multiprocessing unable to start
+    a process and no SPARK_GRAFT_* variable set, every count is
+    min(width, ceil(bytes / 64 KiB)) (width alone for dense=True) and
+    the same on a repeat call, for widths above and below this host's
+    core count."""
+    import json
+    import math
     import os
+    import subprocess
 
-    import aw3d30_parquet_spark.session as sess
-
-    monkeypatch.setattr(sess, "_EFFECTIVE_CORES", None)
-    monkeypatch.setenv("SPARK_GRAFT_EFFECTIVE_CORES", "7")
-    assert sess.effective_parallelism() == 7
-    monkeypatch.setattr(sess, "_EFFECTIVE_CORES", None)
-    monkeypatch.delenv("SPARK_GRAFT_EFFECTIVE_CORES")
-    eff = sess.effective_parallelism()
-    assert 1 <= eff <= (os.cpu_count() or 1)
-    assert sess.effective_parallelism() == eff  # memoized
+    wide = 4 * (os.cpu_count() or 1) + 3
+    cases = [
+        (100 * 1024 * 1024, wide, False),  # width binds
+        (100 * 1024 * 1024, 3, False),
+        (200 * 1024, wide, False),  # bytes bind: 4 tasks
+        (10, wide, False),  # never below one task
+        (10, wide, True),  # dense: width
+    ]
+    env = {k: v for k, v in os.environ.items() if not k.startswith("SPARK_GRAFT_")}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _SPREAD_NO_PROBE, json.dumps(cases)],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    want = [
+        w if dense else min(w, max(1, math.ceil(size / (64 * 1024))))
+        for size, w, dense in cases
+    ]
+    assert got == [[n, n] for n in want]
