@@ -54,10 +54,13 @@ def _install_worker_import_hook() -> None:
     ``pyspark.zip`` holds one importer per sub-package: ~16 reads of a
     1,328-entry directory per task, most of a reused worker's fixed CPU
     cost. Here the directory zipimport caches for each archive carries the
-    ``stat`` stamp taken before the read that filled it; an importer whose
-    archive still has that stamp takes the cached directory, which is what
-    a re-read would return, and the original re-read runs only when the
-    stamp changed or the ``stat`` failed. A rewritten archive is therefore
+    ``stat`` stamp taken before the read that filled it, whether that read
+    was a re-read or the first read of an importer created after install
+    (such as the one for the ``addPyFile`` package zip on a worker's path,
+    which the worker may first open long after its first task); an
+    importer whose archive still has that stamp takes the cached
+    directory, which is what a re-read would return, and the original
+    re-read runs only when the stamp changed or the ``stat`` failed. A rewritten archive is therefore
     still picked up on the next task. The archives already imported from
     are read once at install, so no later task pays for a first read.
 
@@ -75,25 +78,35 @@ def _install_worker_import_hook() -> None:
     if getattr(original, "_stat_validated", False):
         return
     read_stamps: dict[str, tuple | None] = {}  # archive → stamp of its cached read
+    read_directory = zipimport._read_directory
+
+    def stamp_of(archive: str) -> tuple | None:
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+
+    def stamped_read_directory(archive: str):
+        # stamped before the read: a write racing the read leaves a stamp
+        # that no longer matches, so the next call reads again
+        stamp = stamp_of(archive)
+        files = read_directory(archive)
+        read_stamps[archive] = stamp
+        return files
 
     def invalidate_caches(self) -> None:
-        try:
-            st = os.stat(self.archive)
-            stamp = (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
-        except OSError:
-            stamp = None
+        stamp = stamp_of(self.archive)
         cached = zipimport._zip_directory_cache.get(self.archive)
         unchanged = stamp is not None and read_stamps.get(self.archive) == stamp
         if unchanged and cached is not None:
             self._files = cached
             return
-        # stamped before the read: a write racing the read leaves a stamp
-        # that no longer matches, so the next call reads again
         original(self)
-        read_stamps[self.archive] = stamp
 
     invalidate_caches._stat_validated = True
     zipimporter.invalidate_caches = invalidate_caches
+    zipimport._read_directory = stamped_read_directory
     for finder in list(sys.path_importer_cache.values()):
         if isinstance(finder, zipimporter):
             finder.invalidate_caches()

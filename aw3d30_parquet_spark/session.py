@@ -1,8 +1,12 @@
 """SparkSession factory and testdata catalog registration.
 
 The reference's "catalog" is an S3 key listing (reference
-``src/main.rs:265-331``); ours is a set of Parquet-backed temp views over
-the driver testdata, registered once per (session, sf_dir).
+``src/main.rs:265-331``) with its Parquet schema declared in code
+(``src/main.rs:273-293``); ours is a set of Parquet-backed temp views
+over the driver testdata, registered once per (session, sf_dir). Each
+view's schema is read from its file's Parquet footer on the driver, so
+registration runs no Spark job; a table stored as a directory of part
+files keeps Spark's schema inference.
 
 Scale posture: every config here is chosen to survive a 1000-executor
 cluster, not just local[32] — AQE on (runtime re-planning, skew joins,
@@ -17,7 +21,9 @@ import os
 import uuid
 import weakref
 
+from pyspark.errors import AnalysisException, PySparkTypeError
 from pyspark.sql import SparkSession
+from pyspark.sql.types import LongType, StructField, StructType
 
 TABLES = (
     "region",
@@ -98,9 +104,10 @@ def apply_runtime_confs(spark: SparkSession) -> None:
     for k, v in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Conf may be static on some builds; registration still
-            # proceeds — the reads below will surface a real error.
+        except AnalysisException:
+            # CANNOT_MODIFY_CONFIG: a conf pinned static by the session's
+            # build; registration still proceeds — the reads below will
+            # surface a real error.
             pass
     ship_package(spark)
 
@@ -123,16 +130,16 @@ def ship_package(spark: SparkSession) -> None:
     ``spark-submit --py-files`` uses on a 1000-executor cluster. One
     zip per process, a few tens of KB, built once (:func:`_package_zip`).
     """
-    key = spark.sparkContext.applicationId
-    if key in _SHIPPED:
-        return
     try:
-        spark.sparkContext.addPyFile(_package_zip())
-    except Exception:
+        sc = spark.sparkContext
+    except AttributeError:
         # Spark Connect sessions have no sparkContext; UDFs are shipped
         # via the Connect artifact channel instead.
-        pass
-    _SHIPPED.add(key)
+        return
+    if sc.applicationId in _SHIPPED:
+        return
+    sc.addPyFile(_package_zip())
+    _SHIPPED.add(sc.applicationId)
 
 
 #: Path of this process's package zip; None until first built.
@@ -238,10 +245,12 @@ def spread(df, min_partitions: int | None = None, dense: bool = False):
 
 #: session → sf_dir currently registered (testdata is immutable, so
 #: re-registration is only needed when the sf_dir changes). Keyed on
-#: the session OBJECT (temp views are per session, not per context);
-#: the strong reference also prevents the id-recycling hazard a bare
-#: id() key would have.
-_REGISTERED: dict[SparkSession, str] = {}
+#: the session OBJECT (temp views are per session, not per context),
+#: weakly: a stopped session and its JVM state are not kept alive, and
+#: the entry dies with the session, so a recycled id() cannot inherit it.
+_REGISTERED: "weakref.WeakKeyDictionary[SparkSession, str]" = (
+    weakref.WeakKeyDictionary()
+)
 
 #: live session object → assigned token (see session_token). A weak
 #: mapping: the entry dies WITH the session, so a recycled id() can
@@ -270,8 +279,61 @@ def session_token(spark: SparkSession) -> str:
         return tok
 
 
+def _footer_schema(path: str) -> StructType | None:
+    """The schema Spark's Parquet reader gives the single file ``path``,
+    built from its footer on the driver: no Spark job.
+
+    Arrow types convert with ``from_arrow_type(prefer_timestamp_ntz=
+    True)`` — TIMESTAMP(isAdjustedToUTC=false) reads as TIMESTAMP_NTZ, as
+    Spark infers it — except a top-level TIMESTAMP(NANOS), which reads as
+    bigint under the session's ``spark.sql.legacy.parquet.nanosAsLong``.
+    Returns None, for Spark to infer the schema, where the footer holds a
+    type this conversion would read differently: INT96 (which pyarrow
+    also calls ``timestamp[ns]``), a nested TIMESTAMP(NANOS), a duration
+    (its Arrow type comes from the stored Arrow schema; Spark reads the
+    bare INT64), or a type with no Arrow→Spark mapping (unsigned ints).
+    """
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    def nanos(t) -> bool:
+        return pa.types.is_timestamp(t) and t.unit == "ns"
+
+    def leaves(t):
+        if t.num_fields == 0:
+            yield t
+        for i in range(t.num_fields):
+            yield from leaves(t.field(i).type)
+
+    footer = pq.read_metadata(path).schema
+    if any(footer.column(i).physical_type == "INT96" for i in range(len(footer))):
+        return None
+    fields = []
+    for f in footer.to_arrow_schema():
+        if nanos(f.type):
+            fields.append(StructField(f.name, LongType()))
+            continue
+        if any(nanos(t) or pa.types.is_duration(t) for t in leaves(f.type)):
+            return None
+        try:
+            spark_type = from_arrow_type(f.type, prefer_timestamp_ntz=True)
+        except PySparkTypeError:
+            return None
+        fields.append(StructField(f.name, spark_type))
+    return StructType(fields)
+
+
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register the ten testdata Parquet tables as temp views.
+    """Register the ten testdata Parquet tables as temp views, running no
+    Spark job.
+
+    Each table's schema comes from its Parquet footer (_footer_schema),
+    read on the driver, and is declared to the reader, so Spark skips
+    its schema-inference job (one per table). A table stored as a
+    directory of part files, or whose footer holds a type the footer
+    conversion does not cover, falls back to Spark's inference. Every
+    bundled testdata table is a single file.
 
     ``events`` is schema-conditional: only when its ``ts`` column reads
     as bigint (nanos-as-long generation) is it registered through the
@@ -289,7 +351,9 @@ def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
-        df = spark.read.parquet(path)
+        schema = _footer_schema(path) if os.path.isfile(path) else None
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
             # nanos-as-long generation: convert through the view
             df.createOrReplaceTempView("events_raw")

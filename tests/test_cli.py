@@ -3,9 +3,13 @@ binary's option surface (src/main.rs:42-66: tif dir, parquet dir, set)."""
 
 from __future__ import annotations
 
+import os
+
 import duckdb
 
 from aw3d30_parquet_spark.__main__ import main
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_cli_ingest_demo_writes_partition_tree(spark, tmp_path, capsys):
@@ -44,7 +48,7 @@ def test_cli_ingest_demo_writes_partition_tree(spark, tmp_path, capsys):
 
 
 def test_cli_query_unknown_name_errors(spark):
-    assert main(["query", "--name", "nope", "--repo-root", "/root/repo"]) == 2
+    assert main(["query", "--name", "nope", "--repo-root", ROOT]) == 2
 
 
 def test_cli_optimize_compacts(spark, tmp_path):
@@ -75,7 +79,7 @@ def test_cli_explain_prints_plan(spark, capsys):
             "--sf-dir",
             "/root/testdata/sf0.001",
             "--repo-root",
-            "/root/repo",
+            ROOT,
         ]
     )
     assert rc == 0
@@ -85,7 +89,7 @@ def test_cli_explain_prints_plan(spark, capsys):
 
 
 def test_cli_explain_unknown_name_errors(spark):
-    assert main(["explain", "--name", "nope", "--repo-root", "/root/repo"]) == 2
+    assert main(["explain", "--name", "nope", "--repo-root", ROOT]) == 2
 
 
 def test_cli_analyze_prints_metrics(spark, capsys):
@@ -97,7 +101,7 @@ def test_cli_analyze_prints_metrics(spark, capsys):
             "--sf-dir",
             "/root/testdata/sf0.001",
             "--repo-root",
-            "/root/repo",
+            ROOT,
         ]
     )
     assert rc == 0

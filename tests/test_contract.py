@@ -1,10 +1,12 @@
 """Driver-contract surface invariants (__spark_entry__.py)."""
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import __spark_entry__ as contract
 
 
@@ -140,7 +142,7 @@ def test_driver_history_latest_row_wins():
 
     hist = contract._driver_history()
     latest: dict[str, tuple[int, dict]] = {}
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")):
         m = re.search(r"_r(\d+)", path)
         rnd = int(m.group(1)) if m else 0
         for n, r in json.load(open(path)).items():
@@ -296,7 +298,7 @@ def test_bench_snapshot_merge_is_min_over_rounds():
     across all rounds, and carries the across-rounds band + per-round
     record (incl. per-round isolated_top and the quiet-round index
     list) under `snapshot`."""
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from bench_snapshot import merge_runs
 
     runs = [
@@ -344,7 +346,7 @@ def test_bench_snapshot_merge_is_min_over_rounds():
 
 
 def test_bench_snapshot_quiet_round_predicate():
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
     from bench_snapshot import round_is_quiet
 
     assert round_is_quiet(

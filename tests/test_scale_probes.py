@@ -18,7 +18,8 @@ import sys
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SRC = "/root/testdata/sf0.001"
 
@@ -44,7 +45,7 @@ def dens_dir(tmp_path_factory):
     env = dict(os.environ, SCALE_SRC_DIR=SRC)
     subprocess.run(
         [sys.executable, "tools/make_scale10.py", out, "2", "docs-density"],
-        cwd="/root/repo", env=env, check=True, capture_output=True,
+        cwd=ROOT, env=env, check=True, capture_output=True,
         timeout=120,
     )
     return out
@@ -55,7 +56,7 @@ def _build(tmp_path_factory, replicas: int, mode: str) -> str:
     env = dict(os.environ, SCALE_SRC_DIR=SRC)
     subprocess.run(
         [sys.executable, "tools/make_scale10.py", out, str(replicas), mode],
-        cwd="/root/repo", env=env, check=True, capture_output=True,
+        cwd=ROOT, env=env, check=True, capture_output=True,
         timeout=120,
     )
     return out
@@ -68,7 +69,7 @@ def _ed_counts(d: str) -> dict:
 
     r = subprocess.run(
         [sys.executable, "tools/probe_counts.py", d],
-        cwd="/root/repo", check=True, capture_output=True, text=True,
+        cwd=ROOT, check=True, capture_output=True, text=True,
         timeout=300, env=dict(os.environ, PROBE_ONLY="d13"),
     )
     return ast.literal_eval(r.stdout.strip().split(" ", 1)[1])

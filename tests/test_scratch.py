@@ -6,9 +6,10 @@ releases every other family's single-consumer scratch, and shared
 build-once memos live under an LRU group cap. Eviction must always be
 recompute-safe (results identical after any release)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aw3d30_parquet_spark import scratch
 from tests.conftest import SF_SMOKE
@@ -336,7 +337,6 @@ def test_spread_count_is_a_function_of_plan_and_width():
     core count."""
     import json
     import math
-    import os
     import subprocess
 
     wide = 4 * (os.cpu_count() or 1) + 3

@@ -28,9 +28,9 @@ def test_reused_worker_skips_zip_rereads(spark):
     """A reused worker re-reads no zip archive directory between tasks.
 
     Job 1 makes every worker it runs in count ``zipimport._read_directory``
-    calls; job 2 reports, from each worker that ran job 1, the reads since
-    its last task ended. Without the hook every task re-reads pyspark.zip
-    once per importer (16 reads with Spark 4.1)."""
+    calls; a later job reports, from each worker that ran an earlier one,
+    the reads since its last task ended. Without the hook every task
+    re-reads pyspark.zip once per importer (16 reads with Spark 4.1)."""
 
     def kernel(batches):
         import pandas as pd
@@ -62,9 +62,16 @@ def test_reused_worker_skips_zip_rereads(spark):
         df = spark.range(0, 4, numPartitions=4)
         return df.mapInPandas(kernel, "pid long, reads long").collect()
 
+    # Spark hands out idle workers first-in first-out, so with more idle
+    # workers than tasks (left by earlier tests) job 2 can get only
+    # workers job 1 never ran in; each round probes the next ones
     run()
-    reported = [r.reads for r in run() if r.reads is not None]
-    assert reported, "no worker was reused between the two jobs"
+    reported = []
+    for _ in range(8):
+        reported = [r.reads for r in run() if r.reads is not None]
+        if reported:
+            break
+    assert reported, "no worker was reused between the jobs"
     assert reported == [0] * len(reported)
 
 
@@ -79,17 +86,21 @@ def _write_zip(path, modules):
 @needs_eager_zip_invalidation
 def test_import_hook_rereads_only_changed_zip(tmp_path, monkeypatch):
     """With the hook installed, ``importlib.invalidate_caches()`` reads no
-    unchanged archive, and a rewritten archive is still picked up."""
+    unchanged archive, whether imported from before the hook was installed
+    or first opened after it, and a rewritten archive is still picked up."""
     archive = tmp_path / "mods.zip"
     _write_zip(archive, ["zmod_a"])
+    late = tmp_path / "late.zip"
+    _write_zip(late, ["zmod_c"])
     monkeypatch.syspath_prepend(str(archive))
-    for name in ("zmod_a", "zmod_b"):
+    for name in ("zmod_a", "zmod_b", "zmod_c"):
         monkeypatch.delitem(sys.modules, name, raising=False)
     monkeypatch.setattr(
         zipimport.zipimporter,
         "invalidate_caches",
         zipimport.zipimporter.invalidate_caches,
     )
+    monkeypatch.setattr(zipimport, "_read_directory", zipimport._read_directory)
     assert importlib.import_module("zmod_a").NAME == "zmod_a"
 
     monkeypatch.setenv("SPARK_REUSE_WORKER", "1")
@@ -106,6 +117,13 @@ def test_import_hook_rereads_only_changed_zip(tmp_path, monkeypatch):
     importlib.invalidate_caches()
     assert reads == []
 
+    # an archive first opened after install (a worker's addPyFile zip)
+    monkeypatch.syspath_prepend(str(late))
+    assert importlib.import_module("zmod_c").NAME == "zmod_c"
+    assert reads == [str(late)]
+    importlib.invalidate_caches()
+    assert reads == [str(late)]
+
     _write_zip(archive, ["zmod_a", "zmod_b"])
     importlib.invalidate_caches()
     assert str(archive) in reads
@@ -113,6 +131,7 @@ def test_import_hook_rereads_only_changed_zip(tmp_path, monkeypatch):
         assert importlib.import_module("zmod_b").NAME == "zmod_b"
     finally:
         sys.path_importer_cache.pop(str(archive), None)
+        sys.path_importer_cache.pop(str(late), None)
 
 
 def test_ship_package_builds_a_fresh_zip(tmp_path, monkeypatch):
