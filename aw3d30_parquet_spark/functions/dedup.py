@@ -26,6 +26,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aw3d30_parquet_spark.numeric import round_half_up
+from aw3d30_parquet_spark.scratch import (
+    scratch_persist,
+    scratch_persist_eager,
+    scratch_pin,
+)
 from aw3d30_parquet_spark.session import (
     register_views,
     session_token,
@@ -264,7 +269,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join (no exchange to re-plan) — acceptable because hot-shingle
     # corpora are d07's declared territory (prefix-bounded candidates)
     # and the 10× probe re-measured flat (see OPTIMIZATION_r13.md).
-    sh = _scratch_persist_eager(
+    sh = scratch_persist_eager(
         "d04",
         _docs(spark, sf_dir)
         .select("doc_id", _words(F.col("text")).alias("w"))
@@ -327,22 +332,6 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Scratch persists live in the session-wide registry (scratch.py): a
-# persisted interim can't be unpersisted before its consumer action
-# runs (laziness), so release is deferred — to the next invocation of
-# the SAME operator (scratch_persist) AND, since round 6, to the start
-# of any OTHER query (scratch.begin_query, called by the contract
-# dispatch) so a long suite session never accumulates the whole
-# suite's scratch history. Re-exported here because every functions/
-# module historically imports the registry from dedup.
-from aw3d30_parquet_spark.scratch import (  # noqa: E402
-    _SCRATCH,
-    scratch_persist as _scratch_persist,
-    scratch_persist_eager as _scratch_persist_eager,
-    scratch_pin as _scratch_pin,
-)
-
-
 def ngram_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """d04's scale variant: exact Jaccard pairs via PREFIX FILTERING.
 
@@ -367,7 +356,7 @@ def ngram_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verify sides): materialize the shingling once per job instead of
     # re-hashing the corpus 4× (at scale: a checkpointed interim);
     # released on the next d07 call via the scratch registry
-    docs = _scratch_persist_eager(
+    docs = scratch_persist_eager(
         "d07",
         _docs(spark, sf_dir)
         .select("doc_id", _words(F.col("text")).alias("w"))
@@ -386,7 +375,7 @@ def ngram_jaccard_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BOTH sides, and without the persist its whole subtree (explode →
     # document-frequency join → per-doc rank window) evaluates twice —
     # measured 2× of d07's runtime at the 10× scale probe
-    prefix = _scratch_persist_eager(
+    prefix = scratch_persist_eager(
         "d07_prefix",
         ex.join(freq, "h")
         .withColumn(
@@ -527,7 +516,7 @@ def _minhash_banded(
     # LOSS for d06 and neutral for d15, unlike t09/d07/d04/p14 where
     # the racing duplicate fills dominated; here the banding+verify
     # consumers overlap the fill productively
-    docs = _scratch_persist(
+    docs = scratch_persist(
         "d06_docs",
         _docs(spark, sf_dir)
         .select("doc_id", _words(F.col("text")).alias("w"))
@@ -592,7 +581,7 @@ def _minhash_banded(
     # docs cache, so a racing duplicate costs only the cheap post-cache
     # banding, while a count() barrier here was measured LOSING
     # ~0.3-0.5 s med (6-round interleaved A/B, r12)
-    banded = _scratch_persist(
+    banded = scratch_persist(
         "d06_banded",
         hashed.withColumn("sig", sig).select(
             "doc_id", F.posexplode_outer(band_hashes).alias("band", "bh")
@@ -864,10 +853,9 @@ def _ed_memo(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             except Exception:
                 pass
 
-    # shared-memo LRU registration: d10/d11/d13/d14 all touch this
-    # group, keeping it resident across the d-family; a different
-    # corpus dir's group (10x probes) evicts it instead of doubling
-    # the storage pool. Eviction is recompute-safe.
+    # shared-memo registration: d10/d11/d13/d14 all touch this group,
+    # keeping it resident across the d-family; it is released once it
+    # goes MEMO_AGE_CAP dispatches untouched. Release is recompute-safe.
     from aw3d30_parquet_spark.scratch import memo_touch
 
     memo_touch(("ed", *key), _release)
@@ -1319,7 +1307,7 @@ def substring_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text", F.length("text").alias("n")
     )
     w, s = SPAN_WIDTH, SPAN_STRIDE
-    grams = _scratch_persist(
+    grams = scratch_persist(
         "d16",
         docs.filter(F.col("n") >= w)
         .select(
@@ -1867,7 +1855,7 @@ def _components_label_propagation(
     # action runs; the next call for the SAME operator — or, via
     # begin_query, the start of any other query — releases it
     # (per-operator keys — a d12 run must not drop d08's pin)
-    _scratch_pin(scratch_key, pinned)
+    scratch_pin(scratch_key, pinned)
     return labels
 
 
@@ -1959,7 +1947,7 @@ def dedup_pipeline_audit(
     # semi-joins + the final fate join); without the persist each
     # branch would re-scan document text and re-run the digest window
     # — the docstring's one-text-scan claim depends on this
-    ranked = _scratch_persist(
+    ranked = scratch_persist(
         "d12", docs.withColumn("rn", F.row_number().over(w))
     )
     pairs, n_pairs = _pair_graph(spark, sf_dir)

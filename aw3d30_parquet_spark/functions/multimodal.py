@@ -1501,7 +1501,7 @@ def m06_frame_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical — so the within-video audit is non-vacuous at every sf;
     cross-video sharing needs ids 768 apart and lights up from sf0.1.
     """
-    from aw3d30_parquet_spark.functions.dedup import _scratch_persist_eager
+    from aw3d30_parquet_spark.scratch import scratch_persist_eager
 
     frames = sample_frames(
         media_table(spark, sf_dir, kind="video"), every_k=2
@@ -1526,7 +1526,7 @@ def m06_frame_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 profile). The count() barrier fills once; both consumers
     # then read InMemoryTableScan. Same fix class as t09/d04/d07 (r12
     # change 12); m06 was the one racing-consumer site it missed.
-    g = _scratch_persist_eager(
+    g = scratch_persist_eager(
         "m06",
         frames.select("media_id", F.md5("frame").alias("h"))
         .groupBy("media_id", "h")

@@ -201,10 +201,10 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting; both plans produce byte-identical output.
     """
     from aw3d30_parquet_spark.functions.dedup import (
-        _scratch_persist,
         _shingles_of,
         _words,
     )
+    from aw3d30_parquet_spark.scratch import scratch_persist
 
     sh = (
         _docs(spark, sf_dir)
@@ -217,7 +217,7 @@ def decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", "is_bench", _shingles_of(F.col("w")).alias("shs")
         )
     )
-    bench = _scratch_persist(
+    bench = scratch_persist(
         "p05",
         sh.filter("is_bench")
         .select("doc_id", F.explode_outer("shs").alias("s"))
@@ -841,13 +841,13 @@ def bloom_prefilter_decontaminate(
     """
     from aw3d30_parquet_spark.functions.dedup import (
         _md5_60,
-        _scratch_persist_eager,
         _shingles_of,
         _words,
     )
+    from aw3d30_parquet_spark.scratch import scratch_persist_eager
 
     m = BLOOM_WORDS * BLOOM_WORD_BITS
-    sh = _scratch_persist_eager(
+    sh = scratch_persist_eager(
         "p14",
         _docs(spark, sf_dir)
         .select(

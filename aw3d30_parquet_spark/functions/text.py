@@ -295,13 +295,13 @@ def similar_doc_search(
     from pyspark.sql import Window
 
     from aw3d30_parquet_spark.functions.dedup import (
-        _scratch_persist_eager,
         _shingles_of,
         _words,
     )
+    from aw3d30_parquet_spark.scratch import scratch_persist_eager
 
     docs = _docs(spark, sf_dir)
-    sh = _scratch_persist_eager(
+    sh = scratch_persist_eager(
         "t08",
         docs.select("doc_id", _words(F.col("text")).alias("w"))
         .select("doc_id", _shingles_of(F.col("w")).alias("shs"))
@@ -406,7 +406,7 @@ def bm25_search(
     """
     from pyspark.sql import Window
 
-    from aw3d30_parquet_spark.functions.dedup import _scratch_persist_eager
+    from aw3d30_parquet_spark.scratch import scratch_persist_eager
 
     docs = _docs(spark, sf_dir)
     # right-size the cached index: under the driver's plain session
@@ -432,7 +432,7 @@ def bm25_search(
     # candidates sit, and only the WindowGroupLimit-pruned top-k rows
     # cross the wire. One exchange keyed differently at fill time,
     # same row volume; dl's groupBy(doc_id) also rides it for free.
-    tf = _scratch_persist_eager(
+    tf = scratch_persist_eager(
         "t09",
         docs.select(
             "doc_id", F.explode(_tokens(F.col("text"))).alias("term")
@@ -541,9 +541,9 @@ def phrase_search(
     materializes more than (phrase-anchor candidates) rows.
     """
     docs = _docs(spark, sf_dir)
-    from aw3d30_parquet_spark.functions.dedup import _scratch_persist
+    from aw3d30_parquet_spark.scratch import scratch_persist
 
-    postings = _scratch_persist(
+    postings = scratch_persist(
         "t10",
         docs.select(
             "doc_id",

@@ -111,7 +111,7 @@ def pagerank_supplier_customer(
     # deferred-release scratch (the d-family pattern): each persisted
     # relation is registered under an op key so the NEXT l01 call
     # releases it — nothing leaks across bench repeats/test reruns
-    from aw3d30_parquet_spark.functions.dedup import _scratch_persist
+    from aw3d30_parquet_spark.scratch import scratch_persist
 
     # the engine must self-configure against the DRIVER's session
     # (which may carry the 200-partition default): every persisted
@@ -133,7 +133,7 @@ def pagerank_supplier_customer(
     # test_l01_loop_is_lazy_single_plan). Left plain: at 100 TB the
     # edge set is a materialized table (DEPLOY row 2) and the race
     # does not exist.
-    edges = _scratch_persist(
+    edges = scratch_persist(
         "l01_edges",
         _undirect(pairs).coalesce(par),
     )
@@ -144,7 +144,7 @@ def pagerank_supplier_customer(
     # the initial uniform rank are exact integer expressions over n,
     # evaluated inside the same jobs that consume them — one fewer
     # scheduled job per invocation, identical BIGINT arithmetic.
-    consts = _scratch_persist(
+    consts = scratch_persist(
         "l01_consts",
         deg.agg(F.count("*").alias("n")).select(
             "n",
@@ -162,7 +162,7 @@ def pagerank_supplier_customer(
     # plain persist, deliberately: an eager fill (persist+count) was
     # A/B'd at +0.86 s med over 6 interleaved rounds — the lazy chain
     # and the consts broadcast overlap the fill productively here
-    edge_deg = _scratch_persist(
+    edge_deg = scratch_persist(
         "l01_edge_deg", edges.join(deg, "src").coalesce(par)
     )
     # r12 optimization: the loop is LAZY — no per-iteration persist /
@@ -295,7 +295,7 @@ def pagerank_bucketed(
     hash-for-hash. l01 stays the default at driver scale (the bucketed
     write only pays for itself when amortized over a session or a
     larger iteration count); DEPLOY.md carries the deploy row."""
-    from aw3d30_parquet_spark.functions.dedup import _scratch_persist
+    from aw3d30_parquet_spark.scratch import scratch_persist
 
     tbl = _bucketed_edge_deg(spark, sf_dir)
     edge_deg = spark.table(tbl)
@@ -303,7 +303,7 @@ def pagerank_bucketed(
     # rides the bucket layout (no Exchange) and every row of a src
     # group carries the same deg, so max(deg) IS the out-degree
     deg = edge_deg.groupBy("src").agg(F.max("deg").alias("deg"))
-    consts = _scratch_persist(
+    consts = scratch_persist(
         "l02_consts",
         deg.agg(F.count("*").alias("n")).select(
             "n",

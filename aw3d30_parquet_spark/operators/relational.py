@@ -2216,13 +2216,13 @@ def q75_rolling_distinct_users(
     active only via the trailing window) so the output exposes the
     DAU/WAU pair engagement dashboards actually plot.
     """
-    from aw3d30_parquet_spark.functions.dedup import _scratch_persist
+    from aw3d30_parquet_spark.scratch import scratch_persist
 
     ev = _t(spark, sf_dir, "events")
     # two consumers (contribution explode, dau): persist the daily
     # activity relation or the events scan + distinct runs twice
     par = max(8, session_width(spark))
-    daily = _scratch_persist(
+    daily = scratch_persist(
         "q75",
         ev.select(
             F.date_trunc("day", "ts").cast("date").alias("day"),

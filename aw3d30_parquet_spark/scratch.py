@@ -1,17 +1,18 @@
-"""Session-wide scratch/memo registry with an eviction policy.
+"""Session-wide scratch/memo registry with two release rules.
 
-A 170-query suite session used to accumulate every memoized persisted
-artifact (shingle streams, pair graphs, inverted/positional indexes,
-IVF/PQ codebooks) until the executor storage pool thrashed: measured
-p14 median 12.6 s in-suite vs 2.1 s isolated at sf0.1, d07 131 s vs
-24.7 s at 10x. Two tiers fix that:
+A suite session runs 178 queries against ONE executor storage pool.
+Left alone, every memoized persisted artifact (shingle streams, pair
+graphs, inverted/positional indexes, IVF/PQ codebooks) accumulated
+until the pool thrashed: measured p14 median 12.6 s in-suite vs 2.1 s
+isolated at sf0.1, d07 131 s vs 24.7 s at 10x. Two tiers, one rule
+each, bound that:
 
 - **scratch** (single-consumer persisted interims): keyed by the owning
   query family ("d07", "d07_prefix", "v09_cent", "d08.labels" all
   belong to families d07/v09/d08 — the key's leading token). A
   persisted interim cannot be unpersisted before its consumer action
   runs (laziness), so release is deferred — but only until the NEXT
-  query begins: :func:`begin_query` eagerly frees every other family's
+  query begins: :func:`begin_query` frees every other family's
   scratch, bounding the pool to one query's working set instead of the
   whole suite's history. (:func:`scratch_persist` additionally frees
   the previous generation of the SAME key, so per-op loops — k-means
@@ -19,23 +20,16 @@ p14 median 12.6 s in-suite vs 2.1 s isolated at sf0.1, d07 131 s vs
 
 - **memo groups** (build-once shared artifacts consumed across queries:
   the d10/d11/d13/d14 gram relations, the d08/d12 pair graph, IVF/PQ
-  indexes): registered with a release callback and kept under an LRU
-  cap (:data:`MEMO_GROUP_CAP`, env ``SPARK_GRAFT_MEMO_CAP``). Groups
-  are keyed per (kind, session, sf_dir[, params]) so a 10x probe run
-  against a different corpus dir evicts the stale corpus' index rather
-  than keeping both resident.
+  indexes): registered with a release callback by :func:`memo_touch`
+  and released once they go more than :data:`MEMO_AGE_CAP` dispatches
+  without a touch, or by :func:`release_all`. Groups are keyed per
+  (kind, session, sf_dir[, params]), so a probe run against a
+  different corpus dir ages out the stale corpus' index.
 
-On top of the count caps, resident CACHE BYTES are policed against a
-budget derived from the executors' storage memory (the storage-status
-API: ``getRDDStorageInfo`` for usage, ``getExecutorMemoryStatus`` for
-capacity). When total cached bytes exceed
-``SPARK_GRAFT_MEMO_BYTES_FRACTION`` (default 0.5) of executor storage
-capacity — or the absolute ``SPARK_GRAFT_MEMO_BYTES`` override —
-least-recently-touched memo groups are evicted until usage fits. This
-makes the policy portable: on a smaller box the byte budget binds
-before the hand-tuned count cap of 4 does; under Spark Connect (no
-SparkContext, no storage-status API) the count/age caps remain the
-fallback policy.
+The age rule is the only memo rule because it is the only one that
+fires: every full-suite bench run (688–712 dispatches at 16g, and one
+at 4g driver memory) evicted 6 groups by age and none by a count cap or
+a cached-bytes budget (1.19 GB at 4g, against 17 MB of sf0.1 input).
 
 SEQUENTIAL-DISPATCH CONTRACT: :func:`begin_query` assumes the previous
 query's consumer action has already run — the driver, bench.py and
@@ -53,8 +47,6 @@ only cost a rebuild, never wrong rows.
 
 from __future__ import annotations
 
-import os
-from collections import OrderedDict
 from collections.abc import Callable, Hashable
 
 from pyspark.sql import DataFrame
@@ -62,42 +54,27 @@ from pyspark.sql import DataFrame
 #: single-consumer scratch: key -> persisted generations (usually one)
 _SCRATCH: dict[str, list[DataFrame]] = {}
 
-#: shared build-once memos: group key -> (release callback, last-touch
-#: query ordinal), LRU-ordered (most recently touched last)
-_MEMO_GROUPS: "OrderedDict[Hashable, list]" = OrderedDict()
+#: shared build-once memos: group key -> [release callback, last-touch
+#: query ordinal]
+_MEMO_GROUPS: dict[Hashable, list] = {}
 
-#: max resident shared-memo groups. 4 covers one full suite pass at one
-#: sf_dir (ed grams, pair graph, IVF, PQ); a second sf_dir's groups
-#: then evict the first's instead of doubling the storage pool.
-MEMO_GROUP_CAP = int(os.environ.get("SPARK_GRAFT_MEMO_CAP", "4"))
-
-#: memo AGE cap, in queries: a group untouched for this many
-#: begin_query calls is evicted even below MEMO_GROUP_CAP. The
-#: consumers of every shared memo are family-clustered (the ed grams
-#: feed d10–d14, the pair graph d08/d12/p12, the indexes their own
-#: v-query's bench reps), so a group idle for 12 dispatches has no
-#: upcoming consumer in any real run order — holding it only taxes
-#: memory-intensive unrelated queries (measured: v04 15.7 s in-suite
-#: vs 4.3 s isolated at 10x with the d-family memos resident).
-MEMO_AGE_CAP = int(os.environ.get("SPARK_GRAFT_MEMO_AGE", "12"))
-
-#: byte budget for resident cached relations, as a fraction of the
-#: executors' total storage capacity. 0.5 leaves headroom for the
-#: active query's own scratch + shuffle-adjacent unified-memory
-#: borrowing; at the default local[32]/16g config the count caps bind
-#: long before this does (bench numbers unchanged), while on a
-#: smaller-memory box the byte budget takes over from the hand-tuned 4.
-MEMO_BYTES_FRACTION = float(
-    os.environ.get("SPARK_GRAFT_MEMO_BYTES_FRACTION", "0.5")
-)
+#: memo AGE cap, in queries: a group untouched for more than this many
+#: begin_query calls is released. The consumers of every shared memo
+#: are family-clustered (the ed grams feed d10–d14, the pair graph
+#: d08/d12/p12, the indexes their own v-query's bench reps), so a group
+#: idle for 12 dispatches has no upcoming consumer in any real run
+#: order — holding it only taxes memory-intensive unrelated queries
+#: (measured: v04 15.7 s in-suite vs 4.3 s isolated at 10x with the
+#: d-family memos resident).
+MEMO_AGE_CAP = 12
 
 #: per-class eviction counters (see eviction_stats) — "scratch" counts
-#: foreign-family scratch releases at begin_query, the memo_* classes
-#: count shared-group evictions by policy trigger. A suite run whose
-#: "scratch" count far exceeds its dispatch count signals the
-#: sequential-dispatch contract is being violated (interims released
-#: before their consumer action ran).
-_EVICTIONS = {"scratch": 0, "memo_cap": 0, "memo_age": 0, "memo_bytes": 0}
+#: foreign-family scratch releases at begin_query, "memo_age" counts
+#: shared groups released by the age rule. A suite run whose "scratch"
+#: count far exceeds its dispatch count signals the sequential-dispatch
+#: contract is being violated (interims released before their consumer
+#: action ran).
+_EVICTIONS = {"scratch": 0, "memo_age": 0}
 
 #: monotone dispatch counter (bumped by begin_query) — the age clock.
 _QUERY_ORDINAL = [0]
@@ -106,94 +83,12 @@ _QUERY_ORDINAL = [0]
 def eviction_stats() -> dict[str, int]:
     """Copy of the per-class eviction counters plus the dispatch count
     (``dispatches``); bench.py records this in bench_results.json so
-    eviction-policy regressions are visible next to the timings."""
-    return dict(_EVICTIONS, dispatches=_QUERY_ORDINAL[0])
-
-
-def _rdd_cache_sizes() -> dict[int, int] | None:
-    """Per-RDD cached bytes (memory + disk) keyed by RDD id via the
-    storage-status API; ``None`` when unavailable (Spark Connect — no
-    SparkContext — or no active session)."""
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-        return {i.id(): i.memSize() + i.diskSize() for i in infos}
-    except Exception:
-        return None
-
-
-def _cached_bytes() -> int | None:
-    """Total bytes (memory + disk) of cached RDD blocks; ``None`` when
-    the storage-status API is unavailable."""
-    sizes = _rdd_cache_sizes()
-    return sum(sizes.values()) if sizes is not None else None
-
-
-def _byte_budget() -> int | None:
-    """Resident-cache byte budget: the absolute ``SPARK_GRAFT_MEMO_BYTES``
-    override if set, else :data:`MEMO_BYTES_FRACTION` of the executors'
-    summed storage capacity (``getExecutorMemoryStatus`` maxMem — the
-    unified-memory storage pool ceiling). ``None`` → no byte policy
-    (Spark Connect fallback: count/age caps only)."""
-    env = os.environ.get("SPARK_GRAFT_MEMO_BYTES")
-    if env:
-        try:
-            return int(env)
-        except ValueError:
-            pass
-    try:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-        status = spark.sparkContext._jsc.sc().getExecutorMemoryStatus()
-        it = status.iterator()
-        total = 0
-        while it.hasNext():
-            total += it.next()._2()._1()  # (maxMem, remaining) -> maxMem
-        return int(total * MEMO_BYTES_FRACTION) if total else None
-    except Exception:
-        return None
-
-
-def _evict_over_budget() -> None:
-    """Evict least-recently-touched memo groups while total cached
-    bytes exceed the byte budget. Usage is read ONCE up front and then
-    DECREMENTED by each evicted group's measured block sizes (the RDDs
-    that left the persistent-RDD registry across the release call,
-    valued at their pre-eviction sizes) rather than re-read per
-    iteration: memo releases unpersist non-blocking (e.g. the d-family
-    gram memos), and a usage re-read racing the async block removal
-    could still count just-evicted blocks — one over-budget pass would
-    then drain every memo group except the last, defeating the LRU
-    design (r7 ADVICE). Registry removal itself is synchronous even
-    for non-blocking unpersist, so the id-diff is reliable while block
-    removal is still in flight on the executors. The last-touched
-    group is never evicted by this path — it is the one the in-flight
-    query is about to consume, and evicting it would only force an
-    immediate rebuild without freeing net memory across the query."""
-    budget = _byte_budget()
-    if budget is None:
-        return
-    used = _cached_bytes()
-    while len(_MEMO_GROUPS) > 1:
-        if used is None or used <= budget:
-            return
-        before = _rdd_cache_sizes() or {}
-        _, (evict, _) = _MEMO_GROUPS.popitem(last=False)
-        _EVICTIONS["memo_bytes"] += 1
-        try:
-            evict()
-        except Exception:
-            pass
-        after = _rdd_cache_sizes()
-        if after is None:
-            return
-        # remaining RDDs valued at their PRE-eviction sizes: immune to
-        # both the async removal of the evicted group's blocks and any
-        # status-store lag on untouched relations
-        used = sum(sz for rid, sz in before.items() if rid in after)
+    eviction-policy regressions are visible next to the timings.
+    ``memo_cap`` and ``memo_bytes`` are always 0: their rules are gone,
+    and the keys stay only because perfbench reads them by name."""
+    return dict(
+        _EVICTIONS, memo_cap=0, memo_bytes=0, dispatches=_QUERY_ORDINAL[0]
+    )
 
 
 def _family(key: str) -> str:
@@ -249,10 +144,10 @@ def scratch_pin(key: str, df: DataFrame) -> DataFrame:
 
 
 def begin_query(name: str) -> None:
-    """Mark the start of query ``name``: eagerly release every OTHER
-    family's single-consumer scratch, expire shared memo groups idle
-    for more than :data:`MEMO_AGE_CAP` dispatches, and enforce the
-    resident-cache byte budget.
+    """Mark the start of query ``name``: release every OTHER family's
+    single-consumer scratch (the scratch rule), then release every
+    shared memo group that has gone more than :data:`MEMO_AGE_CAP`
+    dispatches without a touch (the memo rule).
 
     CONTRACT (sequential dispatch): queries run one at a time through
     the driver/bench dispatch — construct, materialize, then the next
@@ -272,38 +167,32 @@ def begin_query(name: str) -> None:
         for g, (_, touched) in _MEMO_GROUPS.items()
         if now - touched > MEMO_AGE_CAP
     ]:
-        release_fn, _ = _MEMO_GROUPS.pop(group)
+        _release_group(group)
         _EVICTIONS["memo_age"] += 1
-        try:
-            release_fn()
-        except Exception:
-            pass
-    _evict_over_budget()
 
 
 def memo_touch(group: Hashable, release: Callable[[], None]) -> None:
-    """Register (or refresh the recency of) a shared memo group.
+    """Register a shared memo group, or restart its age clock.
 
     ``release`` must free the group's persisted relations AND remove
     its entries from the owning module's memo dict, so a later consumer
-    rebuilds instead of reading unpersisted ghosts. When registration
-    pushes the resident count past :data:`MEMO_GROUP_CAP`, the
-    least-recently-touched group is evicted; groups untouched for
-    :data:`MEMO_AGE_CAP` dispatches are expired by :func:`begin_query`.
+    rebuilds instead of reading unpersisted ghosts. A group already
+    registered keeps its first callback. Any number of groups may be
+    resident at once; :func:`begin_query` releases a group once it has
+    gone more than :data:`MEMO_AGE_CAP` dispatches without a touch —
+    the only memo rule, because a group count cap and a cached-bytes
+    budget never fired in a full suite run.
     """
-    if group in _MEMO_GROUPS:
-        _MEMO_GROUPS.move_to_end(group)
-        _MEMO_GROUPS[group][1] = _QUERY_ORDINAL[0]
-        return
-    _MEMO_GROUPS[group] = [release, _QUERY_ORDINAL[0]]
-    while len(_MEMO_GROUPS) > MEMO_GROUP_CAP:
-        _, (evict, _) = _MEMO_GROUPS.popitem(last=False)
-        _EVICTIONS["memo_cap"] += 1
-        try:
-            evict()
-        except Exception:
-            pass
-    _evict_over_budget()
+    _MEMO_GROUPS.setdefault(group, [release, 0])[1] = _QUERY_ORDINAL[0]
+
+
+def _release_group(group: Hashable) -> None:
+    """Drop ``group`` from the registry and run its release callback."""
+    release, _ = _MEMO_GROUPS.pop(group)
+    try:
+        release()
+    except Exception:
+        pass
 
 
 def release_all() -> None:
@@ -312,12 +201,8 @@ def release_all() -> None:
     storage pool starts empty, matching a fresh-session run."""
     for key in list(_SCRATCH):
         release_key(key)
-    while _MEMO_GROUPS:
-        _, (evict, _) = _MEMO_GROUPS.popitem(last=False)
-        try:
-            evict()
-        except Exception:
-            pass
+    for group in list(_MEMO_GROUPS):
+        _release_group(group)
 
 
 def resident() -> dict[str, list[str]]:

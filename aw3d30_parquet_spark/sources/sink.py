@@ -70,54 +70,41 @@ def _fs_listdir(fs, hpath) -> list[str]:
     return [st.getPath().getName() for st in fs.listStatus(hpath)]
 
 
-def existing_tiles(
-    out_dir: str, spark: SparkSession | None = None
-) -> set[tuple[int, int]]:
-    """Tile coordinates already present in the partitioned output layout.
+def _parquet_files_per_tile(
+    spark: SparkSession, out_dir: str
+) -> dict[tuple[int, int], int]:
+    """Parquet data-file count of every ``tile_lat=N/tile_lon=M``
+    partition under ``out_dir`` (0 for an empty partition directory).
 
-    Reads only directory names (``tile_lat=N/tile_lon=M``) — the manifest
-    is the partition tree itself, no data files are opened. With a
-    ``spark`` session the walk goes through the Hadoop FileSystem API,
-    so it is two LIST calls per lat on an object store too; without one
-    it falls back to ``os`` (local paths only).
+    Reads only directory listings — the manifest is the partition tree
+    itself, no data files are opened. The walk goes through the Hadoop
+    FileSystem API, so local paths, ``file://`` and ``s3a://`` list the
+    same way: one LIST for the root and two per lat on an object store.
     """
-    done: set[tuple[int, int]] = set()
-    if spark is not None or "://" in out_dir:
-        if spark is None:
-            raise ValueError(
-                f"{out_dir!r} is a filesystem URI — pass the SparkSession "
-                "so the listing can go through the Hadoop FileSystem API"
-            )
-        fs, root = _hadoop_fs(spark, out_dir)
-        if not fs.exists(root):
-            return done
-        jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-        for lat_dir in _fs_listdir(fs, root):
-            m = _PART_RE.match(lat_dir)
-            if m is None:
-                continue
-            lat = int(m.group(1))
-            lat_path = jvm_path(root, lat_dir)
-            for lon_dir in _fs_listdir(fs, lat_path):
-                if lon_dir.startswith("tile_lon="):
-                    files = _fs_listdir(fs, jvm_path(lat_path, lon_dir))
-                    if any(f.endswith(".parquet") for f in files):
-                        done.add((lat, int(lon_dir.split("=", 1)[1])))
-        return done
-    if not os.path.isdir(out_dir):
-        return done
-    for lat_dir in os.listdir(out_dir):
+    out: dict[tuple[int, int], int] = {}
+    fs, root = _hadoop_fs(spark, out_dir)
+    if not fs.exists(root):
+        return out
+    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
+    for lat_dir in _fs_listdir(fs, root):
         m = _PART_RE.match(lat_dir)
         if m is None:
             continue
         lat = int(m.group(1))
-        for lon_dir in os.listdir(os.path.join(out_dir, lat_dir)):
+        lat_path = jvm_path(root, lat_dir)
+        for lon_dir in _fs_listdir(fs, lat_path):
             if lon_dir.startswith("tile_lon="):
-                # a partition dir is only "done" if it holds data files
-                p = os.path.join(out_dir, lat_dir, lon_dir)
-                if any(f.endswith(".parquet") for f in os.listdir(p)):
-                    done.add((lat, int(lon_dir.split("=", 1)[1])))
-    return done
+                files = _fs_listdir(fs, jvm_path(lat_path, lon_dir))
+                out[(lat, int(lon_dir.split("=", 1)[1]))] = sum(
+                    f.endswith(".parquet") for f in files
+                )
+    return out
+
+
+def existing_tiles(out_dir: str, spark: SparkSession) -> set[tuple[int, int]]:
+    """Tile coordinates already present in the partitioned output layout:
+    the partitions that hold at least one Parquet data file."""
+    return {t for t, n in _parquet_files_per_tile(spark, out_dir).items() if n}
 
 
 def write_tiles(df: DataFrame, out_dir: str, mode: str = "append") -> None:
@@ -422,23 +409,7 @@ def compact_tiles(
     """
     from pyspark.sql import functions as F
 
-    def _files_per_tile() -> dict[tuple[int, int], int]:
-        out: dict[tuple[int, int], int] = {}
-        if "://" in out_dir:
-            fs, root = _hadoop_fs(spark, out_dir)
-            jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-            for la, lo in existing_tiles(out_dir, spark):
-                p = jvm_path(root, f"tile_lat={la}/tile_lon={lo}")
-                out[(la, lo)] = sum(
-                    n.endswith(".parquet") for n in _fs_listdir(fs, p)
-                )
-            return out
-        for la, lo in existing_tiles(out_dir):
-            p = os.path.join(out_dir, f"tile_lat={la}", f"tile_lon={lo}")
-            out[(la, lo)] = sum(f.endswith(".parquet") for f in os.listdir(p))
-        return out
-
-    before = _files_per_tile()
+    before = _parquet_files_per_tile(spark, out_dir)
     wanted = None if tiles is None else set(tiles)
     victims = [
         t
@@ -503,7 +474,7 @@ def compact_tiles(
     finally:
         for k, v in old_conf.items():
             spark.conf.set(k, v)
-    after = _files_per_tile()
+    after = _parquet_files_per_tile(spark, out_dir)
     return {
         "compacted_tiles": len(victims),
         "files_before": sum(before.values()),

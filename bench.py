@@ -382,12 +382,9 @@ def main() -> None:
     # eviction-policy counters (scratch.py): a "scratch" count far above
     # dispatches means interims were released before their consumer
     # action ran — the sequential-dispatch contract regression signal
-    try:
-        from aw3d30_parquet_spark import scratch as _scratch
+    from aw3d30_parquet_spark import scratch as _scratch
 
-        result_file["evictions"] = _scratch.eviction_stats()
-    except Exception:
-        pass
+    result_file["evictions"] = _scratch.eviction_stats()
     # Full-fidelity copy on disk (the driver's stdout capture keeps only
     # a bounded tail — round 1 lost the head of a 4.3 KB line).
     with open(

@@ -136,7 +136,7 @@ def test_g2_idempotent_ingest(spark, tif_dir, tmp_path):
     out = str(tmp_path / "points")
     first = ingest_tiles(spark, tif_dir, out, "netherlands")
     assert sorted(first) == [(51, 4), (52, 5)]
-    assert existing_tiles(out) == {(51, 4), (52, 5)}
+    assert existing_tiles(out, spark) == {(51, 4), (52, 5)}
 
     snapshot = {
         os.path.join(r, f): os.path.getmtime(os.path.join(r, f))
@@ -169,7 +169,7 @@ def test_g2_partial_resume(spark, tif_dir, tmp_path):
     out = str(tmp_path / "points")
     df = read_tiles(spark, tif_dir, "netherlands").filter("tile_lat = 51")
     write_tiles(df, out)
-    assert existing_tiles(out) == {(51, 4)}
+    assert existing_tiles(out, spark) == {(51, 4)}
     ingested, _, read = _run_in_group(
         spark, "g2-partial", lambda: ingest_tiles(spark, tif_dir, out, "netherlands")
     )
@@ -351,7 +351,7 @@ def test_g2_per_tile_commit_survives_failure(spark, tmp_path):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-    assert existing_tiles(out) == set(good)
+    assert existing_tiles(out, spark) == set(good)
     counts = spark.read.parquet(out).groupBy("tile_lat", "tile_lon").count().collect()
     assert {(r.tile_lat, r.tile_lon): r["count"] for r in counts} == {
         t: SIZE * SIZE for t in good
@@ -407,7 +407,7 @@ def test_g2_tile_write_retry_safe(spark, tif_dir, tmp_path, monkeypatch):
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, leftover), "wb") as f:
             f.write(b"PAR1 torn write")
-    assert existing_tiles(out) == {(51, 4)}
+    assert existing_tiles(out, spark) == {(51, 4)}
     assert compact_tiles(spark, out) == {
         "compacted_tiles": 0, "files_before": 1, "files_after": 1
     }

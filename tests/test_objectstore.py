@@ -74,7 +74,7 @@ def test_configure_s3a_keyed_resets_anonymous(spark):
 def test_existing_tiles_over_uri(spark, tmp_path):
     """The idempotency manifest walk works over a filesystem URI via
     the Hadoop FileSystem API (the path an s3a:// output takes) and
-    agrees with the local-path walk."""
+    agrees with the same walk over the plain local path."""
     from aw3d30_parquet_spark.sources.demo import ensure_demo_tiles
     from aw3d30_parquet_spark.sources.geotiff import read_tiles
     from aw3d30_parquet_spark.sources.sink import existing_tiles, write_tiles
@@ -82,11 +82,6 @@ def test_existing_tiles_over_uri(spark, tmp_path):
     tif = ensure_demo_tiles(str(tmp_path / "tiles"))
     out = str(tmp_path / "pts")
     write_tiles(read_tiles(spark, tif, "netherlands"), out)
-    local = existing_tiles(out)
+    local = existing_tiles(out, spark)
     via_uri = existing_tiles(f"file://{out}", spark)
     assert local == via_uri == {(51, 4), (52, 5)}
-    # a URI without a session is an explicit error, not a silent miss
-    import pytest
-
-    with pytest.raises(ValueError):
-        existing_tiles(f"file://{out}")

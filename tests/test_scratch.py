@@ -1,10 +1,11 @@
 """Session-wide scratch/memo eviction policy (scratch.py).
 
-Round-6 contract: a suite session holds ONE query's working set in the
-executor storage pool, not the whole session's history — begin_query
-releases every other family's single-consumer scratch, and shared
-build-once memos live under an LRU group cap. Eviction must always be
-recompute-safe (results identical after any release)."""
+A suite session holds ONE query's working set in the executor storage
+pool, not the whole session's history: begin_query releases every other
+family's single-consumer scratch, and a shared build-once memo group is
+released once it goes more than MEMO_AGE_CAP dispatches untouched.
+Eviction must always be recompute-safe (results identical after any
+release)."""
 
 import os
 import sys
@@ -51,29 +52,6 @@ def test_scratch_persist_releases_previous_generation(spark):
     scratch.release_all()
 
 
-def test_memo_lru_cap_evicts_oldest(spark):
-    released = []
-    scratch.release_all()
-    old_cap = scratch.MEMO_GROUP_CAP
-    scratch.MEMO_GROUP_CAP = 2
-    try:
-        scratch.memo_touch(("g", 1), lambda: released.append(1))
-        scratch.memo_touch(("g", 2), lambda: released.append(2))
-        scratch.memo_touch(("g", 1), lambda: released.append("dup"))
-        # touching an existing group refreshes recency, no new entry
-        assert released == []
-        scratch.memo_touch(("g", 3), lambda: released.append(3))
-        # cap 2: group 2 is now LRU (1 was re-touched) and evicts
-        assert released == [2]
-        assert [g for g in scratch.resident()["memo_groups"]] == [
-            repr(("g", 1)),
-            repr(("g", 3)),
-        ]
-    finally:
-        scratch.MEMO_GROUP_CAP = old_cap
-        scratch.release_all()
-
-
 def test_eviction_is_recompute_safe(spark):
     """Releasing a memoized relation mid-flight only costs a rebuild:
     the d-family result is identical when its shared gram memo is
@@ -100,84 +78,40 @@ def test_queries_dispatch_wraps_with_eviction(spark):
     assert "zz9" not in scratch.resident()["scratch"]
 
 
-def test_byte_budget_evicts_lru_memo(spark, monkeypatch):
-    """Shrinking the resident-cache byte budget drives LRU memo
-    eviction at begin_query: with two materialized cached relations and
-    a budget below their footprint, the least-recently-touched group is
-    released (blocking) until usage fits — and the most-recent group
-    survives (it is the one the in-flight query consumes)."""
+def test_memo_groups_release_by_age_only(spark):
+    """Six memo groups touched inside one dispatch all stay resident
+    (no group count cap), and each is released by begin_query exactly
+    MEMO_AGE_CAP + 1 dispatches after its last touch."""
     scratch.release_all()
-    a = spark.range(200_000).persist()
-    b = spark.range(200_000).persist()
-    a.count(), b.count()  # materialize: blocks appear in storage status
-    used = scratch._cached_bytes()
-    assert used and used > 0  # storage-status API live in local mode
     released = []
-    scratch.memo_touch(("bb", "a"), lambda: (a.unpersist(True), released.append("a")))
-    scratch.memo_touch(("bb", "b"), lambda: (b.unpersist(True), released.append("b")))
-    before = dict(scratch.eviction_stats())
-    # budget of 1 byte: everything over budget, LRU ("a") must go;
-    # the floor keeps the last-touched group ("b") resident
-    monkeypatch.setenv("SPARK_GRAFT_MEMO_BYTES", "1")
-    scratch.begin_query("zz0_noop")
-    assert released == ["a"]
-    assert scratch.eviction_stats()["memo_bytes"] == before["memo_bytes"] + 1
-    assert [g for g in scratch.resident()["memo_groups"]] == [repr(("bb", "b"))]
-    monkeypatch.delenv("SPARK_GRAFT_MEMO_BYTES")
-    scratch.release_all()
-    assert released == ["a", "b"]
-
-
-def test_byte_budget_nonblocking_release_stops_at_fit(spark, monkeypatch):
-    """Production memo releases unpersist NON-blocking; the over-budget
-    pass must still stop at the first group whose eviction brings usage
-    under budget. The r7 shape re-read total usage per iteration, which
-    can race async block removal and drain every group but the last —
-    the fixed accounting decrements by the evicted group's measured
-    pre-eviction sizes (registry id-diff), so exactly the LRU group
-    goes when one eviction suffices."""
-    scratch.release_all()
-    # three DISTINCT plans: CacheManager dedupes equivalent cached
-    # plans, and aliased caches would make the size accounting vacuous
-    a = spark.range(200_000).persist()
-    b = spark.range(300_000).persist()
-    c = spark.range(400_000).persist()
-    a.count(), b.count(), c.count()
-    used = scratch._cached_bytes()
-    assert used and used > 3  # three materialized cached relations
-    released = []
-    scratch.memo_touch(("nb", "a"), lambda: (a.unpersist(), released.append("a")))
-    scratch.memo_touch(("nb", "b"), lambda: (b.unpersist(), released.append("b")))
-    scratch.memo_touch(("nb", "c"), lambda: (c.unpersist(), released.append("c")))
-    # budget one byte under current usage: evicting the LRU group ("a")
-    # alone must satisfy it — "b"/"c" stay resident even though "a"'s
-    # blocks may still be draining asynchronously
-    monkeypatch.setenv("SPARK_GRAFT_MEMO_BYTES", str(used - 1))
-    scratch.begin_query("zz2_noop")
-    assert released == ["a"]
-    assert [g for g in scratch.resident()["memo_groups"]] == [
-        repr(("nb", "b")),
-        repr(("nb", "c")),
-    ]
-    monkeypatch.delenv("SPARK_GRAFT_MEMO_BYTES")
-    scratch.release_all()
-    assert released == ["a", "b", "c"]
-
-
-def test_byte_budget_unbinding_at_default(spark, monkeypatch):
-    """At the default fraction the byte budget must not bind on this
-    box (bench numbers unchanged): the derived budget is far above any
-    suite's resident set, and a begin_query pass evicts nothing."""
-    scratch.release_all()
-    budget = scratch._byte_budget()
-    assert budget is not None and budget > 1 << 30  # >1 GiB headroom
-    df = spark.range(10_000).persist()
-    df.count()
-    released = []
-    scratch.memo_touch(("ub", 1), lambda: (df.unpersist(True), released.append(1)))
-    scratch.begin_query("zz1_noop")
+    groups = [("age_only", i) for i in range(6)]
+    scratch.begin_query("w00_noop")
+    for g in groups:
+        scratch.memo_touch(g, lambda g=g: released.append(g))
     assert released == []
-    scratch.release_all()
+    assert scratch.resident()["memo_groups"] == [repr(g) for g in groups]
+    # group i is touched again i dispatches later, so the six age out
+    # on six different dispatches
+    last_touch = {groups[0]: 0}
+    for step in range(1, len(groups)):
+        scratch.begin_query(f"w{step:02d}_noop")
+        scratch.memo_touch(groups[step], lambda: released.append("dup"))
+        last_touch[groups[step]] = step
+    assert released == []
+    aged0 = scratch.eviction_stats()["memo_age"]
+    released_at = {}
+    step = len(groups) - 1
+    while len(released_at) < len(groups) and step < 50:
+        step += 1
+        seen = len(released)
+        scratch.begin_query(f"x{step:02d}_noop")
+        released_at.update((g, step) for g in released[seen:])
+    assert released_at == {
+        g: t + scratch.MEMO_AGE_CAP + 1 for g, t in last_touch.items()
+    }
+    assert "dup" not in released  # a re-touch keeps the first callback
+    assert scratch.eviction_stats()["memo_age"] == aged0 + len(groups)
+    assert scratch.resident()["memo_groups"] == []
 
 
 def test_memo_age_expiry(spark):
