@@ -1601,20 +1601,21 @@ FROM spans GROUP BY doc_id ORDER BY doc_id
 """
 
 
-#: (applicationId, sf_dir) → (persisted d04 pair relation, pair count)
-#: (see neardup_components docstring: the components job reads the
-#: dedup job's OUTPUT table; testdata is immutable, so memoizing is
-#: sound). Keyed on the SparkContext applicationId — unlike id() of a
+#: (session_token, sf_dir) → (coalesced read of the persisted d04 pair
+#: relation, pair count, the persisted relation itself) (see
+#: neardup_components docstring: the components job reads the dedup
+#: job's OUTPUT table; testdata is immutable, so memoizing is sound).
+#: On classic Spark the token is the applicationId — unlike id() of a
 #: session wrapper it is never recycled in-process, and persisted RDDs
 #: live per context, so sharing across sessions of one context is
 #: correct. The count is free (the persist is materialized by an
 #: eager count anyway) and drives the broadcast-vs-distributed
 #: components strategy choice.
-_PAIR_GRAPH: dict[tuple, tuple[DataFrame, int]] = {}
+_PAIR_GRAPH: dict[tuple, tuple[DataFrame, int, DataFrame]] = {}
 
 
 def _pair_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (session_token(spark), sf_dir)
     if key not in _PAIR_GRAPH:
         df = ngram_jaccard_pairs(spark, sf_dir).select("id_a", "id_b").persist()
         n = df.count()

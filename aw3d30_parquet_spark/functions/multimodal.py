@@ -1574,7 +1574,7 @@ def m06_frame_dedup_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: broadcast gate and d08's edge-count gate.
 M06_PAIRWISE_RATIO_CAP = 8.0
 
-#: (applicationId, sf_dir) → (dist rows, Σ c·(c−1)) — memoized like
+#: (session_token, sf_dir) → (dist rows, Σ c·(c−1)) — memoized like
 #: p05's gate count so repeated plan compilations (the suite-wide
 #: plan-hygiene walk) don't re-materialize the frame-digest relation
 #: for the same immutable input dir (ADVICE r10's p05 finding applies

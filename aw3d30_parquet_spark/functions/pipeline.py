@@ -140,7 +140,7 @@ LEAK_FLAG = 0.5
 #: production; only the fixture's %97 rule grows bench with the corpus)
 P05_BENCH_BROADCAST_CAP = 5_000_000
 
-#: (applicationId, sf_dir) → measured bench-side shingle row count. The
+#: (session_token, sf_dir) → measured bench-side shingle row count. The
 #: gate is a plan-choice scalar over an immutable input dir, so it is
 #: memoized: without this, every p05 PLAN COMPILATION pays a full
 #: corpus scan (persist + count), and callers that only compile — the

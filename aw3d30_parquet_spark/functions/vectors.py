@@ -280,9 +280,10 @@ def ann_topk_lsh(
     )
 
 
-#: (applicationId, sf_dir, n_clusters) → (assigned-corpus DF, centroids
-#: DF) — applicationId is never recycled in-process, and persisted
-#: RDDs live per context, so the key is session-lifecycle-safe.
+#: (session_token, sf_dir, n_clusters) → (assigned-corpus DF, centroids
+#: DF) — the token (the applicationId on classic Spark) is never
+#: recycled in-process, and persisted RDDs live per context, so the key
+#: is session-lifecycle-safe.
 #: The IVF index is a BUILD-ONCE artifact: at 100 TB it is a
 #: cluster-id-partitioned parquet table plus a centroid sidecar,
 #: materialized by an indexing job and reused by every query. Memoizing
@@ -295,7 +296,7 @@ _IVF_INDEX: dict[tuple, tuple[DataFrame, DataFrame]] = {}
 def _ivf_index(
     spark: SparkSession, sf_dir: str, n_clusters: int
 ) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir, n_clusters)
+    key = (session_token(spark), sf_dir, n_clusters)
     from aw3d30_parquet_spark.scratch import memo_touch
 
     def _release(k=key):
@@ -480,7 +481,7 @@ def _neardup_pairs_df(
     )
 
 
-#: (applicationId, sf_dir, M, K) → (codes DF, flat codebook ndarray).
+#: (session_token, sf_dir, M, K) → (codes DF, flat codebook ndarray).
 #: Like the IVF index: a build-once artifact (at 100 TB the uint8 code
 #: table is materialized next to the corpus — 8 bytes/vector vs 256 —
 #: and the codebook is a tiny sidecar every executor holds).
@@ -517,7 +518,7 @@ def _pq_train(vecs, m: int = PQ_M, k: int = PQ_K, iters: int = 10):
 
 
 def _pq_index(spark: SparkSession, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir, PQ_M, PQ_K)
+    key = (session_token(spark), sf_dir, PQ_M, PQ_K)
     from aw3d30_parquet_spark.scratch import memo_touch
 
     def _release(k=key):

@@ -46,7 +46,7 @@ def bucketed_equi_join(
     return lt.join(rt, lt[left_key] == rt[right_key], "inner")
 
 
-#: (applicationId, sf_dir) → (orders_table, lineitem_table) already
+#: (session_token, sf_dir) → (orders_table, lineitem_table) already
 #: written this session — the write is the build-once index cost (like
 #: v05's IVF); every later call joins the existing bucketed tables.
 _BUCKETED: dict[tuple[str, str], tuple[str, str]] = {}
@@ -227,7 +227,7 @@ GROUP BY o_orderpriority ORDER BY o_orderpriority
 }
 
 
-#: (applicationId, sf_dir) → month-partitioned lineitem path already
+#: (session_token, sf_dir) → month-partitioned lineitem path already
 #: written this session (b01's build-once pattern for the DPP fact).
 _DPP_WRITTEN: dict[tuple[str, str], str] = {}
 

@@ -215,11 +215,12 @@ def spread(df, min_partitions: int | None = None, dense: bool = False):
     of splits never shuffle.
     """
     # Under Spark Connect there is no sparkContext, no _jdf and no
-    # df.rdd (all raise), so no partition count can be read: return
-    # the plan unchanged rather than add a blind shuffle.
+    # df.rdd (all raise PySparkAttributeError), so no partition count
+    # can be read: return the plan unchanged rather than add a blind
+    # shuffle.
     try:
         sc = df.sparkSession.sparkContext
-    except Exception:
+    except AttributeError:
         return df
     target = min_partitions or sc.defaultParallelism
     if min_partitions is None and not dense:

@@ -25,24 +25,25 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aw3d30_parquet_spark.session import register_views
+from aw3d30_parquet_spark.session import register_views, session_token
 
 REGION_SCHEMA = "r_regionkey INT, r_name STRING"
 NATION_SCHEMA = "n_nationkey INT, n_name STRING, n_regionkey INT"
 
 
 def _export_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Per-(application, dataset) export root: the applicationId
-    component makes concurrent processes (bench CLI + a pytest run on
-    the same host) write disjoint trees — a shared fixed path would
-    race one process's overwrite against another's read-back scan.
+    """Per-(session, dataset) export root: the session token (the
+    applicationId on classic Spark) makes concurrent processes (bench
+    CLI + a pytest run on the same host) write disjoint trees — a shared
+    fixed path would race one process's overwrite against another's
+    read-back scan.
     Local tmp is correct for the single-JVM driver contract; on a
     real cluster this must be a SHARED filesystem URI (s3a://,
     hdfs://) — executors write the partition files, and a node-local
     path would scatter them across machines (DEPLOY.md row 9's
     checkpoint rule, applied to sinks)."""
     slug = sf_dir.strip("/").replace("/", "_")
-    app = spark.sparkContext.applicationId
+    app = session_token(spark)
     out = os.path.join(
         tempfile.gettempdir(), f"graft_filesrc_{app}_{slug}"
     )

@@ -1,9 +1,11 @@
 """Session set-up (session.py): testdata view registration from Parquet
 footers, and the Spark Connect shape of a session (no sparkContext)."""
 
+import ast
 import gc
 import os
 import weakref
+from types import SimpleNamespace
 
 import pyarrow as pa
 import pyarrow.compute as pc
@@ -174,3 +176,54 @@ def test_register_views_on_a_session_without_spark_context(spark):
     assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
     assert {t.name for t in fresh.catalog.listTables()} >= set(TABLES)
     assert fresh.table("region").count() == 5
+
+
+class _ContextlessSession:
+    """A session whose ``sparkContext`` raises ``error``."""
+
+    def __init__(self, error):
+        self._error = error
+
+    @property
+    def sparkContext(self):
+        raise self._error
+
+
+def test_spread_returns_a_connect_dataframe_unchanged():
+    """A Connect DataFrame has no partition count to read, so ``spread``
+    returns it as it is; any other error reading the context propagates."""
+    from pyspark.errors import PySparkAttributeError
+
+    connect_error = PySparkAttributeError(
+        errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+        messageParameters={"attr_name": "sparkContext"},
+    )
+    df = SimpleNamespace(sparkSession=_ContextlessSession(connect_error))
+    assert session.spread(df) is df
+
+    df = SimpleNamespace(sparkSession=_ContextlessSession(RuntimeError("boom")))
+    with pytest.raises(RuntimeError, match="boom"):
+        session.spread(df)
+
+
+def test_only_session_and_ranking_read_the_application_id():
+    """Memo keys and per-session names use ``session.session_token``,
+    which also works on Spark Connect; ``sparkContext.applicationId``
+    raises there. Besides ``session.py`` only ``operators/ranking.py``
+    reads it, because ``setCheckpointDir`` needs a SparkContext anyway."""
+    package = os.path.join(ROOT, "aw3d30_parquet_spark")
+    allowed = {"session.py", os.path.join("operators", "ranking.py")}
+    readers = set()
+    for dirpath, _, files in os.walk(package):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            if any(
+                isinstance(node, ast.Attribute) and node.attr == "applicationId"
+                for node in ast.walk(tree)
+            ):
+                readers.add(os.path.relpath(path, package))
+    assert readers == allowed

@@ -1,13 +1,19 @@
 """W-tests: what the package does to the Python workers that run its
-kernels — the zip it ships them and the import-cache hook it installs
-in reused workers (``aw3d30_parquet_spark._install_worker_import_hook``).
+kernels — the zip it ships them and the two hooks it installs in reused
+workers: the import-cache hook
+(``aw3d30_parquet_spark._install_worker_import_hook``) and the
+between-task collection that freezes its survivors
+(``aw3d30_parquet_spark._install_worker_gc_hook``).
 """
 
 from __future__ import annotations
 
+import gc
 import importlib
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 from types import SimpleNamespace
@@ -75,6 +81,148 @@ def test_reused_worker_skips_zip_rereads(spark):
     assert reported == [0] * len(reported)
 
 
+def test_reused_worker_collection_walks_only_new_objects(spark):
+    """After each task the daemon's ``gc.collect()`` freezes what
+    survives, so the next task starts with only the objects the last one
+    left tracked (not the ~73k its imports hold), the frozen set stays
+    the same size from task to task, and a cycle a task drops is still
+    collected before the next task starts.
+
+    Each task reports, from its worker, its task number there, the
+    tracked and frozen object counts at its start, and whether the
+    previous task's dropped cycle is gone. Jobs repeat until one worker
+    has run 21 tasks."""
+
+    def kernel(batches):
+        import weakref
+
+        import pandas as pd
+
+        assert aw3d30_parquet_spark.__name__
+        tracked = len(gc.get_objects())
+        frozen = gc.get_freeze_count()
+        probe = getattr(sys, "_gc_freeze_probe", None)
+        if probe is None:
+            probe = sys._gc_freeze_probe = {"tasks": 0, "cycle": None}
+        cycle_ref = probe["cycle"]
+        collected = None if cycle_ref is None else cycle_ref() is None
+        probe["tasks"] += 1
+
+        class Node:
+            pass
+
+        node = Node()
+        node.self = node
+        probe["cycle"] = weakref.ref(node)
+        # a young collection ages the live cycle into the oldest
+        # generation, and must not freeze it
+        gc.collect(1)
+        for _ in batches:
+            pass
+        yield pd.DataFrame(
+            {
+                "pid": [os.getpid()],
+                "task": [probe["tasks"]],
+                "tracked": [tracked],
+                "frozen": [frozen],
+                "collected": pd.array([collected], dtype="boolean"),
+            }
+        )
+
+    schema = "pid long, task long, tracked long, frozen long, collected boolean"
+    by_worker: dict[int, list] = {}
+    for _ in range(12):
+        df = spark.range(0, 32, numPartitions=32)
+        for row in df.mapInPandas(kernel, schema).collect():
+            by_worker.setdefault(row.pid, []).append(row)
+        if max(len(rows) for rows in by_worker.values()) >= 21:
+            break
+    rows = sorted(max(by_worker.values(), key=len), key=lambda r: r.task)
+    assert len(rows) >= 21, "no worker ran 21 tasks"
+    assert [r.task for r in rows] == list(range(1, len(rows) + 1))
+    later = rows[1:]
+    assert max(r.tracked for r in later) < 2_000
+    assert len({r.frozen for r in later}) == 1
+    assert all(r.collected for r in later)
+
+
+_GC_HOOK_SCRIPT = textwrap.dedent(
+    """
+    import gc
+    import os
+    import weakref
+
+    stock = gc.collect
+    import aw3d30_parquet_spark
+
+    if not os.environ.get("SPARK_REUSE_WORKER"):
+        assert gc.collect is stock
+        raise SystemExit(0)
+
+    hooked = gc.collect
+    assert hooked is not stock
+    aw3d30_parquet_spark._install_worker_gc_hook()
+    assert gc.collect is hooked  # idempotent
+
+
+    class Node:
+        pass
+
+
+    def cycle():
+        node = Node()
+        node.self = node
+        return node
+
+
+    live = cycle()
+    for young in (0, 1):
+        gc.collect(young)
+        gc.collect(generation=young)
+        assert gc.get_freeze_count() == 0, young
+
+    dropped = weakref.ref(cycle())
+    assert gc.collect() >= 1
+    assert dropped() is None
+    frozen = gc.get_freeze_count()
+    assert frozen > 0
+    assert len(gc.get_objects()) < frozen
+
+    # after a freeze, a full collection still frees a cycle dropped
+    # since, and the frozen live cycle is intact
+    dropped = weakref.ref(cycle())
+    assert gc.collect(2) >= 1
+    assert dropped() is None
+    assert gc.get_freeze_count() >= frozen
+    assert live.self is live
+    """
+)
+
+
+@pytest.mark.parametrize("reuse", [True, False], ids=["reused", "one-task"])
+def test_gc_hook_freezes_after_full_collections_only(reuse):
+    """In a reused worker a full ``gc.collect()`` still frees cyclic
+    garbage and then freezes the survivors; a young collection freezes
+    nothing; installing twice keeps one hook. Without
+    ``SPARK_REUSE_WORKER`` ``gc.collect`` is the stock function."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_REUSE_WORKER"}
+    if reuse:
+        env["SPARK_REUSE_WORKER"] = "1"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH")) if p
+    )
+    result = subprocess.run(
+        [sys.executable, "-c", _GC_HOOK_SCRIPT],
+        env=env,
+        cwd=root,
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert result.returncode == 0, result.stderr
+
+
 def _write_zip(path, modules):
     tmp = str(path) + ".tmp"
     with zipfile.ZipFile(tmp, "w") as zf:
@@ -108,6 +256,9 @@ def test_import_hook_rereads_only_changed_zip(tmp_path, monkeypatch):
     hooked = zipimport.zipimporter.invalidate_caches
     aw3d30_parquet_spark._install_worker_import_hook()  # idempotent
     assert zipimport.zipimporter.invalidate_caches is hooked
+    # the zip hook alone: a frozen pytest heap would keep cyclic garbage
+    # that other tests wait on gc.collect() to free
+    assert not getattr(gc.collect, "_freezes_survivors", False)
 
     reads = []
     read_directory = zipimport._read_directory
