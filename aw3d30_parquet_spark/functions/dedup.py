@@ -27,13 +27,13 @@ from pyspark.sql import functions as F
 
 from aw3d30_parquet_spark.numeric import round_half_up
 from aw3d30_parquet_spark.scratch import (
+    memo,
     scratch_persist,
     scratch_persist_eager,
     scratch_pin,
 )
 from aw3d30_parquet_spark.session import (
     register_views,
-    session_token,
     session_width,
     spread,
 )
@@ -830,36 +830,17 @@ def qgram_editdist_pairs_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ed_verified(spark, sf_dir, "d11").orderBy("id_a", "id_b")
 
 
-#: (session_token, sf_dir) → memoized edit-distance relations, persisted
-#: once per session and shared by d10/d11/d13/d14 (b01's ``_BUCKETED``
-#: pattern; a token is never reused in-process). At 100 TB these
-#: ARE the maintained tables of a dedup service — the corpus prefix
-#: relation, its positional gram index, the rare-gram prefix index, and
-#: the two candidate-pair relations — materialized by an indexing job
-#: and scanned by every downstream query; a session memo is the local
-#: analogue. Built lazily per component so d10 never pays d11's
-#: prefix-ranking cost and vice versa.
-_ED_MEMO: dict[tuple[str, str], dict[str, DataFrame]] = {}
-
-
 def _ed_memo(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    key = (session_token(spark), sf_dir)
-    memo = _ED_MEMO.setdefault(key, {})
-
-    def _release(k=key):
-        for df in _ED_MEMO.pop(k, {}).values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-
-    # shared-memo registration: d10/d11/d13/d14 all touch this group,
-    # keeping it resident across the d-family; it is released once it
-    # goes MEMO_AGE_CAP dispatches untouched. Release is recompute-safe.
-    from aw3d30_parquet_spark.scratch import memo_touch
-
-    memo_touch(("ed", *key), _release)
-    return memo
+    """The session's edit-distance relations, one :func:`memo` entry
+    shared by d10/d11/d13/d14 and filled lazily per component, so d10
+    never pays d11's prefix-ranking cost and vice versa; touching any
+    one keeps all of them resident. At 100 TB these ARE the maintained
+    tables of a dedup service — the corpus prefix relation, its
+    positional gram index, the rare-gram prefix index, and the two
+    candidate-pair relations — materialized by an indexing job and
+    scanned by every downstream query; a session memo is the local
+    analogue."""
+    return memo(spark, "ed", sf_dir, build=dict)
 
 
 def _ed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1601,51 +1582,29 @@ FROM spans GROUP BY doc_id ORDER BY doc_id
 """
 
 
-#: (session_token, sf_dir) → (coalesced read of the persisted d04 pair
-#: relation, pair count, the persisted relation itself) (see
-#: neardup_components docstring: the components job reads the dedup
-#: job's OUTPUT table; testdata is immutable, so memoizing is sound).
-#: On classic Spark the token is the applicationId — unlike id() of a
-#: session wrapper it is never recycled in-process, and persisted RDDs
-#: live per context, so sharing across sessions of one context is
-#: correct. The count is free (the persist is materialized by an
-#: eager count anyway) and drives the broadcast-vs-distributed
-#: components strategy choice.
-_PAIR_GRAPH: dict[tuple, tuple[DataFrame, int, DataFrame]] = {}
-
-
 def _pair_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    key = (session_token(spark), sf_dir)
-    if key not in _PAIR_GRAPH:
+    """(pair relation, pair count) of d04's output, a :func:`memo`
+    entry (see neardup_components docstring: the components job reads
+    the dedup job's OUTPUT table; testdata is immutable, so memoizing
+    is sound). The count is free (the persist is materialized by an
+    eager count anyway) and drives the broadcast-vs-distributed
+    components strategy choice."""
+
+    def build() -> tuple[DataFrame, int]:
         df = ngram_jaccard_pairs(spark, sf_dir).select("id_a", "id_b").persist()
-        n = df.count()
-        # right-size consumer reads (r13, guide §2.2): the cache keeps
-        # the BUILD plan's partitioning (32-64 micro-partitions from
-        # the pair join's exchanges), so every consumer stage of
-        # d08/d12/p12 scheduled a full task wave to read a relation of
-        # a few thousand rows — profiled at 32c: p12's symmetrize ran
-        # 64 tasks × ~75 ms for a 19-row graph. The measured count the
-        # memo already carries derives the read parallelism the same
-        # way the broadcast gate uses it; at the 1 M-edge cap this is
-        # ~11 partitions, and coalesce over the cache is a narrow op —
-        # no second fill, no extra exchange.
-        parts = 1 + n // 100_000
-        # keep the PERSISTED handle (slot 2) — unpersist() must target
-        # it, not the coalesced read plan layered above the cache
-        _PAIR_GRAPH[key] = (df.coalesce(parts), n, df)
+        return df, df.count()
 
-    def _release(k=key):
-        entry = _PAIR_GRAPH.pop(k, None)
-        if entry is not None:
-            try:
-                entry[2].unpersist()
-            except Exception:
-                pass
-
-    from aw3d30_parquet_spark.scratch import memo_touch
-
-    memo_touch(("pair_graph", *key), _release)
-    return _PAIR_GRAPH[key][:2]
+    df, n = memo(spark, "pair_graph", sf_dir, build=build)
+    # right-size consumer reads: the cache keeps the BUILD
+    # plan's partitioning (32-64 micro-partitions from the pair join's
+    # exchanges), so every consumer stage of d08/d12/p12 scheduled a
+    # full task wave to read a relation of a few thousand rows —
+    # profiled at 32c: p12's symmetrize ran 64 tasks × ~75 ms for a
+    # 19-row graph. The measured count derives the read parallelism the
+    # same way the broadcast gate uses it; at the 1 M-edge cap this is
+    # ~11 partitions, and coalesce over the cache is a narrow op — no
+    # second fill, no extra exchange.
+    return df.coalesce(1 + n // 100_000), n
 
 
 #: max member ids listed per cluster row (cluster_size is exact; the

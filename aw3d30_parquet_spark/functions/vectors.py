@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from aw3d30_parquet_spark.numeric import round_half_up
+from aw3d30_parquet_spark.scratch import memo
 from aw3d30_parquet_spark.session import register_views, session_token, spread
 
 DEFAULT_K = 5
@@ -280,36 +281,29 @@ def ann_topk_lsh(
     )
 
 
-#: (session_token, sf_dir, n_clusters) → (assigned-corpus DF, centroids
-#: DF) — the token (the applicationId on classic Spark) is never
-#: recycled in-process, and persisted RDDs live per context, so the key
-#: is session-lifecycle-safe.
-#: The IVF index is a BUILD-ONCE artifact: at 100 TB it is a
-#: cluster-id-partitioned parquet table plus a centroid sidecar,
-#: materialized by an indexing job and reused by every query. Memoizing
-#: the fitted assignment (persisted) and centroid relation per testdata
-#: dir is the in-process analogue — queries measure the probe path, not
-#: a rebuild of the index they'd never rebuild in production.
-_IVF_INDEX: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-
-
 def _ivf_index(
     spark: SparkSession, sf_dir: str, n_clusters: int
 ) -> tuple[DataFrame, DataFrame]:
-    key = (session_token(spark), sf_dir, n_clusters)
-    from aw3d30_parquet_spark.scratch import memo_touch
+    """(assigned-corpus DF, centroids DF), a :func:`memo` entry. The IVF
+    index is a BUILD-ONCE artifact: at 100 TB it is a
+    cluster-id-partitioned parquet table plus a centroid sidecar,
+    materialized by an indexing job and reused by every query.
+    Memoizing the fitted assignment (persisted) and centroid relation
+    per testdata dir is the in-process analogue — queries measure the
+    probe path, not a rebuild of the index they'd never rebuild in
+    production."""
+    return memo(
+        spark,
+        "ivf",
+        sf_dir,
+        n_clusters,
+        build=lambda: _build_ivf_index(spark, sf_dir, n_clusters),
+    )
 
-    def _release(k=key):
-        entry = _IVF_INDEX.pop(k, None)
-        if entry is not None:
-            try:
-                entry[0].unpersist()
-            except Exception:
-                pass
 
-    if key in _IVF_INDEX:
-        memo_touch(("ivf", *key), _release)
-        return _IVF_INDEX[key]
+def _build_ivf_index(
+    spark: SparkSession, sf_dir: str, n_clusters: int
+) -> tuple[DataFrame, DataFrame]:
     from pyspark.ml.clustering import KMeans
 
     # persist: the normalized-feature projection is re-read by every
@@ -343,8 +337,6 @@ def _ivf_index(
         "cluster_id int, centroid array<double>",
     )
     feats.unpersist()
-    _IVF_INDEX[key] = (corpus, centroids)
-    memo_touch(("ivf", *key), _release)
     return corpus, centroids
 
 
@@ -481,12 +473,6 @@ def _neardup_pairs_df(
     )
 
 
-#: (session_token, sf_dir, M, K) → (codes DF, flat codebook ndarray).
-#: Like the IVF index: a build-once artifact (at 100 TB the uint8 code
-#: table is materialized next to the corpus — 8 bytes/vector vs 256 —
-#: and the codebook is a tiny sidecar every executor holds).
-_PQ_INDEX: dict[tuple, tuple] = {}
-
 PQ_M = 8  # subspaces (64-dim → 8 × 8-dim)
 PQ_K = 16  # centroids per subspace (4-bit codes)
 PQ_TRAIN_SAMPLE = 4096  # codebooks train on a bounded sample (faiss-style)
@@ -518,20 +504,16 @@ def _pq_train(vecs, m: int = PQ_M, k: int = PQ_K, iters: int = 10):
 
 
 def _pq_index(spark: SparkSession, sf_dir: str):
-    key = (session_token(spark), sf_dir, PQ_M, PQ_K)
-    from aw3d30_parquet_spark.scratch import memo_touch
+    """(codes DF, codebook ndarray), a :func:`memo` entry. Like the IVF
+    index: a build-once artifact (at 100 TB the uint8 code table is
+    materialized next to the corpus — 8 bytes/vector vs 256 — and the
+    codebook is a tiny sidecar every executor holds)."""
+    return memo(
+        spark, "pq", sf_dir, PQ_M, PQ_K, build=lambda: _build_pq_index(spark, sf_dir)
+    )
 
-    def _release(k=key):
-        entry = _PQ_INDEX.pop(k, None)
-        if entry is not None:
-            try:
-                entry[0].unpersist()
-            except Exception:
-                pass
 
-    if key in _PQ_INDEX:
-        memo_touch(("pq", *key), _release)
-        return _PQ_INDEX[key]
+def _build_pq_index(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -566,8 +548,6 @@ def _pq_index(spark: SparkSession, sf_dir: str):
         encode("embedding").alias("codes"),
     ).persist()
     codes.count()  # materialize the build-once artifact
-    _PQ_INDEX[key] = (codes, books)
-    memo_touch(("pq", *key), _release)
     return codes, books
 
 
@@ -1215,12 +1195,6 @@ IVF_SALT_MIN_ROWS = 4096
 #: the catalog schema the same way it comes from one LIMIT-1 row here.
 IVF_ROW_OVERHEAD_BYTES = 64
 
-#: (session tag, sf_dir) → (k, n_probe, salt_target): the derived
-#: policy is a pure function of the corpus, memoized so repeated probes
-#: don't recount; registered with the scratch registry so eviction
-#: re-derives it if the corpus is regenerated in-place mid-session.
-_IVF_POLICY: dict[tuple, tuple[int, int, int]] = {}
-
 
 def _probe_width(k_clusters: int) -> int:
     """Probe-width policy: ~¼ of the index directories, never fewer
@@ -1236,27 +1210,19 @@ def _ivf_policy(spark: SparkSession, sf_dir: str) -> tuple[int, int, int]:
     Mirrored bit-for-bit by the v10 DuckDB oracle's ``pol`` CTE —
     floor(sqrt(N)+0.5) is used on both sides because it has no
     banker's-rounding ambiguity. At 100 TB the count and byte figures
-    come from parquet footers/table stats, not a data scan.
+    come from parquet footers/table stats, not a data scan. A
+    :func:`memo` entry, so repeated probes don't recount, and a corpus
+    regenerated in-place mid-session is re-derived once the entry ages
+    out.
     """
     import math
 
-    from aw3d30_parquet_spark.scratch import memo_touch
-
-    key = (session_token(spark), sf_dir)
-
-    def _release(kk=key):
-        # registry-evictable like the index memo: a corpus regenerated
-        # in-place mid-session re-derives the policy after eviction
-        # instead of keeping stale N/bytes figures forever
-        _IVF_POLICY.pop(kk, None)
-
-    if key not in _IVF_POLICY:
+    def build() -> tuple[int, int, int]:
         n = _emb(spark, sf_dir).count()
         k = max(
             IVF_K_MIN,
             min(IVF_K_MAX, int(math.floor(math.sqrt(n) + 0.5))),
         )
-        n_probe = _probe_width(k)
         # reproducible row-width model (see IVF_ROW_OVERHEAD_BYTES):
         # 4 B per embedding element + fixed overhead, dim read from one
         # LIMIT-1 row (catalog schema at 100 TB) — NOT on-disk bytes,
@@ -1269,15 +1235,9 @@ def _ivf_policy(spark: SparkSession, sf_dir: str) -> tuple[int, int, int]:
         salt_target = int(
             max(IVF_SALT_MIN_ROWS, IVF_FILE_SLO_BYTES // row_bytes)
         )
-        _IVF_POLICY[key] = (k, n_probe, salt_target)
-    memo_touch(("ivf_policy", *key), _release)
-    return _IVF_POLICY[key]
+        return k, _probe_width(k), salt_target
 
-#: (session tag, sf_dir) → (index dir, centroid rows) — b01's
-#: build-once pattern for the DISK index: the parquet tree is the
-#: artifact, the k×64 centroid ints are the bounded driver-side
-#: sidecar (the PQ-codebook class), so reuse carries no lineage.
-_IVF_PARQUET: dict[tuple, tuple[str, list]] = {}
+    return memo(spark, "ivf_policy", sf_dir, build=build)
 
 
 def _ivf_parquet_index(
@@ -1309,16 +1269,26 @@ def _ivf_parquet_index(
         k_clusters = _ivf_policy(spark, sf_dir)[0]
     if salt_target is None:
         salt_target = _ivf_policy(spark, sf_dir)[2]
-    key = (session_token(spark), sf_dir, k_clusters, salt_target)
+    return memo(
+        spark,
+        "ivf_parquet",
+        sf_dir,
+        k_clusters,
+        salt_target,
+        build=lambda: _build_ivf_parquet_index(
+            spark, sf_dir, k_clusters, salt_target
+        ),
+    )
 
-    def _release(kk=key):
-        _IVF_PARQUET.pop(kk, None)  # dir reaped by _export_dir atexit
 
-    from aw3d30_parquet_spark.scratch import memo_touch
-
-    if key in _IVF_PARQUET:
-        memo_touch(("ivf_parquet", *key), _release)
-        return _IVF_PARQUET[key]
+def _build_ivf_parquet_index(
+    spark: SparkSession, sf_dir: str, k_clusters: int, salt_target: int
+) -> tuple[str, list]:
+    """(index dir, centroid rows) — b01's build-once pattern for the
+    DISK index: the parquet tree is the artifact (reaped with the
+    export dir at exit, not on release), the k×64 centroid ints are the
+    bounded driver-side sidecar (the PQ-codebook class), so reuse
+    carries no lineage."""
     from aw3d30_parquet_spark.sources.files import _export_dir
 
     assign, cent = _kmeans_assign(spark, sf_dir, k=k_clusters)
@@ -1361,8 +1331,6 @@ def _ivf_parquet_index(
         (int(r["cid"]), [int(x) for x in r["ci"]])
         for r in cent.collect()
     ]
-    _IVF_PARQUET[key] = (out, cents)
-    memo_touch(("ivf_parquet", *key), _release)
     return out, cents
 
 

@@ -12,6 +12,7 @@ hence ``saveAsTable`` rather than a bare ``parquet(path)`` write.
 
 from __future__ import annotations
 
+import atexit
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,14 +52,8 @@ def bucketed_equi_join(
 #: v05's IVF); every later call joins the existing bucketed tables.
 _BUCKETED: dict[tuple[str, str], tuple[str, str]] = {}
 
-#: key → the session that WROTE those tables: each session's tables
-#: are dropped through its own catalog at exit (a later session's
-#: in-memory catalog has no entry for them, and issuing drops through
-#: a stopped context is a silent no-op)
-_OWNERS: dict[tuple[str, str], SparkSession] = {}
-
-#: one atexit hook per process (not per (app, sf_dir))
-_ATEXIT_ARMED = False
+#: managed table → the session that WROTE it, for :func:`drop_at_exit`
+_EXIT_DROPS: dict[str, SparkSession] = {}
 
 #: filesystem reap age gate: a b01_* warehouse directory from a
 #: FOREIGN session tag younger than this may belong to a concurrently
@@ -109,15 +104,32 @@ def _reap_stale_b01(
         pass
 
 
+def drop_at_exit(spark: SparkSession, *tables: str) -> None:
+    """Drop ``tables`` (b01's fact tables, l02's edge table) when the
+    process exits, each through the session that wrote it: a later
+    session's in-memory catalog has no entry for it, and a drop issued
+    through a stopped context is a silent no-op. The tables are never
+    aged, so every later call in the process reuses them. The first
+    call arms the one atexit hook."""
+    if not _EXIT_DROPS:
+        atexit.register(_drop_at_exit)
+    _EXIT_DROPS.update(dict.fromkeys(tables, spark))
+
+
+def _drop_at_exit() -> None:
+    for table, owner in _EXIT_DROPS.items():
+        try:
+            owner.sql(f"DROP TABLE IF EXISTS {table}")
+        except Exception:
+            pass
+
+
 def _bucketed_fact_tables(
     spark: SparkSession, sf_dir: str, buckets: int
 ) -> tuple[str, str]:
-    import atexit
     import re
 
     from aw3d30_parquet_spark.operators.relational import _t
-
-    global _ATEXIT_ARMED
 
     app = session_token(spark)
     key = (app, sf_dir)
@@ -136,31 +148,12 @@ def _bucketed_fact_tables(
     )
     write_bucketed(orders, ot, "o_orderkey", buckets=buckets)
     write_bucketed(lineitem, lt, "l_orderkey", buckets=buckets)
-    # managed tables land under spark.sql.warehouse.dir — drop whatever
-    # _BUCKETED holds at exit, each table through the session that
-    # OWNS it (a restarted context can't drop a predecessor's tables;
-    # those leak to the age-gated filesystem reap above instead)
-    if not _ATEXIT_ARMED:
-        _ATEXIT_ARMED = True
-
-        def _drop_all() -> None:
-            for k, pair in list(_BUCKETED.items()):
-                owner = _OWNERS.get(k)
-                if owner is not None:
-                    for t in pair:
-                        _drop_quietly(owner, t)
-
-        atexit.register(_drop_all)
+    # managed tables land under spark.sql.warehouse.dir (a restarted
+    # context can't drop a predecessor's tables; those leak to the
+    # age-gated filesystem reap above instead)
+    drop_at_exit(spark, ot, lt)
     _BUCKETED[key] = (ot, lt)
-    _OWNERS[key] = spark
     return ot, lt
-
-
-def _drop_quietly(spark: SparkSession, table: str) -> None:
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-    except Exception:
-        pass
 
 
 def bucketed_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:

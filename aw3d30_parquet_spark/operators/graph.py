@@ -206,11 +206,8 @@ def pagerank_supplier_customer(
 PR_BUCKETS = 8
 
 #: (session tag, sf_dir) → bucketed edge_deg table already written
-#: this session (build-once, like b01's fact tables), plus the owning
-#: session for the atexit drop.
+#: this session (build-once, like b01's fact tables).
 _EDGE_TABLES: dict[tuple[str, str], str] = {}
-_EDGE_OWNERS: dict[tuple[str, str], SparkSession] = {}
-_EDGE_ATEXIT = [False]
 
 
 def _bucketed_edge_deg(spark: SparkSession, sf_dir: str) -> str:
@@ -220,12 +217,11 @@ def _bucketed_edge_deg(spark: SparkSession, sf_dir: str) -> str:
     iteration. The write is the build-once index cost (b01's pattern,
     including the crashed-session directory reap); every later call
     reuses the table."""
-    import atexit
     import re
 
     from aw3d30_parquet_spark.operators.bucketing import (
-        _drop_quietly,
         _reap_stale_b01,
+        drop_at_exit,
         write_bucketed,
     )
 
@@ -252,18 +248,8 @@ def _bucketed_edge_deg(spark: SparkSession, sf_dir: str) -> str:
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     write_bucketed(edges.join(deg, "src"), tbl, "src", buckets=PR_BUCKETS)
     edges.unpersist()
-    if not _EDGE_ATEXIT[0]:
-        _EDGE_ATEXIT[0] = True
-
-        def _drop_all() -> None:
-            for k, t in list(_EDGE_TABLES.items()):
-                owner = _EDGE_OWNERS.get(k)
-                if owner is not None:
-                    _drop_quietly(owner, t)
-
-        atexit.register(_drop_all)
+    drop_at_exit(spark, tbl)
     _EDGE_TABLES[key] = tbl
-    _EDGE_OWNERS[key] = spark
     return tbl
 
 

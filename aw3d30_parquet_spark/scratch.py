@@ -18,26 +18,32 @@ each, bound that:
   the previous generation of the SAME key, so per-op loops — k-means
   iterations, label propagation — stay bounded within one query too.)
 
-- **memo groups** (build-once shared artifacts consumed across queries:
+- **memos** (build-once shared artifacts consumed across queries:
   the d10/d11/d13/d14 gram relations, the d08/d12 pair graph, IVF/PQ
-  indexes): registered with a release callback by :func:`memo_touch`
-  and released once they go more than :data:`MEMO_AGE_CAP` dispatches
-  without a touch, or by :func:`release_all`. Groups are keyed per
-  (kind, session, sf_dir[, params]), so a probe run against a
-  different corpus dir ages out the stale corpus' index.
+  indexes and the IVF policy): one function, :func:`memo`, owns all of
+  them. It keys each entry ``(kind, session_token, sf_dir, *params)``,
+  builds it on the first call, restarts its age clock on every call,
+  and releases it once it goes more than :data:`MEMO_AGE_CAP`
+  dispatches untouched, or at :func:`release_all`. Release unpersists
+  every DataFrame in the stored value and drops the entry, so the next
+  call rebuilds; a value holding no DataFrame is just dropped. Keying
+  by sf_dir means a probe run against a different corpus dir ages out
+  the stale corpus' index.
 
 The age rule is the only memo rule because it is the only one that
 fires: every full-suite bench run (688–712 dispatches at 16g, and one
-at 4g driver memory) evicted 6 groups by age and none by a count cap or
+at 4g driver memory) evicted 6 memos by age and none by a count cap or
 a cached-bytes budget (1.19 GB at 4g, against 17 MB of sf0.1 input).
 
 SEQUENTIAL-DISPATCH CONTRACT: :func:`begin_query` assumes the previous
 query's consumer action has already run — the driver, bench.py and
 driver_sim all dispatch queries sequentially (construct → materialize
 → next). A caller that constructs several query DataFrames before
-materializing any silently loses the persisted interims and pays full
-(correctness-safe) recomputation. :func:`eviction_stats` exposes
-per-class eviction counters so such a regression is visible in bench
+materializing any loses the persisted interims and pays full
+(correctness-safe) recomputation; ``tests/test_scratch.py``
+``test_two_queries_built_before_either_runs`` pins both halves: the
+rows are a sequential run's, and :func:`eviction_stats` counts one
+``scratch`` eviction per foreign key, so the regression shows in bench
 output instead of only as inflated wall-clock.
 
 Eviction is always correctness-safe: ``unpersist()`` on a relation a
@@ -48,20 +54,23 @@ only cost a rebuild, never wrong rows.
 from __future__ import annotations
 
 from collections.abc import Callable, Hashable
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from aw3d30_parquet_spark.session import session_token
 
 #: single-consumer scratch: key -> persisted generations (usually one)
 _SCRATCH: dict[str, list[DataFrame]] = {}
 
-#: shared build-once memos: group key -> [release callback, last-touch
-#: query ordinal]
-_MEMO_GROUPS: dict[Hashable, list] = {}
+#: shared build-once memos: (kind, session_token, sf_dir, *params) ->
+#: [value, last-touch query ordinal]
+_MEMOS: dict[Hashable, list] = {}
 
-#: memo AGE cap, in queries: a group untouched for more than this many
+#: memo AGE cap, in queries: a memo untouched for more than this many
 #: begin_query calls is released. The consumers of every shared memo
 #: are family-clustered (the ed grams feed d10–d14, the pair graph
-#: d08/d12/p12, the indexes their own v-query's bench reps), so a group
+#: d08/d12/p12, the indexes their own v-query's bench reps), so a memo
 #: idle for 12 dispatches has no upcoming consumer in any real run
 #: order — holding it only taxes memory-intensive unrelated queries
 #: (measured: v04 15.7 s in-suite vs 4.3 s isolated at 10x with the
@@ -70,11 +79,12 @@ MEMO_AGE_CAP = 12
 
 #: per-class eviction counters (see eviction_stats) — "scratch" counts
 #: foreign-family scratch releases at begin_query, "memo_age" counts
-#: shared groups released by the age rule. A suite run whose "scratch"
+#: memos released by the age rule, "release_errors" counts unpersist()
+#: calls that raised during a release. A suite run whose "scratch"
 #: count far exceeds its dispatch count signals the sequential-dispatch
 #: contract is being violated (interims released before their consumer
 #: action ran).
-_EVICTIONS = {"scratch": 0, "memo_age": 0}
+_EVICTIONS = {"scratch": 0, "memo_age": 0, "release_errors": 0}
 
 #: monotone dispatch counter (bumped by begin_query) — the age clock.
 _QUERY_ORDINAL = [0]
@@ -98,13 +108,20 @@ def _family(key: str) -> str:
     return key.split(".", 1)[0].split("_", 1)[0]
 
 
+def _unpersist(df: DataFrame) -> None:
+    """``df.unpersist()``; a failure is counted in ``release_errors``
+    rather than raised, because a release runs at a later dispatch
+    than the query that persisted ``df`` and has no caller to fail."""
+    try:
+        df.unpersist()
+    except Exception:
+        _EVICTIONS["release_errors"] += 1
+
+
 def release_key(key: str) -> None:
     """Unpersist and drop every generation registered under ``key``."""
     for old in _SCRATCH.pop(key, []):
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+        _unpersist(old)
 
 
 def scratch_persist(key: str, df: DataFrame) -> DataFrame:
@@ -146,8 +163,8 @@ def scratch_pin(key: str, df: DataFrame) -> DataFrame:
 def begin_query(name: str) -> None:
     """Mark the start of query ``name``: release every OTHER family's
     single-consumer scratch (the scratch rule), then release every
-    shared memo group that has gone more than :data:`MEMO_AGE_CAP`
-    dispatches without a touch (the memo rule).
+    memo that has gone more than :data:`MEMO_AGE_CAP` dispatches
+    without a touch (the memo rule).
 
     CONTRACT (sequential dispatch): queries run one at a time through
     the driver/bench dispatch — construct, materialize, then the next
@@ -162,52 +179,76 @@ def begin_query(name: str) -> None:
         _EVICTIONS["scratch"] += 1
     _QUERY_ORDINAL[0] += 1
     now = _QUERY_ORDINAL[0]
-    for group in [
-        g
-        for g, (_, touched) in _MEMO_GROUPS.items()
-        if now - touched > MEMO_AGE_CAP
+    for key in [
+        k for k, (_, touched) in _MEMOS.items() if now - touched > MEMO_AGE_CAP
     ]:
-        _release_group(group)
+        _release_memo(key)
         _EVICTIONS["memo_age"] += 1
 
 
-def memo_touch(group: Hashable, release: Callable[[], None]) -> None:
-    """Register a shared memo group, or restart its age clock.
+def memo(
+    spark: SparkSession,
+    kind: str,
+    sf_dir: str,
+    *params: Hashable,
+    build: Callable[[], Any],
+) -> Any:
+    """The build-once artifact ``kind`` of (session, ``sf_dir``,
+    ``*params``): ``build()``'s value, built on the first call and
+    returned as stored afterwards. Every call restarts the entry's age
+    clock through :func:`memo_touch`.
 
-    ``release`` must free the group's persisted relations AND remove
-    its entries from the owning module's memo dict, so a later consumer
-    rebuilds instead of reading unpersisted ghosts. A group already
-    registered keeps its first callback. Any number of groups may be
-    resident at once; :func:`begin_query` releases a group once it has
-    gone more than :data:`MEMO_AGE_CAP` dispatches without a touch —
-    the only memo rule, because a group count cap and a cached-bytes
-    budget never fired in a full suite run.
-    """
-    _MEMO_GROUPS.setdefault(group, [release, 0])[1] = _QUERY_ORDINAL[0]
+    The value may be a DataFrame, a tuple, or a dict the caller fills
+    lazily (the edit-distance memo adds each relation on first use, so
+    touching any one keeps all of them resident). On release every
+    DataFrame in it (the value itself, a tuple's items, a dict's
+    values) is unpersisted, and the entry is dropped."""
+    key = (kind, session_token(spark), sf_dir, *params)
+    if key not in _MEMOS:
+        _MEMOS[key] = [build(), 0]
+    memo_touch(key)
+    return _MEMOS[key][0]
 
 
-def _release_group(group: Hashable) -> None:
-    """Drop ``group`` from the registry and run its release callback."""
-    release, _ = _MEMO_GROUPS.pop(group)
-    try:
-        release()
-    except Exception:
-        pass
+def memo_touch(key: Hashable) -> None:
+    """Restart the age clock of memo entry ``key``."""
+    _MEMOS[key][1] = _QUERY_ORDINAL[0]
+
+
+def memo_peek(
+    spark: SparkSession, kind: str, sf_dir: str, *params: Hashable
+) -> Any:
+    """The value :func:`memo` holds for these arguments, or None if it
+    was never built or has been released; builds and touches nothing."""
+    entry = _MEMOS.get((kind, session_token(spark), sf_dir, *params))
+    return None if entry is None else entry[0]
+
+
+def _release_memo(key: Hashable) -> None:
+    """Drop memo ``key`` and unpersist every DataFrame its value holds."""
+    value, _ = _MEMOS.pop(key)
+    if isinstance(value, dict):
+        value = tuple(value.values())
+    elif not isinstance(value, tuple):
+        value = (value,)
+    for item in value:
+        if isinstance(item, DataFrame):
+            _unpersist(item)
 
 
 def release_all() -> None:
-    """Free everything: all scratch generations and all memo groups.
+    """Free everything: all scratch generations and all memos.
     bench.py calls this before an isolated re-measurement pass so the
     storage pool starts empty, matching a fresh-session run."""
     for key in list(_SCRATCH):
         release_key(key)
-    for group in list(_MEMO_GROUPS):
-        _release_group(group)
+    for key in list(_MEMOS):
+        _release_memo(key)
 
 
 def resident() -> dict[str, list[str]]:
-    """Debug/test view: current scratch keys and memo group reprs."""
+    """Debug/test view: current scratch keys and memo key reprs."""
     return {
         "scratch": sorted(_SCRATCH),
-        "memo_groups": [repr(g) for g in _MEMO_GROUPS],
+        "memo_groups": [repr(k) for k in _MEMOS],
     }

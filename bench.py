@@ -348,18 +348,14 @@ def main() -> None:
     # the v10 corpus-derived IVF policy (k, n_probe, salt_target)
     # changes the index layout and hence v-family timings — record the
     # knobs the run actually used so bench rows are self-describing
-    # across environments (ADVICE r8)
-    try:
-        from aw3d30_parquet_spark.functions import vectors as _vectors
+    # across environments; absent when the memo aged out before the end
+    from aw3d30_parquet_spark import scratch as _scratch
 
-        for (_tag, _sfd), pol in _vectors._IVF_POLICY.items():
-            if _sfd == SF_DIR:
-                result["ivf_policy"] = {
-                    "k": pol[0], "n_probe": pol[1], "salt_target": pol[2]
-                }
-                break
-    except Exception:
-        pass
+    pol = _scratch.memo_peek(spark, "ivf_policy", SF_DIR)
+    if pol is not None:
+        result["ivf_policy"] = {
+            "k": pol[0], "n_probe": pol[1], "salt_target": pol[2]
+        }
     if not only:
         result["ingest"] = _bench_ingest(spark)
     # start/end [1m,5m,15m] host load, end captured AFTER the ingest
@@ -382,8 +378,6 @@ def main() -> None:
     # eviction-policy counters (scratch.py): a "scratch" count far above
     # dispatches means interims were released before their consumer
     # action ran — the sequential-dispatch contract regression signal
-    from aw3d30_parquet_spark import scratch as _scratch
-
     result_file["evictions"] = _scratch.eviction_stats()
     # Full-fidelity copy on disk (the driver's stdout capture keeps only
     # a bounded tail — round 1 lost the head of a 4.3 KB line).

@@ -7,6 +7,7 @@ released once it goes more than MEMO_AGE_CAP dispatches untouched.
 Eviction must always be recompute-safe (results identical after any
 release)."""
 
+import ast
 import os
 import sys
 
@@ -61,7 +62,7 @@ def test_eviction_is_recompute_safe(spark):
     )
 
     before = editdist_candidate_metrics(spark, SF_SMOKE).collect()
-    scratch.release_all()  # drops the _ED_MEMO group via its callback
+    scratch.release_all()  # drops the "ed" memo and unpersists it
     after = editdist_candidate_metrics(spark, SF_SMOKE).collect()
     assert before == after
 
@@ -78,38 +79,55 @@ def test_queries_dispatch_wraps_with_eviction(spark):
     assert "zz9" not in scratch.resident()["scratch"]
 
 
+def _memo_frame(spark, kind, i, built):
+    """Memo entry (kind, i) holding one persisted frame; ``built``
+    records every build, so a re-touch that rebuilt would show."""
+
+    def build():
+        built.append(i)
+        return spark.range(i + 1).persist()
+
+    return scratch.memo(spark, kind, "sf", i, build=build)
+
+
 def test_memo_groups_release_by_age_only(spark):
     """Six memo groups touched inside one dispatch all stay resident
     (no group count cap), and each is released by begin_query exactly
     MEMO_AGE_CAP + 1 dispatches after its last touch."""
+    from aw3d30_parquet_spark.session import session_token
+
     scratch.release_all()
-    released = []
-    groups = [("age_only", i) for i in range(6)]
+    built = []
+    groups = range(6)
     scratch.begin_query("w00_noop")
-    for g in groups:
-        scratch.memo_touch(g, lambda g=g: released.append(g))
-    assert released == []
-    assert scratch.resident()["memo_groups"] == [repr(g) for g in groups]
+    frames = {g: _memo_frame(spark, "age_only", g, built) for g in groups}
+    assert all(f.storageLevel.useMemory for f in frames.values())
+    tok = session_token(spark)
+    assert scratch.resident()["memo_groups"] == [
+        repr(("age_only", tok, "sf", g)) for g in groups
+    ]
     # group i is touched again i dispatches later, so the six age out
     # on six different dispatches
     last_touch = {groups[0]: 0}
     for step in range(1, len(groups)):
         scratch.begin_query(f"w{step:02d}_noop")
-        scratch.memo_touch(groups[step], lambda: released.append("dup"))
+        assert _memo_frame(spark, "age_only", step, built) is frames[step]
         last_touch[groups[step]] = step
-    assert released == []
+    assert built == list(groups)  # a re-touch keeps the first build
     aged0 = scratch.eviction_stats()["memo_age"]
     released_at = {}
     step = len(groups) - 1
     while len(released_at) < len(groups) and step < 50:
         step += 1
-        seen = len(released)
         scratch.begin_query(f"x{step:02d}_noop")
-        released_at.update((g, step) for g in released[seen:])
+        released_at.update(
+            (g, step)
+            for g, f in frames.items()
+            if g not in released_at and not f.storageLevel.useMemory
+        )
     assert released_at == {
         g: t + scratch.MEMO_AGE_CAP + 1 for g, t in last_touch.items()
     }
-    assert "dup" not in released  # a re-touch keeps the first callback
     assert scratch.eviction_stats()["memo_age"] == aged0 + len(groups)
     assert scratch.resident()["memo_groups"] == []
 
@@ -117,19 +135,65 @@ def test_memo_groups_release_by_age_only(spark):
 def test_memo_age_expiry(spark):
     """A memo group untouched for MEMO_AGE_CAP dispatches is expired by
     begin_query; touching it resets the clock."""
-    released = []
+    built = []
     scratch.release_all()
-    scratch.memo_touch(("age", 1), lambda: released.append(1))
+    frame = _memo_frame(spark, "age", 1, built)
     for i in range(scratch.MEMO_AGE_CAP):
         scratch.begin_query(f"x{i:02d}_noop")
-        scratch.memo_touch(("age", 1), lambda: released.append("dup"))
-    assert released == []  # touched every dispatch: never expires
+        _memo_frame(spark, "age", 1, built)
+    assert built == [1]  # touched every dispatch: never expires
     for i in range(scratch.MEMO_AGE_CAP):
         scratch.begin_query(f"y{i:02d}_noop")
-    assert released == []  # exactly at the cap: still resident
+    assert frame.storageLevel.useMemory  # exactly at the cap: resident
     scratch.begin_query("z00_noop")
-    assert released == [1]  # one past the cap: expired
+    assert not frame.storageLevel.useMemory  # one past the cap: expired
+    assert scratch.resident()["memo_groups"] == []
     scratch.release_all()
+
+
+def test_aged_out_memo_rebuilds_the_same_rows(spark):
+    """d08 reads the pair-graph memo; once it ages out, the next d08
+    rebuilds it and returns the same rows."""
+    import __spark_entry__ as contract
+    from aw3d30_parquet_spark.oracle import canonical_hash
+
+    d08 = contract.queries()["d08_neardup_components"]
+    scratch.release_all()
+    before = canonical_hash(d08(spark, SF_SMOKE).toPandas())
+    assert any("pair_graph" in g for g in scratch.resident()["memo_groups"])
+    for i in range(scratch.MEMO_AGE_CAP + 1):
+        scratch.begin_query(f"y{i:02d}_noop")
+    assert not any("pair_graph" in g for g in scratch.resident()["memo_groups"])
+    assert canonical_hash(d08(spark, SF_SMOKE).toPandas()) == before
+
+
+def test_two_queries_built_before_either_runs(spark):
+    """The sequential-dispatch contract's failure mode stays correct
+    and visible: building d04 and then t09 before materializing either
+    releases d04's scratch at t09's begin_query, yet both return the
+    rows of a sequential run, and the ``scratch`` eviction count rises
+    by exactly the number of foreign scratch keys released."""
+    import __spark_entry__ as contract
+    from aw3d30_parquet_spark.oracle import canonical_hash
+
+    qs = contract.queries()
+    names = ("d04_ngram_jaccard_pairs", "t09_bm25_search")
+    sequential = {
+        n: canonical_hash(qs[n](spark, SF_SMOKE).toPandas()) for n in names
+    }
+    scratch.release_all()
+    d04 = qs[names[0]](spark, SF_SMOKE)
+    foreign = [
+        k for k in scratch.resident()["scratch"] if scratch._family(k) != "t09"
+    ]
+    assert foreign  # d04 left scratch for t09's dispatch to release
+    evicted0 = scratch.eviction_stats()["scratch"]
+    t09 = qs[names[1]](spark, SF_SMOKE)
+    assert scratch.eviction_stats()["scratch"] - evicted0 == len(foreign)
+    built_first = {names[0]: d04, names[1]: t09}
+    assert {
+        n: canonical_hash(df.toPandas()) for n, df in built_first.items()
+    } == sequential
 
 
 def test_session_token_stable_and_gc_safe(spark, monkeypatch):
@@ -138,15 +202,14 @@ def test_session_token_stable_and_gc_safe(spark, monkeypatch):
     stable across calls for the same live object and (b) can never be
     served to a DIFFERENT object that lands on a recycled id() after
     the first is garbage-collected (an id()-keyed fallback could). The
-    edit-distance memo (dedup._ed_memo) is keyed on it, so a new
-    session never gets a dead session's memo either."""
+    edit-distance memo (dedup._ed_memo, a scratch.memo entry) is keyed
+    on it, so a new session never gets a dead session's memo either."""
     import gc
 
     from aw3d30_parquet_spark.functions import dedup
     from aw3d30_parquet_spark.session import session_token, session_width
 
-    monkeypatch.setattr(dedup, "_ED_MEMO", {})
-    monkeypatch.setattr(scratch, "memo_touch", lambda group, release: None)
+    monkeypatch.setattr(scratch, "_MEMOS", {})
 
     assert session_token(spark) == spark.sparkContext.applicationId
 
@@ -174,6 +237,32 @@ def test_session_token_stable_and_gc_safe(spark, monkeypatch):
         dedup._ed_memo(b, "sf")["docs"] = "b's relation"
         seen.add(tok_b)
         del b
+
+
+def test_only_scratch_touches_the_memo_clock():
+    """Every build-once memo goes through ``scratch.memo``: no package
+    module other than ``scratch.py`` names ``memo_touch``."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    package = os.path.join(root, "aw3d30_parquet_spark")
+    touchers = set()
+    for dirpath, _, files in os.walk(package):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                named = (
+                    (isinstance(node, ast.Name) and node.id == "memo_touch")
+                    or (isinstance(node, ast.Attribute) and node.attr == "memo_touch")
+                    or (
+                        isinstance(node, ast.alias) and node.name == "memo_touch"
+                    )
+                )
+                if named:
+                    touchers.add(os.path.relpath(path, package))
+    assert touchers == {"scratch.py"}
 
 
 def test_spread_is_size_derived_and_parallelism_capped(spark):
