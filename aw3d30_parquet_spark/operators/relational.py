@@ -736,7 +736,8 @@ def a01_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         _t(spark, sf_dir, "events")
         .groupBy("event_type")
-        # rsd 0.02 → ~2^15 registers per sketch (vs ~2^18 at 0.01):
+        # HLL++ precision p = ceil(2·log2(1.106/rsd)): rsd 0.02 → 2^12
+        # registers per sketch (vs 2^14 at 0.01):
         # 4× smaller partials to update and merge for an error budget
         # still well inside the ±5% tolerance the T5 test pins
         .agg(F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"))

@@ -27,7 +27,6 @@ filename-encoded partitioning.
 
 from __future__ import annotations
 
-import itertools
 import os
 import re
 from typing import Iterable, Iterator
@@ -132,9 +131,8 @@ def tiles_for_set(set_name: str) -> list[tuple[int, int]]:
 
 
 def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
-    """The per-tile loop every tile kernel shares: ``(path, content,
-    *extra)`` rows → ``(coord, band, geotransform, *extra)`` for each
-    decodable tile.
+    """The per-tile loop every tile kernel shares: ``(path, content)``
+    rows → ``(coord, band, geotransform)`` for each decodable tile.
 
     A malformed key is rejected like the reference's parse
     (``src/main.rs:131``). ``on_corrupt``: 'fail' raises on undecodable
@@ -144,7 +142,7 @@ def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
     must not kill hours of work — re-runs pick up skipped tiles for free
     via the idempotent sink).
     """
-    for path, content, *extra in rows:
+    for path, content in rows:
         coord = parse_tile_key(os.path.basename(str(path)))
         if coord is None:
             continue
@@ -154,7 +152,7 @@ def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
             if on_corrupt == "fail":
                 raise
             continue
-        yield (coord, band, gt, *extra)
+        yield coord, band, gt
 
 
 def _decode_partition(batches: Iterable, chunk_rows: int, on_corrupt: str) -> Iterator:
@@ -206,8 +204,8 @@ def _key_coord_cols() -> tuple:
     groups; Java lacks ``(?P<name>)``), ANCHORED to the path's basename:
     matching anywhere in the full path would let a tile-key-shaped
     directory component hijack the coordinates the streaming region
-    filter and the halo join key on (and disagree with the Python
-    kernel, which parses the basename)."""
+    filter keys on (and disagree with the Python kernel, which parses
+    the basename)."""
     jpat = r"^ALPSMLC30_([NS])(\d{3})([EW])(\d{3})_DSM\.tif$"
     fname = F.element_at(F.split(F.col("path"), "/"), -1)
     sign_lat = F.when(F.regexp_extract(fname, jpat, 1) == "S", -1).otherwise(1)
@@ -328,16 +326,16 @@ def read_tile_gradients(
     the seams)."""
     files = _tile_files(spark, tile_paths(spark, tif_dir, set_name))
     return files.mapInPandas(
-        lambda it: _gradient_partition(it, chunk_rows),
+        lambda it: _gradient_partition(it, chunk_rows, {}),
         schema=GRADIENT_SCHEMA,
     )
 
 
-def _halo_partition(batches: Iterable) -> Iterator:
+def _halo_partition(batches: Iterable, listed: set) -> Iterator:
     """mapInPandas kernel: tile files → border rows/cols addressed to
-    each edge-neighbor tile. Per tile: 2 rows + 2 cols ≈ 0.11% of a
-    3600² raster — the halo relation is metadata-sized next to the
-    mosaic."""
+    each edge-neighbor tile in ``listed``, as raw little-endian int32
+    bytes (4 B per sample). Per tile: 2 rows + 2 cols ≈ 0.11% of a
+    3600² raster — the halos are metadata-sized next to the mosaic."""
     import pandas as pd
 
     for pdf in batches:
@@ -352,26 +350,39 @@ def _halo_partition(batches: Iterable) -> Iterator:
                 (la, lo - 1, "right", band[:, 0]),
                 (la, lo + 1, "left", band[:, -1]),
             ):
-                rows["dla"].append(dla)
-                rows["dlo"].append(dlo)
-                rows["side"].append(side)
-                rows["vals"].append(vals.astype("int32").tolist())
+                if (dla, dlo) in listed:
+                    rows["dla"].append(dla)
+                    rows["dlo"].append(dlo)
+                    rows["side"].append(side)
+                    rows["vals"].append(vals.astype("<i4").tobytes())
         yield pd.DataFrame(rows)
 
 
-#: The four tile edges, in the order the halo columns are read.
+def _collect_halos(files: DataFrame, listed: set) -> dict:
+    """The halo pass over ``files`` (one Spark job), collected on the
+    driver → ``{(lat, lon): {side: int32 array}}`` holding only edges
+    addressed to the tile coordinates in ``listed``."""
+    edges = files.mapInPandas(
+        lambda it: _halo_partition(it, listed),
+        schema="dla int, dlo int, side string, vals binary",
+    )
+    halos: dict = {}
+    for r in edges.collect():
+        halos.setdefault((r.dla, r.dlo), {})[r.side] = np.frombuffer(r.vals, "<i4")
+    return halos
+
+
+#: The four tile edges.
 _HALO_SIDES = ("top", "bottom", "left", "right")
 
 
 def _padded_gradients(coord, band, halos: dict) -> tuple:
     """``(dzdx, dzdy)`` of ``band`` in elevation units per pixel step,
-    padded with whichever neighbor borders ``halos`` holds (side → int
-    array or None) and cut back to the band's own cells."""
+    padded with whichever neighbor borders ``halos`` holds (side → int32
+    array; a missing side has no neighbor) and cut back to the band's
+    own cells."""
     h, w = band.shape
-    pads = {
-        s: None if v is None else np.asarray(v, dtype=np.int32)
-        for s, v in halos.items()
-    }
+    pads = {s: halos.get(s) for s in _HALO_SIDES}
     # A neighbor's halo arrives at the NEIGHBOR's resolution: real
     # AW3D30 narrows tiles at high latitude (a 60°N tile is 1800 px wide
     # against its 3600 px south neighbor; ref src/main.rs:172-180 ingests
@@ -424,23 +435,23 @@ def _padded_gradients(coord, band, halos: dict) -> tuple:
     return dzdx[core], dzdy[core]
 
 
-def _gradient_partition(batches: Iterable, chunk_rows: int) -> Iterator:
-    """mapInPandas kernel: ``(path, content[, halo_top, halo_bottom,
-    halo_left, halo_right])`` tile rows → per-cell gradient.
+def _gradient_partition(batches: Iterable, chunk_rows: int, halos: dict) -> Iterator:
+    """mapInPandas kernel: ``(path, content)`` tile rows → per-cell
+    gradient.
 
     ``np.gradient`` runs over each decoded band padded with whichever
-    neighbor borders its row carries (:func:`_padded_gradients`), so
-    interior-of-mosaic seams get true CENTRAL differences while edges
-    without a halo keep the standard one-sided form — exactly what a
-    single global raster would produce. A batch with no halo columns
-    (:func:`read_tile_gradients`) is the tile-local slope layer."""
+    neighbor borders ``halos`` (:func:`_collect_halos`) holds for the
+    tile's coordinate (:func:`_padded_gradients`), so interior-of-mosaic
+    seams get true CENTRAL differences while edges without a halo keep
+    the standard one-sided form — exactly what a single global raster
+    would produce. An empty map (:func:`read_tile_gradients`) is the
+    tile-local slope layer."""
     import pandas as pd
 
     for pdf in batches:
-        halo_cols = [pdf.get(f"halo_{s}", itertools.repeat(None)) for s in _HALO_SIDES]
-        rows = zip(pdf["path"], pdf["content"], *halo_cols)
-        for coord, band, gt, *halos in _decoded_tiles(rows, "fail"):
-            dzdx, dzdy = _padded_gradients(coord, band, dict(zip(_HALO_SIDES, halos)))
+        tiles = _decoded_tiles(zip(pdf["path"], pdf["content"]), "fail")
+        for coord, band, gt in tiles:
+            dzdx, dzdy = _padded_gradients(coord, band, halos.get(coord, {}))
             h, w = band.shape
             x = np.arange(w, dtype=np.float64)
             rows_per_chunk = max(1, chunk_rows // w)
@@ -474,46 +485,28 @@ def read_tile_gradients_seamless(
     border rows/cols, so seam cells get true central differences and
     the mosaic differentiates as ONE raster.
 
-    Plan shape (the 100 TB argument): two passes over the file scan —
-    pass 1 decodes and emits only borders (2 rows + 2 cols per tile,
-    ~0.11% of a 3600² raster) keyed by the NEIGHBOR that needs them;
-    pass 2 re-decodes each tile and joins its ≤4 halo arrays. The halo
-    relation is broadcast, so tile bytes NEVER shuffle — the join
-    streams the binaryFile scan in place (world mosaic: 64 800 tiles ×
-    ~56 KB ≈ 3.6 GB of halos; past broadcast budget, run per lat-band —
-    halos within a band cover all north/south seams, band joins stay
-    broadcast-sized — or bucket both sides by tile key). Decoding twice
-    trades ~2× decode CPU for zero raster shuffle; at AW3D30 scale the
-    decode is minutes, the shuffle would be the job."""
-    files = _tile_files(spark, tile_paths(spark, tif_dir, set_name))
-    halo_rel = files.mapInPandas(
-        _halo_partition,
-        schema="dla int, dlo int, side string, vals array<int>",
-    )
-    halos = halo_rel.groupBy("dla", "dlo").agg(
-        *[
-            F.first(
-                F.when(F.col("side") == s, F.col("vals")), ignorenulls=True
-            ).alias(f"halo_{s}")
-            for s in _HALO_SIDES
-        ]
-    )
-    key_lat, key_lon, _valid = _key_coord_cols()
-    keyed = files.withColumn("_kla", key_lat).withColumn("_klo", key_lon)
-    joined = keyed.join(
-        F.broadcast(halos),
-        (F.col("_kla") == F.col("dla")) & (F.col("_klo") == F.col("dlo")),
-        "left",
-    ).select(
-        "path",
-        "content",
-        "halo_top",
-        "halo_bottom",
-        "halo_left",
-        "halo_right",
-    )
-    return joined.mapInPandas(
-        lambda it: _gradient_partition(it, chunk_rows),
+    Plan shape (the 100 TB argument): two passes over the file scan,
+    two Spark jobs, no Exchange and no join. Pass 1 runs here, when the
+    query is built: it decodes each tile and emits only its borders
+    (2 rows + 2 cols, ~0.11% of a 3600² raster) addressed to listed
+    neighbors, collected on the driver as a ``{(lat, lon): {side: int32
+    array}}`` map (:func:`_collect_halos`). Pass 2 captures that map in
+    its ``mapInPandas`` closure, re-decodes each tile and looks up its
+    ≤4 halos by the coordinate the kernel parses from the path, so tile
+    bytes NEVER shuffle — the binaryFile scan streams in place. PySpark
+    broadcasts a pickled command larger than
+    ``spark.broadcast.UDFCompressionThreshold`` (1 MiB), so a large
+    mosaic's map ships once per executor, not once per task. World
+    mosaic: 64 800 tiles × ~56 KB ≈ 3.6 GB of halos; past what the
+    driver should hold, run per lat-band — halos within a band cover
+    all north/south seams, and each band's map stays driver-sized.
+    Decoding twice trades ~2× decode CPU for zero raster shuffle; at
+    AW3D30 scale the decode is minutes, the shuffle would be the job."""
+    paths = tile_paths(spark, tif_dir, set_name)
+    files = _tile_files(spark, paths)
+    halos = _collect_halos(files, {parse_tile_key(p) for p in paths})
+    return files.mapInPandas(
+        lambda it: _gradient_partition(it, chunk_rows, halos),
         schema=GRADIENT_SCHEMA,
     )
 

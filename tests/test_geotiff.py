@@ -1212,6 +1212,62 @@ def test_g08_matches_global_numpy_gradient(spark):
         assert gy[gy_idx, gx_idx] == r.dzdy, (r, gy[gy_idx, gx_idx])
 
 
+def test_g08_halos_keyed_by_tile_coordinate(spark, tmp_path, monkeypatch):
+    """The gradient kernel finds each tile's halos by its coordinate: a
+    1×3 strip of ramp tiles (a different ramp per tile, so a halo handed
+    to the wrong tile shows) differentiates as the stitched 1×3 raster,
+    an isolated tile gets no halo (= the tile-local gradient), and the
+    map the kernel captures holds no edge addressed to an unlisted tile."""
+    from aw3d30_parquet_spark.sources import geotiff
+
+    n = 32
+    yy, xx = np.mgrid[0:n, 0:n]
+    strip = [(52, 3), (52, 4), (52, 5)]
+    bands = {
+        c: (1000 * yy + (k + 1) * 7 * xx + 100 * k).astype(np.int32)
+        for k, c in enumerate(strip)
+    }
+    bands[(50, 7)] = (3 * yy + 5 * xx).astype(np.int32)
+    tdir = str(tmp_path / "strip")
+    os.makedirs(tdir)
+    for (lat, lon), band in bands.items():
+        gt = (float(lon), 1.0 / n, 0.0, float(lat + 1), 0.0, -1.0 / n)
+        with open(os.path.join(tdir, f"{tile_key(lat, lon)}.tif"), "wb") as f:
+            f.write(encode_geotiff(band, gt))
+
+    captured = []
+    collect_halos = geotiff._collect_halos
+
+    def capture(*args):
+        captured.append(collect_halos(*args))
+        return captured[-1]
+
+    monkeypatch.setattr(geotiff, "_collect_halos", capture)
+    got = geotiff.read_tile_gradients_seamless(spark, tdir, "netherlands").collect()
+    [halos] = captured
+    assert {c: sorted(sides) for c, sides in halos.items()} == {
+        (52, 3): ["right"],
+        (52, 4): ["left", "right"],
+        (52, 5): ["left"],
+    }
+
+    stitched = np.concatenate([bands[c] for c in strip], axis=1).astype(np.float64)
+    gy, gx = np.gradient(stitched, axis=0), np.gradient(stitched, axis=1)
+    isolated = {
+        (r.lat, r.lon): (r.dzdx, r.dzdy)
+        for r in geotiff.read_tile_gradients(spark, tdir, "netherlands").collect()
+        if (r.tile_lat, r.tile_lon) == (50, 7)
+    }
+    assert len(got) == 4 * n * n
+    for r in got:
+        if (r.tile_lat, r.tile_lon) == (50, 7):
+            assert (r.dzdx, r.dzdy) == isolated[(r.lat, r.lon)], r
+            continue
+        x, y = round((r.lon - 3.0) * n), round((53.0 - r.lat) * n)
+        assert gx[y, x] == r.dzdx, (r, gx[y, x])
+        assert gy[y, x] == r.dzdy, (r, gy[y, x])
+
+
 def test_compact_tiles_zorder_layout(spark, tif_dir, tmp_path):
     """compact_tiles(zorder=True): rewritten tile files hold rows in
     Morton order of the in-tile cell — row-group min/max becomes tight

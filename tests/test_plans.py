@@ -310,21 +310,38 @@ def test_q71_diff_joins_digests_not_rows(spark):
         assert "c_acctbal" not in m.group(0)
 
 
-def test_g08_halos_broadcast_tiles_never_shuffle(spark):
-    """g08's join of tile bytes ⋈ halo arrays must broadcast the halo
-    side: the binaryFile scan (the 100 TB side) streams in place. Any
-    SortMergeJoin/ShuffledHashJoin here would shuffle raster bytes."""
+def test_g08_tile_bytes_never_shuffle(spark):
+    """g08 moves halo edges, never raster bytes: the gradient
+    MapInPandas reads the binaryFile scan with no Exchange and no join
+    below it, the halo pass plus the gradient pass run exactly 2 jobs
+    on the mosaic, and no job of the read has a shuffle stage."""
     from aw3d30_parquet_spark.sources import demo
     from aw3d30_parquet_spark.sources.geotiff import (
         read_tile_gradients_seamless,
     )
 
     demo.ensure_demo_tiles(demo._MOSAIC_DIR, demo.MOSAIC_COORDS)
-    df = read_tile_gradients_seamless(spark, demo._MOSAIC_DIR, "netherlands")
-    plan = formatted_plan(df)
-    assert has_node(df, "BroadcastHashJoin")
-    assert not has_node(df, "SortMergeJoin")
-    assert not has_node(df, "ShuffledHashJoin")
+    sc = spark.sparkContext
+    sc.setJobGroup("g08-plan", "g08-plan")
+    try:
+        df = read_tile_gradients_seamless(spark, demo._MOSAIC_DIR, "netherlands")
+        assert len(df.collect()) == len(demo.MOSAIC_COORDS) * demo.DEMO_SIZE**2
+    finally:
+        sc._jsc.clearJobGroup()
+    tree = formatted_plan(df).split("\n\n")[0]
+    assert tree.splitlines()[1:] == [
+        "MapInPandas (2)",
+        "+- Scan binaryFile  (1)",
+    ], tree
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    st = sc.statusTracker()
+    jobs = list(st.getJobIdsForGroup("g08-plan"))
+    assert len(jobs) == 2, jobs
+    for jid in jobs:
+        [sid] = st.getJobInfo(jid).stageIds
+        stage = store.lastStageAttempt(sid)
+        assert stage.shuffleWriteBytes() == 0 and stage.shuffleReadBytes() == 0
 
 
 def test_q72_zvalue_is_codegen(spark):

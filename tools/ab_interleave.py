@@ -6,6 +6,14 @@ print per-arm per-query medians plus the loadavg band each run saw.
 
 Usage:
     python tools/ab_interleave.py ARM_A_DIR ARM_B_DIR "m01,m02" [rounds]
+    python tools/ab_interleave.py --perfbench WORKLOAD ARM_A_DIR ARM_B_DIR [pairs] [first_seed]
+
+The ``--perfbench`` mode runs ``pairs`` (default 10) interleaved pairs of
+``perfbench/run.py --seconds 10 --trace 0``: both arms of pair i use seed
+``first_seed + i`` and the arm that runs first alternates. It then prints
+each end-to-end metric's median and quartiles per arm and how many pairs
+arm B won (direction from arm B's ``BENCHMARK.json``; ties count for
+neither).
 
 Each bench invocation is a fresh process/SparkSession (cold JVM for
 both arms equally). Host steal on this box swings wall-clock up to
@@ -62,7 +70,50 @@ def run_arm(tree: str, only: str) -> tuple[dict[str, float], list]:
     return queries, load + (_loadavg()[:1] or [None])
 
 
+def perfbench_arm(tree: str, workload: str, seed: int) -> dict[str, float]:
+    out = subprocess.run(
+        [sys.executable, "perfbench/run.py", "--workload", workload,
+         "--seed", str(seed), "--seconds", "10", "--trace", "0"],
+        cwd=tree, capture_output=True, text=True, timeout=1800,
+    )
+    lines = out.stdout.strip().splitlines()
+    if out.returncode != 0 or not lines:
+        raise RuntimeError(
+            f"perfbench failed in {tree} (exit {out.returncode}):\n"
+            + out.stderr[-2000:]
+        )
+    result = json.loads(lines[-1])
+    values = {k: m["value"] for k, m in result["metrics"].items()}
+    values["failed"] = result["failed"]
+    return values
+
+
+def perfbench_main(workload: str, arm_a: str, arm_b: str, pairs="10", seed0="1") -> None:
+    with open(os.path.join(arm_b, "BENCHMARK.json")) as fh:
+        lower = {m["name"]: m["better"] == "lower" for m in json.load(fh)["end_to_end"]}
+    lower["failed"] = True
+    runs: dict[str, list[dict[str, float]]] = {"A": [], "B": []}
+    for i in range(int(pairs)):
+        seed = int(seed0) + i
+        arms = (("A", arm_a), ("B", arm_b))
+        for arm, tree in arms if i % 2 == 0 else arms[::-1]:
+            runs[arm].append(perfbench_arm(tree, workload, seed))
+            print(f"pair {i + 1} seed {seed} arm {arm}: "
+                  + json.dumps(runs[arm][-1], sort_keys=True), flush=True)
+    for name, low in lower.items():
+        a = [r[name] for r in runs["A"]]
+        b = [r[name] for r in runs["B"]]
+        wins = sum(y < x if low else y > x for x, y in zip(a, b))
+        qa, qb = statistics.quantiles(a, n=4), statistics.quantiles(b, n=4)
+        print(f"{name}: A median {statistics.median(a):.4g} "
+              f"[{qa[0]:.4g}, {qa[2]:.4g}]  B median {statistics.median(b):.4g} "
+              f"[{qb[0]:.4g}, {qb[2]:.4g}]  B wins {wins}/{len(a)}")
+
+
 def main() -> None:
+    if sys.argv[1] == "--perfbench":
+        perfbench_main(*sys.argv[2:])
+        return
     arm_a, arm_b, only = sys.argv[1], sys.argv[2], sys.argv[3]
     rounds = int(sys.argv[4]) if len(sys.argv) > 4 else 3
     results: dict[str, dict[str, list[float]]] = {"A": {}, "B": {}}
