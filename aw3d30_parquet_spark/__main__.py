@@ -59,7 +59,8 @@ def _cmd_ingest(args: argparse.Namespace) -> int:
     print(
         f"ingested set={args.set} from {tif_dir} -> {args.parquet_dir} "
         f"rows={metrics['rows_written']} tiles={len(tiles)} "
-        f"skipped={metrics['skipped_tiles']} in {elapsed:.1f}s",
+        f"skipped={metrics['skipped_tiles']} corrupt={metrics['corrupt_tiles']} "
+        f"in {elapsed:.1f}s",
         file=sys.stderr,
     )
     return 0

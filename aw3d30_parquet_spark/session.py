@@ -21,6 +21,7 @@ import os
 import uuid
 import weakref
 
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException, PySparkTypeError
 from pyspark.sql import SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
@@ -230,7 +231,7 @@ def spread(df, min_partitions: int | None = None, dense: bool = False):
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
             target = min(target, -(-size // SPREAD_BYTES_PER_TASK) or 1)
-        except Exception:
+        except Py4JJavaError:
             pass
     # JVM-side internal-row RDD: same partition count as df.rdd but
     # without building the Python-serializer conversion plan (~2 ms vs

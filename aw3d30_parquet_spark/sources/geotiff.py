@@ -229,16 +229,32 @@ def _region_pruned_files(files: DataFrame, set_name: str) -> DataFrame:
     )
 
 
+#: Spark's ``DataSource.GLOB_PATHS_KEY``: set to "false", ``load()``
+#: takes its path literally instead of as a Hadoop glob.
+GLOB_PATHS_KEY = "__globPaths__"
+
+
 def _glob_escape(path: str) -> str:
     """Backslash-escape the Hadoop glob metacharacters ``[]{}*?\\`` in
-    ``path``: ``load()`` globs every path it is given."""
+    ``path``, so a globbing ``load()`` matches it literally."""
     return re.sub(r"([\[\]{}*?\\])", r"\\\1", path)
 
 
-def _binary_files(spark: SparkSession):
-    """The one ``binaryFile`` reader every batch tile scan and listing
-    goes through."""
-    return spark.read.format("binaryFile").option("pathGlobFilter", TILE_GLOB)
+def _binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """The one ``binaryFile`` load every batch tile scan and listing goes
+    through; ``[]{}*?`` in a path match themselves.
+
+    A lone path loads literally (:data:`GLOB_PATHS_KEY`): Spark also
+    looks it up as a streaming sink's metadata directory, literally, and
+    an escaped glob there logs a FileNotFoundException warning. Several
+    paths are glob-escaped instead, because with globbing off Spark
+    (``DataSource.checkAndGlobPathIfNecessary``) returns every path once
+    per glob-looking path, which would scan each tile N times.
+    """
+    reader = spark.read.format("binaryFile").option("pathGlobFilter", TILE_GLOB)
+    if len(paths) == 1:
+        return reader.option(GLOB_PATHS_KEY, "false").load(paths[0])
+    return reader.load([_glob_escape(p) for p in paths])
 
 
 def tile_paths(
@@ -257,13 +273,11 @@ def tile_paths(
     reference's filter-while-listing (``src/main.rs:298,316-321``) and
     skip-if-exists (``:144-146,171``). ``inputFiles()`` returns
     percent-encoded URIs; they are decoded here so that ``load()``
-    accepts them back. ``tif_dir`` and the listed paths are glob-escaped
-    before each ``load()``, so ``[]{}*?`` in a name match literally.
-    Sorted, so the scan's task order is stable.
+    accepts them back. Sorted, so the scan's task order is stable.
     """
     skip = set(exclude)
     paths = []
-    for uri in _binary_files(spark).load(_glob_escape(tif_dir)).inputFiles():
+    for uri in _binary_files(spark, [tif_dir]).inputFiles():
         path = unquote(uri)
         coord = parse_tile_key(path)
         if coord is not None and in_region(set_name, *coord) and coord not in skip:
@@ -281,11 +295,7 @@ def _tile_files(spark: SparkSession, paths: list[str]) -> DataFrame:
     from aw3d30_parquet_spark.session import ship_package
 
     ship_package(spark)
-    return (
-        _binary_files(spark)
-        .load([_glob_escape(p) for p in paths])
-        .select("path", "content")
-    )
+    return _binary_files(spark, paths).select("path", "content")
 
 
 def check_on_corrupt(on_corrupt: str) -> None:

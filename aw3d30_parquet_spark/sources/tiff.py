@@ -400,19 +400,16 @@ def decode_geotiff(data: bytes) -> tuple[np.ndarray, GeoTransform]:
         rows_i = min(rps, height - i * rps)
         return rows_i * width * dtype.itemsize if rows_i > 0 else None
 
-    chunks = [
+    band = np.concatenate([
         _decompress_chunk(data, o, c, compression, dtype, _strip_expected(i))
         for i, (o, c) in enumerate(zip(offsets, counts))
-    ]
+    ]).reshape(height, width)
     if predictor == 2:
         # horizontal differencing: samples are row-wise deltas; undo with
-        # a same-dtype cumulative sum (wraparound arithmetic per spec)
-        chunks = [
-            c.reshape(-1, width).cumsum(axis=1, dtype=dtype).reshape(-1)
-            for c in chunks
-        ]
-    band = np.concatenate(chunks).reshape(height, width).astype(np.int32)
-    return band, _geotransform_from_tags(tags)
+        # one same-dtype cumulative sum over the assembled band
+        # (wraparound arithmetic per spec; strips hold whole rows)
+        band = band.cumsum(axis=1, dtype=dtype)
+    return band.astype(np.int32, copy=False), _geotransform_from_tags(tags)
 
 
 def _predict2(rows: np.ndarray) -> np.ndarray:

@@ -34,13 +34,13 @@ def test_cli_ingest_demo_writes_partition_tree(spark, tmp_path, capsys):
     ).fetchone()[0]
     assert got > 0
     # the four demo tiles, none skipped
-    assert " tiles=4 skipped=0 " in capsys.readouterr().err
+    assert " tiles=4 skipped=0 corrupt=0 " in capsys.readouterr().err
     # re-run is a no-op (skip-if-exists, reference src/main.rs:144-146)
     assert main(
         ["ingest", "--set", "netherlands", "--demo", "--tif-dir", tif,
          "--parquet-dir", out]
     ) == 0
-    assert " tiles=0 skipped=4 " in capsys.readouterr().err
+    assert " tiles=0 skipped=4 corrupt=0 " in capsys.readouterr().err
     again = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{out}/*/*/*.parquet')"
     ).fetchone()[0]

@@ -203,6 +203,20 @@ def test_g2_escaped_dir_name(spark, tif_dir, tmp_path, name):
     got = read_tiles(spark, str(odd), "netherlands")
     assert got.exceptAll(read_tiles(spark, tif_dir, "netherlands")).count() == 0
     assert got.count() == 2 * SIZE * SIZE
+    # a one-tile scan loads its lone path literally
+    (one, _) = tile_paths(spark, str(odd), "netherlands")
+    assert _tile_files(spark, [one]).count() == 1
+
+
+def test_glob_paths_key_is_sparks(spark):
+    """The literal-path option the tile reader sets is the key Spark
+    reads, so a Spark upgrade that renames it fails here."""
+    from aw3d30_parquet_spark.sources.geotiff import GLOB_PATHS_KEY
+
+    jvm = spark.sparkContext._jvm
+    assert jvm.org.apache.spark.sql.execution.datasources.DataSource.GLOB_PATHS_KEY() == (
+        GLOB_PATHS_KEY
+    )
 
 
 # ---------------------------------------------------------------- G3: region filter
@@ -294,12 +308,16 @@ def test_g2_observe_metrics(spark, tif_dir, tmp_path, monkeypatch):
     assert metrics["rows_written"] == 2 * SIZE * SIZE
     assert metrics["tiles_written"] == 2  # one manifest row per committed file
     assert metrics["skipped_tiles"] == 0
+    assert metrics["corrupt_tiles"] == 0
     again: dict = {}
     ingest_tiles(spark, tif_dir, out, "netherlands", metrics=again)
-    assert again == {"rows_written": 0, "tiles_written": 0, "skipped_tiles": 2}
+    assert again == {
+        "rows_written": 0, "tiles_written": 0, "skipped_tiles": 2, "corrupt_tiles": 0
+    }
 
     # on_corrupt="skip": a corrupt in-region tile is neither returned nor
-    # counted, on the tile-native path and on the Spark-writer path
+    # written, but counted as corrupt, on the tile-native path and on the
+    # Spark-writer path; the resume retries it
     d = str(tmp_path / "mixed")
     os.makedirs(d)
     _write_fixture_tiles(d, [(51, 4), (52, 5)])
@@ -315,9 +333,24 @@ def test_g2_observe_metrics(spark, tif_dir, tmp_path, monkeypatch):
         )
         assert sorted(got) == [(51, 4), (52, 5)], branch
         assert skipped == {
-            "rows_written": 2 * SIZE * SIZE, "tiles_written": 2, "skipped_tiles": 0
+            "rows_written": 2 * SIZE * SIZE,
+            "tiles_written": 2,
+            "skipped_tiles": 0,
+            "corrupt_tiles": 1,
         }, branch
         assert spark.read.parquet(str(tmp_path / branch)).count() == 2 * SIZE * SIZE
+        retried, jobs, read = _run_in_group(
+            spark, f"g2-corrupt-{branch}",
+            lambda: ingest_tiles(
+                spark, d, str(tmp_path / branch), "netherlands",
+                metrics=skipped, on_corrupt="skip",
+            ),
+        )
+        assert retried == [] and jobs, branch
+        assert read == os.path.getsize(os.path.join(d, f"{tile_key(53, 6)}.tif"))
+        assert skipped == {
+            "rows_written": 0, "tiles_written": 0, "skipped_tiles": 2, "corrupt_tiles": 1
+        }, branch
 
 
 def test_g2_per_tile_commit_survives_failure(spark, tmp_path):

@@ -13,7 +13,10 @@ The ``--perfbench`` mode runs ``pairs`` (default 10) interleaved pairs of
 ``first_seed + i`` and the arm that runs first alternates. It then prints
 each end-to-end metric's median and quartiles per arm and how many pairs
 arm B won (direction from arm B's ``BENCHMARK.json``; ties count for
-neither).
+neither). It also parses each run's ``per-op median cpu (s)`` stderr
+line and prints each op's median CPU per arm and how many pairs arm B
+ran it in less CPU, so the op whose layer moved shows without a traced
+run.
 
 Each bench invocation is a fresh process/SparkSession (cold JVM for
 both arms equally). Host steal on this box swings wall-clock up to
@@ -25,6 +28,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -70,7 +74,13 @@ def run_arm(tree: str, only: str) -> tuple[dict[str, float], list]:
     return queries, load + (_loadavg()[:1] or [None])
 
 
-def perfbench_arm(tree: str, workload: str, seed: int) -> dict[str, float]:
+#: perfbench's stderr line of per-op CPU medians: ``op=0.123x4, ...``.
+_PER_OP_CPU = re.compile(r"^per-op median cpu \(s\): (.*)$", re.M)
+
+
+def perfbench_arm(tree: str, workload: str, seed: int) -> tuple[dict, dict]:
+    """One perfbench run → (end-to-end metric values plus ``failed``,
+    per-op median CPU seconds)."""
     out = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload,
          "--seed", str(seed), "--seconds", "10", "--trace", "0"],
@@ -85,7 +95,12 @@ def perfbench_arm(tree: str, workload: str, seed: int) -> dict[str, float]:
     result = json.loads(lines[-1])
     values = {k: m["value"] for k, m in result["metrics"].items()}
     values["failed"] = result["failed"]
-    return values
+    line = _PER_OP_CPU.search(out.stderr)
+    ops = {
+        op: float(cpu)
+        for op, cpu in re.findall(r"(\S+)=([\d.]+)x\d+", line.group(1) if line else "")
+    }
+    return values, ops
 
 
 def perfbench_main(workload: str, arm_a: str, arm_b: str, pairs="10", seed0="1") -> None:
@@ -93,13 +108,17 @@ def perfbench_main(workload: str, arm_a: str, arm_b: str, pairs="10", seed0="1")
         lower = {m["name"]: m["better"] == "lower" for m in json.load(fh)["end_to_end"]}
     lower["failed"] = True
     runs: dict[str, list[dict[str, float]]] = {"A": [], "B": []}
+    op_cpu: dict[str, list[dict[str, float]]] = {"A": [], "B": []}
     for i in range(int(pairs)):
         seed = int(seed0) + i
         arms = (("A", arm_a), ("B", arm_b))
         for arm, tree in arms if i % 2 == 0 else arms[::-1]:
-            runs[arm].append(perfbench_arm(tree, workload, seed))
+            values, ops = perfbench_arm(tree, workload, seed)
+            runs[arm].append(values)
+            op_cpu[arm].append(ops)
             print(f"pair {i + 1} seed {seed} arm {arm}: "
-                  + json.dumps(runs[arm][-1], sort_keys=True), flush=True)
+                  + json.dumps(values, sort_keys=True)
+                  + " per-op cpu: " + json.dumps(ops, sort_keys=True), flush=True)
     for name, low in lower.items():
         a = [r[name] for r in runs["A"]]
         b = [r[name] for r in runs["B"]]
@@ -108,6 +127,17 @@ def perfbench_main(workload: str, arm_a: str, arm_b: str, pairs="10", seed0="1")
         print(f"{name}: A median {statistics.median(a):.4g} "
               f"[{qa[0]:.4g}, {qa[2]:.4g}]  B median {statistics.median(b):.4g} "
               f"[{qb[0]:.4g}, {qb[2]:.4g}]  B wins {wins}/{len(a)}")
+    print("per-op median cpu (s):")
+    for op in sorted({op for ops in op_cpu["A"] + op_cpu["B"] for op in ops}):
+        pairs_op = [
+            (x[op], y[op]) for x, y in zip(op_cpu["A"], op_cpu["B"]) if op in x and op in y
+        ]
+        if not pairs_op:
+            continue
+        a, b = zip(*pairs_op)
+        wins = sum(y < x for x, y in pairs_op)
+        print(f"  {op}: A median {statistics.median(a):.3f}  "
+              f"B median {statistics.median(b):.3f}  B wins {wins}/{len(pairs_op)}")
 
 
 def main() -> None:
