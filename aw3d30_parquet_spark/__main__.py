@@ -186,7 +186,9 @@ def main(argv: list[str] | None = None) -> int:
         "--zorder",
         action="store_true",
         help="rewrite rows in Morton order of the in-tile cell "
-        "(tight row-group stats on lat AND lon)",
+        "(tight row-group stats on lat AND lon; the files can grow, "
+        "~7%% on seeded terrain, since Morton order breaks the row runs "
+        "that the elevation delta and lat/lon dictionary encodings exploit)",
     )
     p_opt.set_defaults(fn=_cmd_optimize)
 

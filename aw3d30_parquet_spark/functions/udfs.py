@@ -1,7 +1,7 @@
 """The Arrow-vectorized UDF surface (SURVEY §2.2 "UDF / UDAF / UDTF").
 
-Three kernel shapes beyond ``mapInPandas`` (which powers the GeoTIFF and
-media decoders):
+Three kernel shapes beyond ``mapInPandas`` (which powers the media
+decoders; the GeoTIFF kernels use ``mapInArrow``):
 
 - **scalar pandas_udf** — whole-column Arrow batches; here: cosine
   similarity against a fixed query vector (u03). Verified in pytest

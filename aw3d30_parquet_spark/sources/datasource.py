@@ -2,7 +2,7 @@
 Python Data Source (Spark 4 `pyspark.sql.datasource` API).
 
 Where :func:`~aw3d30_parquet_spark.sources.geotiff.read_tiles` composes
-the pipeline from ``binaryFile`` + ``mapInPandas``, this source IS the
+the pipeline from ``binaryFile`` + ``mapInArrow``, this source IS the
 pipeline at the DataSource V2 surface, with the three properties a
 scan source owes the engine:
 
@@ -15,9 +15,11 @@ scan source owes the engine:
   tiles are never opened, the exact analogue of the reference filtering
   during its S3 list (``src/main.rs:316-321``). All other filters are
   returned to Spark unhandled (lat/lon/elevation are per-cell);
-- **Arrow-batch reads**: ``read`` yields ``pyarrow.RecordBatch``es in
-  bounded chunks, so a 3600² tile (13 M rows) never materializes as
-  Python objects (same chunking contract as the mapInPandas path).
+- **Arrow-batch reads**: ``read`` decodes its tile through the tile
+  kernels' per-tile loop and yields the same bounded
+  ``pyarrow.RecordBatch``es as the ``mapInArrow`` decode
+  (:func:`~aw3d30_parquet_spark.sources.geotiff._point_batches`), so a
+  3600² tile (13 M rows) never materializes as Python objects.
 
 Registration (per session)::
 
@@ -53,15 +55,13 @@ from pyspark.sql.datasource import (
 )
 
 from aw3d30_parquet_spark.sources.geotiff import (
+    POINT_SCHEMA,
     REGION_SETS,
+    _decoded_tiles,
+    _point_batches,
     in_region,
     parse_tile_key,
     tile_key,
-)
-
-#: DDL of the point schema (mirrors geotiff.POINT_SCHEMA).
-_SCHEMA_DDL = (
-    "tile_lat int, tile_lon int, lat double, lon double, elevation int"
 )
 
 
@@ -155,40 +155,15 @@ class AW3D30Reader(DataSourceReader):
 
     def read(self, partition: TilePartition) -> Iterator:
         """Decode one tile, yield bounded Arrow RecordBatches."""
-        import numpy as np
-        import pyarrow as pa
-
         if partition is None:
             # zero surviving tiles: pyspark represents an empty
             # partitions() list as a single None partition — emit
             # nothing instead of dereferencing it
             return
-
-        from aw3d30_parquet_spark.sources.tiff import (
-            decode_geotiff,
-            flatten_raster,
-        )
-
         with open(partition.path, "rb") as fh:
-            band, gt = decode_geotiff(fh.read())
-        for lat, lon, elev in flatten_raster(band, gt, self.chunk_rows):
-            n = len(lat)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(
-                        np.full(n, partition.tile_lat, dtype="int32"),
-                        type=pa.int32(),
-                    ),
-                    pa.array(
-                        np.full(n, partition.tile_lon, dtype="int32"),
-                        type=pa.int32(),
-                    ),
-                    pa.array(lat, type=pa.float64()),
-                    pa.array(lon, type=pa.float64()),
-                    pa.array(elev.astype("int32"), type=pa.int32()),
-                ],
-                names=["tile_lat", "tile_lon", "lat", "lon", "elevation"],
-            )
+            rows = [(partition.path, fh.read())]
+        for coord, band, gt in _decoded_tiles(rows, "fail"):
+            yield from _point_batches(coord, band, gt, self.chunk_rows)
 
 
 class AW3D30StreamReader(DataSourceStreamReader):
@@ -380,8 +355,8 @@ class AW3D30DataSource(DataSource):
     def name(cls) -> str:
         return "aw3d30"
 
-    def schema(self) -> str:
-        return _SCHEMA_DDL
+    def schema(self):
+        return POINT_SCHEMA
 
     def reader(self, schema) -> AW3D30Reader:
         return AW3D30Reader(self.options)

@@ -4,7 +4,7 @@ DuckDB cannot read GeoTIFF, but the demo tiles carry a pure elevation
 ramp (``1000*y + x`` on a 64×64 grid), so every aggregate of the decoded
 point table is computable in closed form — the oracle is a constant
 ``VALUES`` relation. This gives the GeoTIFF pipeline (binaryFile scan →
-key parse/region filter → mapInPandas decode → aggregate) a full
+key parse/region filter → mapInArrow decode → aggregate) a full
 hash-checked entry in the driver contract instead of a rows-only check.
 
 Tile fabrication replaces the reference's S3 download (``src/main.rs:
@@ -33,17 +33,18 @@ _DEMO_ROOT = os.path.join(
 _DEMO_DIR = os.path.join(_DEMO_ROOT, "tiles")
 
 
-def demo_band():
+def demo_band(size: int = DEMO_SIZE):
+    """The ``size``² int32 elevation ramp ``1000*y + x``."""
     import numpy as np
 
-    y = np.arange(DEMO_SIZE, dtype=np.int32)[:, None]
-    x = np.arange(DEMO_SIZE, dtype=np.int32)[None, :]
+    y = np.arange(size, dtype=np.int32)[:, None]
+    x = np.arange(size, dtype=np.int32)[None, :]
     return 1000 * y + x
 
 
-def demo_geotransform(lat: int, lon: int):
-    """North-up 1°×1° tile scaled to DEMO_SIZE px; gt3 = top edge."""
-    return (float(lon), 1.0 / DEMO_SIZE, 0.0, float(lat + 1), 0.0, -1.0 / DEMO_SIZE)
+def demo_geotransform(lat: int, lon: int, size: int = DEMO_SIZE):
+    """North-up 1°×1° tile scaled to ``size`` px; gt3 = top edge."""
+    return (float(lon), 1.0 / size, 0.0, float(lat + 1), 0.0, -1.0 / size)
 
 
 def ensure_demo_tiles(
@@ -59,17 +60,11 @@ def ensure_demo_tiles(
     from aw3d30_parquet_spark.sources.tiff import encode_geotiff
 
     os.makedirs(tif_dir, exist_ok=True)
-    band = demo_band() if size == DEMO_SIZE else None
-    if band is None:
-        import numpy as np
-
-        yy = np.arange(size, dtype=np.int32)[:, None]
-        xx = np.arange(size, dtype=np.int32)[None, :]
-        band = 1000 * yy + xx
+    band = demo_band(size)
     for lat, lon in coords:
         path = os.path.join(tif_dir, f"{tile_key(lat, lon)}.tif")
         if not os.path.exists(path):
-            gt = (float(lon), 1.0 / size, 0.0, float(lat + 1), 0.0, -1.0 / size)
+            gt = demo_geotransform(lat, lon, size)
             with open(path, "wb") as f:
                 f.write(encode_geotiff(band, gt, **encode_kwargs))
     return tif_dir
@@ -328,12 +323,12 @@ _TILED_DIR = os.path.join(_DEMO_ROOT, "tiled")
 
 def g12_tiled_lzw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """g12: full ingest over tiled+LZW+predictor-2 tiles — the identical
-    binaryFile scan → key parse/region filter → mapInPandas decode →
+    binaryFile scan → key parse/region filter → mapInArrow decode →
     aggregate pipeline as g01, with the bytes in the OTHER on-disk
     layout GDAL commonly writes. Hash match against the same
     closed-form ramp aggregates proves the pure-python fallback's
-    tiled/LZW path end-to-end under the driver contract (rasterio is
-    absent from this container, so the fallback IS the decode path)."""
+    tiled/LZW path end-to-end under the driver contract (without
+    rasterio installed, the fallback IS the decode path)."""
     ensure_demo_tiles(
         _TILED_DIR,
         TILED_COORDS,
@@ -412,7 +407,7 @@ def g09_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch reads, pushFilters tile pruning). The tile_lat predicate is
     consumed by the source's file listing — the pruned tile is never
     opened — and the aggregate pins the decoded content equals the
-    closed-form ramp, i.e. the custom source and the mapInPandas path
+    closed-form ramp, i.e. the custom source and the mapInArrow path
     (g01) read identical bytes identically."""
     from aw3d30_parquet_spark.sources.datasource import register
 
@@ -502,19 +497,8 @@ _MIXED_DIR = os.path.join(_DEMO_ROOT, "mixedres")
 
 
 def _ensure_mixed_tiles(tif_dir: str = _MIXED_DIR) -> str:
-    from aw3d30_parquet_spark.sources.tiff import encode_geotiff
-
-    import numpy as np
-
-    os.makedirs(tif_dir, exist_ok=True)
-    for (lat, lon), n in MIXED_COORDS:
-        path = os.path.join(tif_dir, f"{tile_key(lat, lon)}.tif")
-        if not os.path.exists(path):
-            yy = np.arange(n, dtype=np.int32)[:, None]
-            xx = np.arange(n, dtype=np.int32)[None, :]
-            gt = (float(lon), 1.0 / n, 0.0, float(lat + 1), 0.0, -1.0 / n)
-            with open(path, "wb") as f:
-                f.write(encode_geotiff(1000 * yy + xx, gt))
+    for coord, size in MIXED_COORDS:
+        ensure_demo_tiles(tif_dir, [coord], size)
     return tif_dir
 
 
@@ -551,7 +535,7 @@ def _g11_rows() -> str:
     tile with its neighbor's resampled edge column in plain numpy and
     np.gradient it — the same construction as the pytest twin
     (tests/test_geotiff.py), sharing nothing with the engine's
-    binaryFile → halo-exchange → mapInPandas pipeline."""
+    binaryFile → halo-exchange → mapInArrow pipeline."""
     import numpy as np
 
     def ramp(n):

@@ -13,12 +13,15 @@ directory, key parse, region predicate and skip set applied in plain
 Python, like the reference filtering keys while it lists the bucket
 (``src/main.rs:298,316-321``). The data plane is a ``binaryFile`` scan of
 exactly those paths (one Spark task per tile, no shuffle anywhere in the
-pipeline). The ingest fuses it with a ``mapInArrow`` kernel that decodes
-each tile and writes that tile's Parquet file in the task
-(:mod:`~aw3d30_parquet_spark.sources.sink`); :func:`read_tiles` fuses it
-with a ``mapInPandas`` decode that yields bounded Arrow batches of
-points. Every tile kernel (ingest, decode, halo, gradient) shares one
-per-tile loop (:func:`_decoded_tiles`).
+pipeline), fused with a ``mapInArrow`` kernel. The ingest's kernel
+decodes each tile and writes that tile's Parquet file in the task
+(:mod:`~aw3d30_parquet_spark.sources.sink`); :func:`read_tiles`' kernel
+yields bounded Arrow batches of points. Every tile kernel (ingest,
+decode, halo, gradient, the ``aw3d30`` DataSource) takes Arrow in and
+gives Arrow out: :func:`_tile_rows` reads the scan's batches,
+:func:`_decoded_tiles` is the one per-tile decode loop, and
+:func:`_point_batches` builds every output table from
+:func:`~aw3d30_parquet_spark.sources.tiff.flatten_raster` chunks.
 At 100 TB (~31 000 real tiles × 13M rows) the ingest is a single
 embarrassingly-parallel stage: scan → decode → write, with partition
 pruning on ``tile_lat``/``tile_lon`` replacing the reference's
@@ -33,9 +36,11 @@ from typing import Iterable, Iterator
 from urllib.parse import unquote
 
 import numpy as np
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -130,9 +135,20 @@ def tiles_for_set(set_name: str) -> list[tuple[int, int]]:
     return [(lat, lon) for lat in range(lat0, lat1 + 1) for lon in range(lon0, lon1 + 1)]
 
 
+def _tile_rows(batches: Iterable) -> Iterator[tuple[str, bytes]]:
+    """Arrow batches of a ``binaryFile`` scan → ``(path, content)`` pairs
+    for :func:`_decoded_tiles`, copying out one tile's bytes at a time."""
+    for batch in batches:
+        paths, contents = batch.column("path"), batch.column("content")
+        for i in range(batch.num_rows):
+            yield paths[i].as_py(), contents[i].as_py()
+
+
 def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
     """The per-tile loop every tile kernel shares: ``(path, content)``
-    rows → ``(coord, band, geotransform)`` for each decodable tile.
+    pairs → ``(coord, band, geotransform)`` for each decodable tile. The
+    only caller of :func:`~aw3d30_parquet_spark.sources.tiff.decode_geotiff`
+    in the engine.
 
     A malformed key is rejected like the reference's parse
     (``src/main.rs:131``). ``on_corrupt``: 'fail' raises on undecodable
@@ -155,30 +171,34 @@ def _decoded_tiles(rows: Iterable, on_corrupt: str) -> Iterator:
         yield coord, band, gt
 
 
-def _decode_partition(batches: Iterable, chunk_rows: int, on_corrupt: str) -> Iterator:
-    """mapInPandas kernel: (path, content) rows → point-table Arrow batches.
+#: :data:`POINT_SCHEMA` as the Arrow schema of the point kernels' batches.
+POINT_ARROW = to_arrow_schema(POINT_SCHEMA)
 
-    One input row per tile file (decoded by :func:`_decoded_tiles`);
-    output yielded in ≤ chunk_rows batches so a 3600² tile (13M rows ≈
-    260 MB) never materializes at once (SURVEY §7.3 item 2). All math is
-    vectorized numpy — the JVM↔Python boundary carries only columnar
-    Arrow buffers.
+
+def _point_batches(
+    coord: tuple[int, int], band, gt, chunk_rows: int, schema: pa.Schema = POINT_ARROW
+) -> Iterator[pa.RecordBatch]:
+    """One decoded tile → Arrow batches of ``schema``: the tile key, the
+    cell's ``lat``/``lon`` and one value column per plane of ``band``
+    (``(h, w)`` for elevation, ``(h, w, k)`` for k values per cell).
+
+    The rows are :func:`flatten_raster`'s chunks: at most ``chunk_rows``
+    rows a batch, or one raster row when a row is wider, so a 3600² tile
+    (13M rows ≈ 260 MB) never materializes at once (SURVEY §7.3 item 2).
+    All math is vectorized numpy; only columnar Arrow buffers cross the
+    JVM↔Python boundary.
     """
-    import pandas as pd
+    for lat, lon, vals in flatten_raster(band, gt, chunk_rows):
+        n = len(lat)
+        key = [np.full(n, coord[0], np.int32), np.full(n, coord[1], np.int32)]
+        yield pa.record_batch([*key, lat, lon, *vals.reshape(n, -1).T], schema=schema)
 
-    for pdf in batches:
-        tiles = _decoded_tiles(zip(pdf["path"], pdf["content"]), on_corrupt)
-        for coord, band, gt in tiles:
-            for lat, lon, elev in flatten_raster(band, gt, chunk_rows):
-                yield pd.DataFrame(
-                    {
-                        "tile_lat": np.full(len(lat), coord[0], dtype="int32"),
-                        "tile_lon": np.full(len(lat), coord[1], dtype="int32"),
-                        "lat": lat,
-                        "lon": lon,
-                        "elevation": elev.astype("int32"),
-                    }
-                )
+
+def _decode_partition(batches: Iterable, chunk_rows: int, on_corrupt: str) -> Iterator:
+    """mapInArrow kernel: ``binaryFile`` batches → point-table batches
+    (:func:`_point_batches`) of every decodable tile."""
+    for coord, band, gt in _decoded_tiles(_tile_rows(batches), on_corrupt):
+        yield from _point_batches(coord, band, gt, chunk_rows)
 
 
 #: Schema of the per-cell terrain-gradient table (g03): elevation
@@ -196,6 +216,7 @@ GRADIENT_SCHEMA = StructType(
         StructField("dzdy", DoubleType(), False),
     ]
 )
+_GRADIENT_ARROW = to_arrow_schema(GRADIENT_SCHEMA)
 
 
 def _key_coord_cols() -> tuple:
@@ -311,11 +332,11 @@ def decode_tiles(
     on_corrupt: str = "fail",
 ) -> DataFrame:
     """Explicit tile paths (from :func:`tile_paths`) → point DataFrame:
-    ``binaryFile`` scan fused with the ``mapInPandas`` decode. No
+    ``binaryFile`` scan fused with the ``mapInArrow`` decode. No
     shuffle; the scan packs whole tiles into tasks by file size and
     never splits one."""
     check_on_corrupt(on_corrupt)
-    return _tile_files(spark, paths).mapInPandas(
+    return _tile_files(spark, paths).mapInArrow(
         lambda it: _decode_partition(it, chunk_rows, on_corrupt),
         schema=POINT_SCHEMA,
     )
@@ -330,51 +351,52 @@ def read_tile_gradients(
     """Tile scan → per-cell elevation gradient DataFrame (slope layer).
 
     Same plan shape as :func:`read_tiles` — a binaryFile scan of the
-    region's listed tiles fused with a mapInPandas kernel, one task per
+    region's listed tiles fused with a mapInArrow kernel, one task per
     tile, zero Exchanges. Tile-local: cells on a tile border take
     one-sided differences (:func:`read_tile_gradients_seamless` stitches
     the seams)."""
     files = _tile_files(spark, tile_paths(spark, tif_dir, set_name))
-    return files.mapInPandas(
+    return files.mapInArrow(
         lambda it: _gradient_partition(it, chunk_rows, {}),
         schema=GRADIENT_SCHEMA,
     )
 
 
-def _halo_partition(batches: Iterable, listed: set) -> Iterator:
-    """mapInPandas kernel: tile files → border rows/cols addressed to
-    each edge-neighbor tile in ``listed``, as raw little-endian int32
-    bytes (4 B per sample). Per tile: 2 rows + 2 cols ≈ 0.11% of a
-    3600² raster — the halos are metadata-sized next to the mosaic."""
-    import pandas as pd
+#: One halo edge: the receiving tile, the side it pads and the border
+#: samples as raw little-endian int32 bytes.
+_HALO_ARROW = pa.schema(
+    [("dla", pa.int32()), ("dlo", pa.int32()), ("side", pa.string()), ("vals", pa.binary())]
+)
 
-    for pdf in batches:
-        rows = {"dla": [], "dlo": [], "side": [], "vals": []}
-        tiles = _decoded_tiles(zip(pdf["path"], pdf["content"]), "fail")
-        for (la, lo), band, _gt in tiles:
-            # row 0 is the tile's TOP (north) edge: it is the north
-            # neighbor's bottom halo, and so on around the compass
+
+def _halo_partition(batches: Iterable, listed: set) -> Iterator:
+    """mapInArrow kernel: tile files → border rows/cols addressed to
+    each edge-neighbor tile in ``listed`` (4 B per sample). Per tile: 2
+    rows + 2 cols ≈ 0.11% of a 3600² raster — the halos are
+    metadata-sized next to the mosaic."""
+    for (la, lo), band, _gt in _decoded_tiles(_tile_rows(batches), "fail"):
+        # row 0 is the tile's TOP (north) edge: it is the north
+        # neighbor's bottom halo, and so on around the compass
+        edges = [
+            (dla, dlo, side, vals.astype("<i4").tobytes())
             for dla, dlo, side, vals in (
                 (la + 1, lo, "bottom", band[0, :]),
                 (la - 1, lo, "top", band[-1, :]),
                 (la, lo - 1, "right", band[:, 0]),
                 (la, lo + 1, "left", band[:, -1]),
-            ):
-                if (dla, dlo) in listed:
-                    rows["dla"].append(dla)
-                    rows["dlo"].append(dlo)
-                    rows["side"].append(side)
-                    rows["vals"].append(vals.astype("<i4").tobytes())
-        yield pd.DataFrame(rows)
+            )
+            if (dla, dlo) in listed
+        ]
+        if edges:
+            yield pa.record_batch([list(c) for c in zip(*edges)], schema=_HALO_ARROW)
 
 
 def _collect_halos(files: DataFrame, listed: set) -> dict:
     """The halo pass over ``files`` (one Spark job), collected on the
     driver → ``{(lat, lon): {side: int32 array}}`` holding only edges
     addressed to the tile coordinates in ``listed``."""
-    edges = files.mapInPandas(
-        lambda it: _halo_partition(it, listed),
-        schema="dla int, dlo int, side string, vals binary",
+    edges = files.mapInArrow(
+        lambda it: _halo_partition(it, listed), schema=from_arrow_schema(_HALO_ARROW)
     )
     halos: dict = {}
     for r in edges.collect():
@@ -386,11 +408,11 @@ def _collect_halos(files: DataFrame, listed: set) -> dict:
 _HALO_SIDES = ("top", "bottom", "left", "right")
 
 
-def _padded_gradients(coord, band, halos: dict) -> tuple:
+def _padded_gradients(coord, band, halos: dict) -> np.ndarray:
     """``(dzdx, dzdy)`` of ``band`` in elevation units per pixel step,
-    padded with whichever neighbor borders ``halos`` holds (side → int32
-    array; a missing side has no neighbor) and cut back to the band's
-    own cells."""
+    stacked as an ``(h, w, 2)`` array: padded with whichever neighbor
+    borders ``halos`` holds (side → int32 array; a missing side has no
+    neighbor) and cut back to the band's own cells."""
     h, w = band.shape
     pads = {s: halos.get(s) for s in _HALO_SIDES}
     # A neighbor's halo arrives at the NEIGHBOR's resolution: real
@@ -442,12 +464,11 @@ def _padded_gradients(coord, band, halos: dict) -> tuple:
     dzdy = np.gradient(padded, axis=0) if padded.shape[0] > 1 else np.zeros_like(padded)
     dzdx = np.gradient(padded, axis=1) if padded.shape[1] > 1 else np.zeros_like(padded)
     core = (slice(top, top + h), slice(left, left + w))
-    return dzdx[core], dzdy[core]
+    return np.stack([dzdx[core], dzdy[core]], axis=-1)
 
 
 def _gradient_partition(batches: Iterable, chunk_rows: int, halos: dict) -> Iterator:
-    """mapInPandas kernel: ``(path, content)`` tile rows → per-cell
-    gradient.
+    """mapInArrow kernel: ``binaryFile`` batches → per-cell gradient.
 
     ``np.gradient`` runs over each decoded band padded with whichever
     neighbor borders ``halos`` (:func:`_collect_halos`) holds for the
@@ -456,31 +477,9 @@ def _gradient_partition(batches: Iterable, chunk_rows: int, halos: dict) -> Iter
     the standard one-sided form — exactly what a single global raster
     would produce. An empty map (:func:`read_tile_gradients`) is the
     tile-local slope layer."""
-    import pandas as pd
-
-    for pdf in batches:
-        tiles = _decoded_tiles(zip(pdf["path"], pdf["content"]), "fail")
-        for coord, band, gt in tiles:
-            dzdx, dzdy = _padded_gradients(coord, band, halos.get(coord, {}))
-            h, w = band.shape
-            x = np.arange(w, dtype=np.float64)
-            rows_per_chunk = max(1, chunk_rows // w)
-            for y0 in range(0, h, rows_per_chunk):
-                y1 = min(y0 + rows_per_chunk, h)
-                yy = np.arange(y0, y1, dtype=np.float64)
-                lon = (gt[0] + x * gt[1])[None, :] + (yy * gt[2])[:, None]
-                lat = (x * gt[4])[None, :] + (gt[3] + yy * gt[5])[:, None]
-                n = (y1 - y0) * w
-                yield pd.DataFrame(
-                    {
-                        "tile_lat": np.full(n, coord[0], dtype="int32"),
-                        "tile_lon": np.full(n, coord[1], dtype="int32"),
-                        "lat": np.broadcast_to(lat, (y1 - y0, w)).reshape(n),
-                        "lon": np.broadcast_to(lon, (y1 - y0, w)).reshape(n),
-                        "dzdx": dzdx[y0:y1].reshape(n),
-                        "dzdy": dzdy[y0:y1].reshape(n),
-                    }
-                )
+    for coord, band, gt in _decoded_tiles(_tile_rows(batches), "fail"):
+        grad = _padded_gradients(coord, band, halos.get(coord, {}))
+        yield from _point_batches(coord, grad, gt, chunk_rows, _GRADIENT_ARROW)
 
 
 def read_tile_gradients_seamless(
@@ -501,7 +500,7 @@ def read_tile_gradients_seamless(
     (2 rows + 2 cols, ~0.11% of a 3600² raster) addressed to listed
     neighbors, collected on the driver as a ``{(lat, lon): {side: int32
     array}}`` map (:func:`_collect_halos`). Pass 2 captures that map in
-    its ``mapInPandas`` closure, re-decodes each tile and looks up its
+    its ``mapInArrow`` closure, re-decodes each tile and looks up its
     ≤4 halos by the coordinate the kernel parses from the path, so tile
     bytes NEVER shuffle — the binaryFile scan streams in place. PySpark
     broadcasts a pickled command larger than
@@ -515,7 +514,7 @@ def read_tile_gradients_seamless(
     paths = tile_paths(spark, tif_dir, set_name)
     files = _tile_files(spark, paths)
     halos = _collect_halos(files, {parse_tile_key(p) for p in paths})
-    return files.mapInPandas(
+    return files.mapInArrow(
         lambda it: _gradient_partition(it, chunk_rows, halos),
         schema=GRADIENT_SCHEMA,
     )
@@ -533,7 +532,7 @@ def read_tiles(
     Region pruning happens at the listing (:func:`tile_paths`: R2+R3
     applied while listing, like the reference, ``src/main.rs:316-321``),
     so the ``binaryFile`` scan reads only in-region tiles; it is fused
-    with the ``mapInPandas`` decode (:func:`decode_tiles`).
+    with the ``mapInArrow`` decode (:func:`decode_tiles`).
     """
     return decode_tiles(
         spark, tile_paths(spark, tif_dir, set_name), chunk_rows, on_corrupt

@@ -20,12 +20,14 @@ narrow slice of TIFF 6.0 + GeoTIFF the reference actually consumes:
   the standard north-up GeoTIFF encoding; full 2-D affine via
   ModelTransformationTag (34264) also supported
 
-``decode_geotiff`` is the hot-path function called inside ``mapInPandas``
-(one call per tile file); ``encode_geotiff`` exists so tests and the
-ingest benchmark can fabricate deterministic tiles without GDAL. When
-``rasterio`` is importable it is preferred at decode time (tiled TIFFs,
-exotic codecs); this fallback now covers real DEFLATE AW3D30 strips plus
-the tiled and LZW layouts GDAL commonly writes for other GeoTIFFs.
+``decode_geotiff`` is the hot-path decode, one call per tile file, made
+by the tile kernels' shared per-tile loop
+(:func:`~aw3d30_parquet_spark.sources.geotiff._decoded_tiles`);
+``encode_geotiff`` exists so tests and the ingest benchmark can
+fabricate deterministic tiles without GDAL. When ``rasterio`` is
+importable it is preferred at decode time (exotic codecs); without it
+this codec reads DEFLATE AW3D30 strips and the tiled and LZW layouts
+GDAL commonly writes for other GeoTIFFs.
 
 Nothing here touches Spark: bytes in, ``(numpy array, 6-float
 geotransform)`` out, so the codec is unit-testable without a session.
@@ -337,7 +339,7 @@ def decode_geotiff(data: bytes) -> tuple[np.ndarray, GeoTransform]:
     Pixels are returned as int32 regardless of storage width, mirroring the
     reference's ``read_band_as::<i32>()`` (``src/main.rs:180``).
     """
-    if _HAVE_RASTERIO:  # pragma: no cover - not installed in this container
+    if _HAVE_RASTERIO:  # pragma: no cover - only where rasterio is installed
         with rasterio.io.MemoryFile(data) as mem, mem.open() as ds:
             band = ds.read(1).astype(np.int32)
             t = ds.transform  # affine: (a, b, c, d, e, f) = (gt1, gt2, gt0, gt4, gt5, gt3)
@@ -565,8 +567,11 @@ def flatten_raster(
     computed as numpy outer products instead of 13M scalar iterations,
     and yielded in bounded chunks so a 3600² tile (~13M rows, ~260 MB)
     never materializes as one Arrow batch (SURVEY §7.3 item 2).
+
+    A band with values per cell, shaped ``(h, w, k)``, yields its values
+    as ``(n, k)`` rows of the same cells.
     """
-    height, width = band.shape
+    height, width = band.shape[:2]
     x = np.arange(width, dtype=np.float64)
     y = np.arange(height, dtype=np.float64)
     rows_per_chunk = max(1, chunk_rows // width)
@@ -579,5 +584,5 @@ def flatten_raster(
         yield (
             np.broadcast_to(lat, (y1 - y0, width)).reshape(n),
             np.broadcast_to(lon, (y1 - y0, width)).reshape(n),
-            band[y0:y1].reshape(n),
+            band[y0:y1].reshape((n, *band.shape[2:])),
         )

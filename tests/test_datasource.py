@@ -20,7 +20,8 @@ def demo_dir():
 
 
 def test_datasource_matches_mapinpandas_path(spark, demo_dir):
-    """Row-for-row parity between the custom source and read_tiles."""
+    """Row-for-row parity between the custom source and read_tiles (the
+    ``binaryFile`` + ``mapInArrow`` path)."""
     register(spark)
     via_source = (
         spark.read.format("aw3d30")

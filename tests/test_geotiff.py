@@ -7,6 +7,7 @@ row ``(lat, lon, elevation)`` is computable in closed form with numpy.
 
 from __future__ import annotations
 
+import ast
 import os
 
 import numpy as np
@@ -689,7 +690,7 @@ def test_gradient_scan_shuffle_free(spark, tif_dir):
 
     plan = formatted_plan(read_tile_gradients(spark, tif_dir, "netherlands"))
     assert "Exchange" not in plan
-    assert "mapinpandas" in plan.lower()
+    assert "MapInArrow" in plan
 
 
 # ------------------------------------------------- streaming tile ingest
@@ -729,19 +730,37 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2 * SIZE * SIZE
 
 
-@pytest.mark.parametrize("which", ["ingest", "rollup"])
-def test_stream_rejects_bad_on_corrupt(spark, tif_dir, tmp_path, which):
-    """Both streaming tile sinks reject an unknown ``on_corrupt`` before
-    any query starts."""
+@pytest.mark.parametrize(
+    "which, bad",
+    [
+        pytest.param("ingest", "on_corrupt", id="ingest"),
+        pytest.param("rollup", "on_corrupt", id="rollup"),
+        pytest.param("ingest", "glob_dir", id="ingest-glob_dir"),
+        pytest.param("rollup", "glob_dir", id="rollup-glob_dir"),
+    ],
+)
+def test_stream_rejects_bad_on_corrupt(spark, tif_dir, tmp_path, which, bad):
+    """Both streaming tile sinks reject, before any query starts, an
+    unknown ``on_corrupt`` and a tile dir whose name holds a Hadoop glob
+    metacharacter: the file stream source would read such a dir as a
+    glob, match nothing and finish without writing a row."""
     from aw3d30_parquet_spark.sources.sink import stream_ingest_tiles, stream_tile_rollup
 
     start = stream_ingest_tiles if which == "ingest" else stream_tile_rollup
-    with pytest.raises(ValueError, match="on_corrupt"):
+    if bad == "glob_dir":
+        src = str(tmp_path / "tiles[1]{a}")
+        os.makedirs(src)
+        _write_fixture_tiles(src, FIXTURE_COORDS)
+        kwargs, match = {}, r"tiles\[1\]\{a\}"
+    else:
+        src, kwargs, match = tif_dir, {"on_corrupt": "bogus"}, "on_corrupt"
+    with pytest.raises(ValueError, match=match):
         start(
-            spark, tif_dir, str(tmp_path / "out"), str(tmp_path / "ckpt"),
-            "netherlands", on_corrupt="bogus",
+            spark, src, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            "netherlands", **kwargs,
         )
     assert spark.streams.active == []
+    assert not os.path.exists(tmp_path / "out")
 
 
 # ------------------------------------------------------- sink compaction
@@ -1092,7 +1111,7 @@ def test_tile_dimensions_must_be_multiples_of_16():
 
 
 def test_tiled_lzw_ingest_end_to_end(spark, tmp_path):
-    """The full Spark ingest path (binaryFile scan → mapInPandas decode
+    """The full Spark ingest path (binaryFile scan → mapInArrow decode
     → flatten) reads a tiled+LZW+predictor-2 tile — the common GDAL
     real-world layout — without rasterio, producing exactly the
     closed-form ramp rows the strip-based fixtures produce."""
@@ -1501,3 +1520,57 @@ def test_lzw_missing_eoi_tolerated_when_output_complete():
     # short output → truncation even with the expectation
     with pytest.raises(ValueError, match="truncated LZW"):
         _lzw_decode(no_eoi, expected_bytes=4)
+
+
+def _callers(tree, name: str) -> set:
+    """Innermost enclosing function of every call to ``name`` in
+    ``tree`` ("<module>" for a top-level call)."""
+    found, stack = set(), [(tree, "<module>")]
+    while stack:
+        node, owner = stack.pop()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            owner = node.name
+        if isinstance(node, ast.Call) and name in (
+            getattr(node.func, "id", None), getattr(node.func, "attr", None)
+        ):
+            found.add(owner)
+        stack.extend((child, owner) for child in ast.iter_child_nodes(node))
+    return found
+
+
+def _uses_pandas(tree) -> bool:
+    """Whether ``tree`` calls ``mapInPandas`` or imports pandas."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Attribute) and node.attr == "mapInPandas":
+            return True
+        if isinstance(node, ast.Import) and any(
+            a.name.split(".")[0] == "pandas" for a in node.names
+        ):
+            return True
+        if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "pandas":
+            return True
+    return False
+
+
+def test_tile_kernels_share_one_arrow_boundary():
+    """Source pin: the engine decodes GeoTIFF bytes in one place, the
+    per-tile loop ``geotiff._decoded_tiles``, and no module under
+    ``sources/`` calls ``mapInPandas`` or imports pandas: every tile
+    kernel takes and yields Arrow batches."""
+    package = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "aw3d30_parquet_spark"
+    )
+    decoders, pandas_users = set(), set()
+    for dirpath, _, files in os.walk(package):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, package)
+            with open(path, encoding="utf-8") as f:
+                tree = ast.parse(f.read(), path)
+            decoders.update((rel, fn) for fn in _callers(tree, "decode_geotiff"))
+            if rel.startswith("sources" + os.sep) and _uses_pandas(tree):
+                pandas_users.add(rel)
+    assert decoders == {(os.path.join("sources", "geotiff.py"), "_decoded_tiles")}
+    assert pandas_users == set()

@@ -51,7 +51,7 @@ def test_uri_scan_prunes_like_local_path(spark, tmp_path):
     # same plan shape as the local path: shuffle-free scan → decode
     plan = formatted_plan(via_uri)
     assert "Exchange" not in plan
-    assert "mapinpandas" in plan.lower()
+    assert "MapInArrow" in plan
 
 
 def test_configure_s3a_keyed_resets_anonymous(spark):

@@ -169,13 +169,13 @@ def test_warp_broadcasts_index_map(spark):
 
 
 def test_geotiff_ingest_is_shuffle_free(spark, tmp_path):
-    """Tile decode pipeline: scan → filter → mapInPandas, no Exchange
+    """Tile decode pipeline: scan → filter → mapInArrow, no Exchange
     anywhere — at 31 000 tiles this must stay embarrassingly parallel."""
     tif_dir = ensure_demo_tiles(str(tmp_path / "tiles"))
     df = read_tiles(spark, tif_dir, "netherlands")
     plan = formatted_plan(df)
     assert "Exchange" not in plan
-    assert "MapInPandas" in plan or "mapInPandas" in plan.lower()
+    assert "MapInArrow" in plan
 
 
 def test_native_minhash_has_no_python(spark):
@@ -312,7 +312,7 @@ def test_q71_diff_joins_digests_not_rows(spark):
 
 def test_g08_tile_bytes_never_shuffle(spark):
     """g08 moves halo edges, never raster bytes: the gradient
-    MapInPandas reads the binaryFile scan with no Exchange and no join
+    MapInArrow reads the binaryFile scan with no Exchange and no join
     below it, the halo pass plus the gradient pass run exactly 2 jobs
     on the mosaic, and no job of the read has a shuffle stage."""
     from aw3d30_parquet_spark.sources import demo
@@ -330,7 +330,7 @@ def test_g08_tile_bytes_never_shuffle(spark):
         sc._jsc.clearJobGroup()
     tree = formatted_plan(df).split("\n\n")[0]
     assert tree.splitlines()[1:] == [
-        "MapInPandas (2)",
+        "MapInArrow (2)",
         "+- Scan binaryFile  (1)",
     ], tree
     sc._jsc.sc().listenerBus().waitUntilEmpty()
