@@ -28,9 +28,9 @@ Registration (per session)::
     df = (spark.read.format("aw3d30")
           .option("set", "netherlands").load("/path/to/tifs"))
 
-Paths are driver-listable directories (posix); object stores go
-through the binaryFile path (`objectstore.py`), which delegates
-listing to Hadoop.
+Paths are local directories, listed with ``os.scandir`` like the batch
+readers'; object stores go through the binaryFile path
+(`objectstore.py`), which lists with one Hadoop ``globStatus``.
 """
 
 from __future__ import annotations
@@ -59,9 +59,9 @@ from aw3d30_parquet_spark.sources.geotiff import (
     REGION_SETS,
     _decoded_tiles,
     _point_batches,
-    in_region,
     parse_tile_key,
     tile_key,
+    tile_paths,
 )
 
 
@@ -132,26 +132,17 @@ class AW3D30Reader(DataSourceReader):
                 yield f
 
     def partitions(self) -> Sequence[TilePartition]:
-        """One InputPartition per region-and-filter-surviving tile file
-        — a metadata-only listing; no tile byte is read here."""
+        """One InputPartition per tile of the batch work list
+        (:func:`~aw3d30_parquet_spark.sources.geotiff.tile_paths`: a
+        metadata-only listing and key/region rule) inside the pushed
+        bounds; no tile byte is read here."""
         (la0, la1) = self.bounds["tile_lat"]
         (lo0, lo1) = self.bounds["tile_lon"]
-        parts: list[TilePartition] = []
-        for entry in sorted(os.listdir(self.tif_dir)):
-            if not entry.endswith(".tif"):
-                continue
-            coord = parse_tile_key(entry)
-            if coord is None:
-                continue
-            la, lo = coord
-            if not (la0 <= la <= la1 and lo0 <= lo <= lo1):
-                continue
-            if not in_region(self.set_name, la, lo):
-                continue
-            parts.append(
-                TilePartition(os.path.join(self.tif_dir, entry), la, lo)
-            )
-        return parts
+        parts = [
+            TilePartition(p, *parse_tile_key(p))
+            for p in tile_paths(None, self.tif_dir, self.set_name)
+        ]
+        return [t for t in parts if la0 <= t.tile_lat <= la1 and lo0 <= t.tile_lon <= lo1]
 
     def read(self, partition: TilePartition) -> Iterator:
         """Decode one tile, yield bounded Arrow RecordBatches."""

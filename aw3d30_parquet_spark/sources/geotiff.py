@@ -11,18 +11,22 @@ one-degree tiles for the whole world — kilobytes, never data-plane), so
 it is built on the driver by :func:`tile_paths`: one listing of the tile
 directory, key parse, region predicate and skip set applied in plain
 Python, like the reference filtering keys while it lists the bucket
-(``src/main.rs:298,316-321``). The data plane is a ``binaryFile`` scan of
-exactly those paths (one Spark task per tile, no shuffle anywhere in the
-pipeline), fused with a ``mapInArrow`` kernel. The ingest's kernel
-decodes each tile and writes that tile's Parquet file in the task
-(:mod:`~aw3d30_parquet_spark.sources.sink`); :func:`read_tiles`' kernel
-yields bounded Arrow batches of points. Every tile kernel (ingest,
-decode, halo, gradient, the ``aw3d30`` DataSource) takes Arrow in and
-gives Arrow out: :func:`_tile_rows` reads the scan's batches,
-:func:`_decoded_tiles` is the one per-tile decode loop, and
-:func:`_point_batches` builds every output table from
-:func:`~aw3d30_parquet_spark.sources.tiff.flatten_raster` chunks.
-At 100 TB (~31 000 real tiles × 13M rows) the ingest is a single
+(``src/main.rs:298,316-321``). Every metadata listing (this work list,
+the sink's done set, the ``aw3d30`` DataSource's partitions) is
+:func:`list_matching`: ``os.scandir`` for a local dir, which never
+touches the JVM, or one Hadoop ``globStatus`` call for a remote one, so
+its py4j cost does not grow with the tile count. The data plane is a
+``binaryFile`` scan of exactly those paths (one Spark task per tile, no
+shuffle anywhere in the pipeline), fused with a ``mapInArrow`` kernel.
+The ingest's kernel decodes each tile and writes that tile's Parquet
+file in the task (:mod:`~aw3d30_parquet_spark.sources.sink`);
+:func:`read_tiles`' kernel yields bounded Arrow batches of points.
+Every tile kernel (ingest, decode, halo, gradient, the ``aw3d30``
+DataSource) takes Arrow in and gives Arrow out: :func:`_tile_rows`
+reads the scan's batches, :func:`_decoded_tiles` is the one per-tile
+decode loop, and :func:`_point_batches` builds every output table from
+:func:`~aw3d30_parquet_spark.sources.tiff.flatten_raster` chunks. At
+100 TB (~31 000 real tiles × 13M rows) the ingest is a single
 embarrassingly-parallel stage: scan → decode → write, with partition
 pruning on ``tile_lat``/``tile_lon`` replacing the reference's
 filename-encoded partitioning.
@@ -30,10 +34,11 @@ filename-encoded partitioning.
 
 from __future__ import annotations
 
+import glob
 import os
 import re
 from typing import Iterable, Iterator
-from urllib.parse import unquote
+from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -261,62 +266,105 @@ def _glob_escape(path: str) -> str:
     return re.sub(r"([\[\]{}*?\\])", r"\\\1", path)
 
 
-def _binary_files(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """The one ``binaryFile`` load every batch tile scan and listing goes
-    through; ``[]{}*?`` in a path match themselves.
+def _local_dir(root: str) -> str | None:
+    """``root`` as an absolute local path, or None for a remote URI
+    (``s3a://`` and any other non-``file`` scheme)."""
+    uri = urlparse(root)
+    if uri.scheme == "file":
+        return uri.path
+    return None if "://" in root else os.path.abspath(root)
+
+
+def _scandir_glob(root: str, pattern: str) -> list[str]:
+    """:func:`list_matching` for a local ``root``: ``glob``'s
+    ``os.scandir`` walk, where ``*`` matches dot names, as Hadoop's does."""
+    return sorted(glob.glob(pattern, root_dir=root, include_hidden=True))
+
+
+def _hadoop_glob(spark: SparkSession, root: str, pattern: str) -> list[str]:
+    """:func:`list_matching` for any Hadoop URI: one ``globStatus`` call,
+    whose matches cross py4j as one newline-joined string."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(f"{_glob_escape(root.rstrip('/'))}/{pattern}")
+    statuses = hpath.getFileSystem(spark._jsc.hadoopConfiguration()).globStatus(hpath)
+    n = 0 if statuses is None else len(statuses)
+    if n == 0:
+        return []
+    # py4j finds no Arrays.asList for a Path[], but finds it for an Object[]
+    paths = spark.sparkContext._gateway.new_array(jvm.java.lang.Object, n)
+    jvm.java.lang.System.arraycopy(
+        jvm.org.apache.hadoop.fs.FileUtil.stat2Paths(statuses), 0, paths, 0, n
+    )
+    joined = jvm.org.apache.hadoop.util.StringUtils.join(
+        "\n", jvm.java.util.Arrays.asList(paths)
+    )
+    depth = pattern.count("/") + 1
+    return sorted("/".join(p.split("/")[-depth:]) for p in joined.split("\n"))
+
+
+def list_matching(spark: SparkSession | None, root: str, pattern: str) -> list[str]:
+    """Sorted paths under ``root``, relative to it, that match
+    ``pattern`` (``/``-separated name globs; ``[]{}*?`` in ``root``
+    match themselves). A local ``root`` (a plain path or ``file://``
+    URI) is read with ``os.scandir``, never the JVM, so ``spark`` may be
+    None; any other URI (``s3a://``) with one Hadoop ``globStatus``: a
+    fixed number of py4j round trips, however many paths match."""
+    local = _local_dir(root)
+    if local is not None:
+        return _scandir_glob(local, pattern)
+    return _hadoop_glob(spark, root, pattern)
+
+
+def tile_paths(
+    spark: SparkSession | None,
+    tif_dir: str,
+    set_name: str = "world",
+    exclude: Iterable[tuple[int, int]] = (),
+) -> list[str]:
+    """The batch work list: sorted paths of the tiles at the top level of
+    ``tif_dir`` whose key parses, lies in ``set_name`` and is not in
+    ``exclude`` — built from metadata alone.
+
+    ``tif_dir`` is listed once by :func:`list_matching`, with no Spark
+    job and no partition discovery, so subdirectories (an output tree
+    inside ``tif_dir``, say) are not read. The key parse, region
+    predicate and skip set run on the driver, so no byte of an
+    out-of-region or done tile is fetched — the reference's
+    filter-while-listing (``src/main.rs:298,316-321``) and
+    skip-if-exists (``:144-146,171``).
+    """
+    skip = set(exclude)
+    paths = []
+    for name in list_matching(spark, tif_dir, TILE_GLOB):
+        coord = parse_tile_key(name)
+        if coord is not None and in_region(set_name, *coord) and coord not in skip:
+            paths.append(os.path.join(tif_dir, name))
+    return paths
+
+
+def _tile_files(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """``binaryFile`` scan of explicit tile paths → ``(path, content)``;
+    ``[]{}*?`` in a path match themselves.
 
     A lone path loads literally (:data:`GLOB_PATHS_KEY`): Spark also
     looks it up as a streaming sink's metadata directory, literally, and
     an escaped glob there logs a FileNotFoundException warning. Several
     paths are glob-escaped instead, because with globbing off Spark
     (``DataSource.checkAndGlobPathIfNecessary``) returns every path once
-    per glob-looking path, which would scan each tile N times.
-    """
-    reader = spark.read.format("binaryFile").option("pathGlobFilter", TILE_GLOB)
-    if len(paths) == 1:
-        return reader.option(GLOB_PATHS_KEY, "false").load(paths[0])
-    return reader.load([_glob_escape(p) for p in paths])
-
-
-def tile_paths(
-    spark: SparkSession,
-    tif_dir: str,
-    set_name: str = "world",
-    exclude: Iterable[tuple[int, int]] = (),
-) -> list[str]:
-    """The batch work list: paths under ``tif_dir`` whose key parses, lies
-    in ``set_name`` and is not in ``exclude`` — built from metadata alone.
-
-    ``tif_dir`` is listed once through the same file index the scan uses
-    (``DataFrame.inputFiles()``, which runs no Spark job); the key parse,
-    region predicate and skip set then run on the driver, so no byte of
-    an out-of-region or already-ingested tile is ever fetched — the
-    reference's filter-while-listing (``src/main.rs:298,316-321``) and
-    skip-if-exists (``:144-146,171``). ``inputFiles()`` returns
-    percent-encoded URIs; they are decoded here so that ``load()``
-    accepts them back. Sorted, so the scan's task order is stable.
-    """
-    skip = set(exclude)
-    paths = []
-    for uri in _binary_files(spark, [tif_dir]).inputFiles():
-        path = unquote(uri)
-        coord = parse_tile_key(path)
-        if coord is not None and in_region(set_name, *coord) and coord not in skip:
-            paths.append(path)
-    return sorted(paths)
-
-
-def _tile_files(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """``binaryFile`` scan of explicit tile paths → ``(path, content)``.
-
-    Loading more than ``spark.sql.sources.parallelPartitionDiscovery.
-    threshold`` (32) paths makes Spark resolve them with a parallel
-    listing job before the scan; below it the resolution is driver-side.
+    per glob-looking path, which would scan each tile N times. Loading
+    more than ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (32) paths makes Spark resolve them with a parallel listing job
+    before the scan; below it the resolution is driver-side.
     """
     from aw3d30_parquet_spark.session import ship_package
 
     ship_package(spark)
-    return _binary_files(spark, paths).select("path", "content")
+    reader = spark.read.format("binaryFile").option("pathGlobFilter", TILE_GLOB)
+    if len(paths) == 1:
+        files = reader.option(GLOB_PATHS_KEY, "false").load(paths[0])
+    else:
+        files = reader.load([_glob_escape(p) for p in paths])
+    return files.select("path", "content")
 
 
 def check_on_corrupt(on_corrupt: str) -> None:

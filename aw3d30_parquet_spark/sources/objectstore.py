@@ -6,10 +6,11 @@ The Spark-first equivalent needs no bespoke client at all: the
 ``binaryFile`` source behind :func:`aw3d30_parquet_spark.sources.geotiff.read_tiles`
 speaks every Hadoop filesystem, so pointing it at
 ``s3a://raster-bucket/AW3D30/AW3D30_global/`` works unchanged. Batch
-readers LIST the prefix once on the driver and prune that listing by
-pathGlobFilter, key regex and region (and, for ingest, by the tiles
-already written); the scan tasks then GET only the remaining objects,
-parallel across executors. The streaming ingest has no up-front
+readers list the prefix once on the driver (one Hadoop ``globStatus``
+of the tile-name glob, ``geotiff.list_matching``) and prune that
+listing by key regex and region (and, for ingest, by the tiles already
+written); the scan tasks then GET only the remaining objects, parallel
+across executors. The streaming ingest has no up-front
 listing: it filters by region in the plan, per micro-batch, so it still
 fetches out-of-region objects that land under the prefix.
 
@@ -26,7 +27,8 @@ Requirements (cluster-side, not importable from Python): the
 version, e.g. ``spark-submit --packages
 org.apache.hadoop:hadoop-aws:3.4.1``. This container ships no such jars
 and no network, so tests exercise the conf plumbing and the plan shape
-over ``file://`` URIs — the scan code path is byte-for-byte the same.
+over ``file://`` URIs — the scan code path is byte-for-byte the same;
+the listing of a ``file://`` URI takes the local branch.
 """
 
 from __future__ import annotations

@@ -15,7 +15,9 @@ partitions prune that listing on the driver
 pending tiles are ever fetched and a resume over a complete output runs
 no Spark job. The pruning runs on metadata (≤ 64 800 tile keys for the
 whole world — kilobytes), like the reference's skip check on local
-paths.
+paths. The tile directory and the done set (:func:`existing_tiles`)
+are one ``geotiff.list_matching`` call each: no JVM call for a local
+dir, one Hadoop ``globStatus`` for a remote one.
 
 The write is tile-native, like the reference's converter
 (``src/main.rs:172-220``): a ``binaryFile`` scan feeds a ``mapInArrow``
@@ -39,8 +41,8 @@ from __future__ import annotations
 import contextlib
 import os
 import re
+from collections import Counter
 from typing import Iterable, Iterator, Sequence
-from urllib.parse import urlparse
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -52,18 +54,21 @@ from aw3d30_parquet_spark.sources.geotiff import (
     _decode_partition,
     _decoded_tiles,
     _glob_escape,
+    _local_dir,
     _region_pruned_files,
     _tile_files,
     _tile_rows,
     check_on_corrupt,
     decode_tiles,
+    list_matching,
     parse_tile_key,
     tile_key,
     tile_paths,
 )
 from aw3d30_parquet_spark.sources.tiff import flatten_raster
 
-_PART_RE = re.compile(r"^tile_lat=(-?\d+)$")
+#: A Parquet data file of the tile tree, relative to its root.
+_TILE_FILE_RE = re.compile(r"tile_lat=(-?\d+)/tile_lon=(-?\d+)/[^/]*\.parquet")
 
 #: The tile encoding rule every tile writer follows: column → Parquet
 #: encoding for the columns written without a dictionary. ``elevation``
@@ -100,50 +105,16 @@ def _session_confs(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for any Hadoop-scheme URI — the listing layer
-    that works identically on local paths, file://, and s3a:// (the
-    ``os.path`` calls this replaces silently see object-store URIs as
-    absent local paths, which breaks the idempotency contract there)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
-def _fs_listdir(fs, hpath) -> list[str]:
-    return [st.getPath().getName() for st in fs.listStatus(hpath)]
-
-
 def _parquet_files_per_tile(
     spark: SparkSession, out_dir: str
 ) -> dict[tuple[int, int], int]:
     """Parquet data-file count of every ``tile_lat=N/tile_lon=M``
-    partition under ``out_dir`` (0 for an empty partition directory).
-
-    Reads only directory listings — the manifest is the partition tree
-    itself, no data files are opened. The walk goes through the Hadoop
-    FileSystem API, so local paths, ``file://`` and ``s3a://`` list the
-    same way: one LIST for the root and two per lat on an object store.
-    """
-    out: dict[tuple[int, int], int] = {}
-    fs, root = _hadoop_fs(spark, out_dir)
-    if not fs.exists(root):
-        return out
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path
-    for lat_dir in _fs_listdir(fs, root):
-        m = _PART_RE.match(lat_dir)
-        if m is None:
-            continue
-        lat = int(m.group(1))
-        lat_path = jvm_path(root, lat_dir)
-        for lon_dir in _fs_listdir(fs, lat_path):
-            if lon_dir.startswith("tile_lon="):
-                files = _fs_listdir(fs, jvm_path(lat_path, lon_dir))
-                out[(lat, int(lon_dir.split("=", 1)[1]))] = sum(
-                    f.endswith(".parquet") for f in files
-                )
-    return out
+    partition under ``out_dir`` that holds one, from one listing
+    (``geotiff.list_matching``): the manifest is the partition tree
+    itself, and no data file is opened."""
+    files = list_matching(spark, out_dir, "tile_lat=*/tile_lon=*/*.parquet")
+    matches = (_TILE_FILE_RE.fullmatch(rel) for rel in files)
+    return dict(Counter((int(m[1]), int(m[2])) for m in matches if m))
 
 
 def existing_tiles(out_dir: str, spark: SparkSession) -> set[tuple[int, int]]:
@@ -173,17 +144,6 @@ def write_tiles(df: DataFrame, out_dir: str, mode: str = "append") -> None:
 
 #: One manifest row per tile file committed by :func:`_write_tile_partition`.
 MANIFEST_SCHEMA = "tile_lat int, tile_lon int, rows long"
-
-
-def _local_dir(out_dir: str) -> str | None:
-    """``out_dir`` as an absolute local path, or None for a remote URI
-    (``s3a://`` and any other non-``file`` scheme)."""
-    uri = urlparse(out_dir)
-    if uri.scheme == "file":
-        return uri.path
-    if "://" in out_dir:
-        return None
-    return os.path.abspath(out_dir)
 
 
 def _write_tile_partition(
@@ -607,9 +567,10 @@ def stream_tile_rollup(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        fs, root = _hadoop_fs(s, rollup_dir)
-        jvm_path = s._jvm.org.apache.hadoop.fs.Path
-        marker = jvm_path(rollup_dir + f"/_applied/{ckpt_tag}-batch-{batch_id}")
+        marker = s._jvm.org.apache.hadoop.fs.Path(
+            rollup_dir + f"/_applied/{ckpt_tag}-batch-{batch_id}"
+        )
+        fs = marker.getFileSystem(s._jsc.hadoopConfiguration())
         if fs.exists(marker):
             return  # replayed micro-batch: already merged
         delta = (
@@ -621,10 +582,7 @@ def stream_tile_rollup(
                 F.max("elevation").alias("max_elev"),
             )
         )
-        has_data = fs.exists(root) and any(
-            not n.startswith(("_", ".")) for n in _fs_listdir(fs, root)
-        )
-        if has_data:
+        if list_matching(s, rollup_dir, "tile_lat=*"):
             existing = s.read.parquet(rollup_dir)
             # the dynamic overwrite below swaps WHOLE tile_lat
             # partitions, so prior rows must be carried for every lat

@@ -220,6 +220,77 @@ def test_glob_paths_key_is_sparks(spark):
     )
 
 
+def test_g2_output_dir_inside_tile_dir(spark, tif_dir, tmp_path):
+    """An output tree inside the tile dir is not part of the work list:
+    the listing reads only the top level of the tile dir, so the resume
+    finds nothing to do and ``read_tiles`` reads only the tiles."""
+    import shutil
+
+    tif = str(tmp_path / "tif")
+    shutil.copytree(tif_dir, tif)
+    out = f"{tif}/points"
+    assert sorted(ingest_tiles(spark, tif, out, "netherlands")) == [(51, 4), (52, 5)]
+    assert ingest_tiles(spark, tif, out, "netherlands") == []
+    assert read_tiles(spark, tif, "world").count() == len(FIXTURE_COORDS) * SIZE * SIZE
+
+
+def test_g2_output_dir_with_glob_chars(spark, tif_dir, tmp_path):
+    """An output dir whose name holds Hadoop glob characters ingests,
+    resumes and lists its done set like a plain one, through either
+    listing branch."""
+    from aw3d30_parquet_spark.sources.geotiff import _hadoop_glob, _scandir_glob
+
+    out = str(tmp_path / "points[1]{a,b}*?")
+    metrics: dict = {}
+    got = ingest_tiles(spark, tif_dir, out, "netherlands", metrics=metrics)
+    assert sorted(got) == [(51, 4), (52, 5)]
+    assert metrics["rows_written"] == 2 * SIZE * SIZE
+    assert existing_tiles(out, spark) == {(51, 4), (52, 5)}
+    assert ingest_tiles(spark, tif_dir, out, "netherlands") == []
+    pattern = "tile_lat=*/tile_lon=*/*.parquet"
+    assert _hadoop_glob(spark, out, pattern) == _scandir_glob(out, pattern)
+    assert len(_scandir_glob(out, pattern)) == 2
+
+
+@pytest.mark.parametrize("name", ["tree", "tree[1]{a,b}*? a%41b"])
+def test_listing_branches_agree(spark, tif_dir, tmp_path, monkeypatch, name):
+    """The ``os.scandir`` branch and the Hadoop ``globStatus`` branch of
+    ``list_matching``, called on the same local path, return the same
+    entries, and so the same work list and the same done set, with every
+    decoy left out."""
+    import shutil
+
+    from aw3d30_parquet_spark.sources import geotiff
+    from aw3d30_parquet_spark.sources.geotiff import TILE_GLOB, _hadoop_glob, _scandir_glob
+
+    root = tmp_path / name
+    shutil.copytree(tif_dir, root)  # with README.txt and a malformed key
+    for sub in ("sub", ".hidden", "k=v"):  # tiles below the top level
+        (root / sub).mkdir()
+        _write_fixture_tiles(str(root / sub), [(50, 3)])
+    out = root / "points"
+    ingest_tiles(spark, str(root), str(out), "netherlands")
+    (out / "_SUCCESS").write_text("")
+    (out / "README.txt").write_text("not a tile")
+    (out / "tile_lat=53" / "tile_lon=6").mkdir(parents=True)  # empty
+    (out / "tile_lat=51" / "tile_lon=4" / ".part-x.parquet.0a.tmp").write_bytes(b"torn")
+    (out / "tile_lat=52" / "tile_lon=5" / "_SUCCESS").write_text("")
+
+    patterns = (TILE_GLOB, "tile_lat=*/tile_lon=*/*.parquet", "tile_lat=*")
+    for root_dir, pattern in zip((root, out, out), patterns):
+        local = _scandir_glob(str(root_dir), pattern)
+        assert local == _hadoop_glob(spark, str(root_dir), pattern), pattern
+        assert local, pattern
+    work = tile_paths(spark, str(root), "world")
+    done = existing_tiles(str(out), spark)
+    monkeypatch.setattr(geotiff, "_local_dir", lambda _root: None)
+    assert tile_paths(spark, str(root), "world") == work
+    assert existing_tiles(str(out), spark) == done == {(51, 4), (52, 5)}
+    assert work == sorted(
+        os.path.join(str(root), f"{tile_key(*c)}.tif") for c in FIXTURE_COORDS
+    )
+
+
 # ---------------------------------------------------------------- G3: region filter
 
 

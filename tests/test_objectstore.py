@@ -35,9 +35,10 @@ def test_configure_s3a_sets_hadoop_confs(spark):
 
 
 def test_uri_scan_prunes_like_local_path(spark, tmp_path):
-    """read_tiles over a file:// URI (the same Hadoop-FS URI code path
-    an s3a:// prefix takes) must produce the identical pruned listing
-    and rows as the plain local path."""
+    """read_tiles over a file:// URI must produce the identical pruned
+    listing and rows as the plain local path. A file:// URI is listed
+    by the local branch, like the plain path; its scan is the same
+    binaryFile URI scan an s3a:// prefix takes."""
     from tests.test_geotiff import FIXTURE_COORDS, _write_fixture_tiles
 
     d = tmp_path / "tiles"
@@ -72,9 +73,10 @@ def test_configure_s3a_keyed_resets_anonymous(spark):
 
 
 def test_existing_tiles_over_uri(spark, tmp_path):
-    """The idempotency manifest walk works over a filesystem URI via
-    the Hadoop FileSystem API (the path an s3a:// output takes) and
-    agrees with the same walk over the plain local path."""
+    """The done set of a file:// URI output agrees with the plain
+    local path's. Both take the local listing branch; the Hadoop
+    branch an s3a:// output takes is checked against it on one tree by
+    tests/test_geotiff.py::test_listing_branches_agree."""
     from aw3d30_parquet_spark.sources.demo import ensure_demo_tiles
     from aw3d30_parquet_spark.sources.geotiff import read_tiles
     from aw3d30_parquet_spark.sources.sink import existing_tiles, write_tiles
