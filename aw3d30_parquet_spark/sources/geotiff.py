@@ -38,7 +38,6 @@ import glob
 import os
 import re
 from typing import Iterable, Iterator
-from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow as pa
@@ -268,10 +267,12 @@ def _glob_escape(path: str) -> str:
 
 def _local_dir(root: str) -> str | None:
     """``root`` as an absolute local path, or None for a remote URI
-    (``s3a://`` and any other non-``file`` scheme)."""
-    uri = urlparse(root)
-    if uri.scheme == "file":
-        return uri.path
+    (``s3a://`` and any other non-``file`` scheme). A ``file:`` URI's
+    path is read as written, as Hadoop's ``Path`` reads it: ``%``, ``?``
+    and ``#`` are plain characters there."""
+    if root.startswith("file:"):
+        path = root[len("file:"):]
+        return path[path.index("/", 2):] if path.startswith("//") else path
     return None if "://" in root else os.path.abspath(root)
 
 

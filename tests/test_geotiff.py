@@ -236,10 +236,8 @@ def test_g2_output_dir_inside_tile_dir(spark, tif_dir, tmp_path):
 
 def test_g2_output_dir_with_glob_chars(spark, tif_dir, tmp_path):
     """An output dir whose name holds Hadoop glob characters ingests,
-    resumes and lists its done set like a plain one, through either
-    listing branch."""
-    from aw3d30_parquet_spark.sources.geotiff import _hadoop_glob, _scandir_glob
-
+    resumes and lists its done set like a plain one (the Hadoop listing
+    branch on such a dir: ``test_listing_branches_agree``)."""
     out = str(tmp_path / "points[1]{a,b}*?")
     metrics: dict = {}
     got = ingest_tiles(spark, tif_dir, out, "netherlands", metrics=metrics)
@@ -247,9 +245,6 @@ def test_g2_output_dir_with_glob_chars(spark, tif_dir, tmp_path):
     assert metrics["rows_written"] == 2 * SIZE * SIZE
     assert existing_tiles(out, spark) == {(51, 4), (52, 5)}
     assert ingest_tiles(spark, tif_dir, out, "netherlands") == []
-    pattern = "tile_lat=*/tile_lon=*/*.parquet"
-    assert _hadoop_glob(spark, out, pattern) == _scandir_glob(out, pattern)
-    assert len(_scandir_glob(out, pattern)) == 2
 
 
 @pytest.mark.parametrize("name", ["tree", "tree[1]{a,b}*? a%41b"])
@@ -281,6 +276,9 @@ def test_listing_branches_agree(spark, tif_dir, tmp_path, monkeypatch, name):
         local = _scandir_glob(str(root_dir), pattern)
         assert local == _hadoop_glob(spark, str(root_dir), pattern), pattern
         assert local, pattern
+    # which branch a root takes: only a remote scheme goes to Hadoop
+    assert geotiff._local_dir(f"file://{root}") == str(root)
+    assert geotiff._local_dir("s3a://bucket/AW3D30/") is None
     work = tile_paths(spark, str(root), "world")
     done = existing_tiles(str(out), spark)
     monkeypatch.setattr(geotiff, "_local_dir", lambda _root: None)
